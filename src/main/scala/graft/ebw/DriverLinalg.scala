@@ -141,11 +141,15 @@ private[ebw] object DriverLinalg {
 
   /**
    * Jacobi-preconditioned conjugate gradient for the large-k regime:
-   * solve (G + diag + ridge*I) x = rhs where G is the SPARSE upper-tri Gram
-   * from EbwAggregator.runSparse (keys = i*k+j, i <= j). Plays the role of
-   * pypardiso.spsolve in the reference (ebw_routines.py:242-245) without
-   * needing a sparse direct factorization on the driver. `free` masks
-   * pinned coordinates (elastic box): masked rows/cols behave as identity.
+   * solve (sign*G + diag + ridge*I) x = rhs where G is the SPARSE upper-tri
+   * Gram from EbwAggregator.runSparse (keys = i*k+j, i <= j; any order,
+   * repeats add up). Plays the role of pypardiso.spsolve in the reference
+   * (ebw_routines.py:242-245) without needing a sparse direct
+   * factorization on the driver. Keys are decoded into row/column indices
+   * once per solve, not per matvec. `sign` scales the Gram as in
+   * [[cgSolveRdd]] (-1 for the penalty system whose aggregated dS/dz = -G).
+   * `free` masks pinned coordinates (elastic box): masked rows/cols behave
+   * as identity.
    */
   def cgSolve(
       k: Int,
@@ -154,17 +158,23 @@ private[ebw] object DriverLinalg {
       diag: Array[Double],
       rhs: Array[Double],
       ridge: Double,
-      free: Array[Boolean]): Array[Double] = {
+      free: Array[Boolean],
+      sign: Double = 1.0): Array[Double] = {
     val nnz = keys.length
     @inline def isFree(i: Int): Boolean = free == null || free(i)
+    val rows = new Array[Int](nnz)
+    val cols = new Array[Int](nnz)
     val precond = new Array[Double](k)
     var i = 0
     while (i < k) { precond(i) = diag(i) + ridge; i += 1 }
     var p0 = 0
     while (p0 < nnz) {
       val key = keys(p0)
-      val ii = (key / k).toInt
-      if ((key % k).toInt == ii) precond(ii) += vals(p0)
+      val a = (key / k).toInt
+      val b = (key % k).toInt
+      rows(p0) = a
+      cols(p0) = b
+      if (a == b) precond(a) += sign * vals(p0)
       p0 += 1
     }
     i = 0
@@ -174,11 +184,10 @@ private[ebw] object DriverLinalg {
       val out = new Array[Double](k)
       var p = 0
       while (p < nnz) {
-        val key = keys(p)
-        val a = (key / k).toInt
-        val b = (key % k).toInt
+        val a = rows(p)
+        val b = cols(p)
         if (isFree(a) && isFree(b)) {
-          val v = vals(p)
+          val v = sign * vals(p)
           out(a) += v * x(b)
           if (a != b) out(b) += v * x(a)
         }

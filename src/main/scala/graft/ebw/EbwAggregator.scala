@@ -113,99 +113,89 @@ private[ebw] object EbwAggregator {
   }
 
   /**
-   * Large-k variant: identical statistics, but the Gram is accumulated as
-   * a sparse LongMap keyed by i*k+j (i <= j). For group-dummy / interaction
+   * Large-k variant: identical statistics, but the Gram is accumulated
+   * sparsely, keyed by i*k+j (i <= j). For group-dummy / interaction
    * designs (the reference's "hundreds of thousands of constraints" regime,
    * README.md "models with ... hundreds of thousands of constraints") the
    * Gram has O(k) to O(k * nnz_row) entries, not k^2 — a packed dense
-   * buffer would be 100 MB+/task at k = 5000 while the sparse map stays
-   * proportional to the realized cross pattern. Paired with the driver-side
-   * CG solve in DriverLinalg.
+   * buffer would be 100 MB+/task at k = 5000 while the sparse Gram stays
+   * proportional to the realized cross pattern. Each partition fills one
+   * primitive [[GramTable]] and finishes it as a key-sorted
+   * [[SortedGram]]; a [[GramSum]] adds the partials up with linear sorted
+   * merges, executor-side up the `depth`-level tree and then on the
+   * driver. `gramKeys` come back
+   * strictly ascending. Paired with the driver-side CG solve in
+   * DriverLinalg.
    */
   def runSparse(rows: RDD[EbwRow], k: Int, theta: Array[Double], link: Link,
       depth: Int = 2): Pass = {
     val th = theta
     val lk = link
-    final case class Acc(
-        s: Array[Double],
-        gram: scala.collection.mutable.LongMap[Double],
-        var fval: Double, var wrsum: Double, var count: Long)
-    val out = rows.treeAggregate(
-      Acc(new Array[Double](k), new scala.collection.mutable.LongMap[Double](), 0.0, 0.0, 0L))(
-      seqOp = (acc, row) => {
+    val out = rows.mapPartitions { it =>
+      val s = new Array[Double](k)
+      val gram = new GramTable()
+      var fval = 0.0
+      var wrsum = 0.0
+      var count = 0L
+      while (it.hasNext) {
+        val row = it.next()
         val vals = row.vals
         val idx = row.idx
-        var t = 0.0
-        if (idx == null) {
-          var j = 0
-          while (j < k) { t += vals(j) * th(j); j += 1 }
-        } else {
-          var p = 0
-          while (p < idx.length) { t += vals(p) * th(idx(p)); p += 1 }
-        }
-        val (r, rp) = lk.rAndSlope(t)
+        val (r, rp) = lk.rAndSlope(margin(row, th, k))
         val w0 = row.w0
         val wr = w0 * r
-        acc.fval += (if (r <= 0.0) w0 else w0 * (r * math.log(r) - r + 1.0))
-        acc.wrsum += wr
-        acc.count += 1
-        val wrp = w0 * rp
+        fval += (if (r <= 0.0) w0 else w0 * (r * math.log(r) - r + 1.0))
+        wrsum += wr
+        count += 1
         if (idx == null) {
           var i = 0
           while (i < k) {
             val vi = vals(i)
-            if (vi != 0.0) {
-              acc.s(i) += wr * vi
-              if (wrp != 0.0) {
-                val wv = wrp * vi
-                var j = i
-                while (j < k) {
-                  val vj = vals(j)
-                  if (vj != 0.0) {
-                    val key = i.toLong * k + j
-                    acc.gram.update(key, acc.gram.getOrElse(key, 0.0) + wv * vj)
-                  }
-                  j += 1
-                }
-              }
-            }
+            if (vi != 0.0) s(i) += wr * vi
             i += 1
           }
         } else {
-          val nnz = idx.length
           var p = 0
-          while (p < nnz) {
-            val i = idx(p)
-            val vi = vals(p)
-            acc.s(i) += wr * vi
-            if (wrp != 0.0) {
-              val wv = wrp * vi
-              var q = p
-              while (q < nnz) {
-                val key = i.toLong * k + idx(q)
-                acc.gram.update(key, acc.gram.getOrElse(key, 0.0) + wv * vals(q))
-                q += 1
-              }
-            }
-            p += 1
-          }
+          while (p < idx.length) { s(idx(p)) += wr * vals(p); p += 1 }
         }
-        acc
-      },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < k) { a.s(i) += b.s(i); i += 1 }
-        b.gram.foreachEntry((key, v) => a.gram.update(key, a.gram.getOrElse(key, 0.0) + v))
-        a.fval += b.fval; a.wrsum += b.wrsum; a.count += b.count
-        a
-      },
-      depth = depth)
-    val n = out.gram.size
-    val keys = new Array[Long](n)
-    val vals = new Array[Double](n)
-    var i = 0
-    out.gram.foreachEntry { (key, v) => keys(i) = key; vals(i) = v; i += 1 }
-    Pass(out.s, null, out.fval, out.wrsum, out.count, keys, vals)
+        gram.addRow(0L, k, idx, vals, w0 * rp)
+      }
+      Iterator(new SparsePartial(s, new GramSum().add(gram.sorted()), fval, wrsum, count))
+    }.treeAggregate(new SparsePartial(new Array[Double](k), new GramSum(), 0.0, 0.0, 0L))(
+      _ merge _, _ merge _, depth)
+    val gram = out.gram.result
+    Pass(out.s, null, out.fval, out.wrsum, out.count, gram.keys, gram.vals)
+  }
+
+  /** One partition's (or merged subtree's) large-k statistics; `merge`
+   * sums `o` into this one. */
+  private final class SparsePartial(
+      val s: Array[Double], val gram: GramSum,
+      var fval: Double, var wrsum: Double, var count: Long) extends Serializable {
+    def merge(o: SparsePartial): SparsePartial = {
+      var i = 0
+      while (i < s.length) { s(i) += o.s(i); i += 1 }
+      gram.addAll(o.gram)
+      fval += o.fval
+      wrsum += o.wrsum
+      count += o.count
+      this
+    }
+  }
+
+  /** t = x . theta for one row (dense or sparse encoding). */
+  @inline private def margin(row: EbwRow, theta: Array[Double], k: Int): Double = {
+    val vals = row.vals
+    val idx = row.idx
+    var t = 0.0
+    if (idx == null) {
+      var j = 0
+      while (j < k) { t += vals(j) * theta(j); j += 1 }
+    } else {
+      var p = 0
+      while (p < idx.length) { t += vals(p) * theta(idx(p)); p += 1 }
+    }
+    t
   }
 
   /**
@@ -223,15 +213,7 @@ private[ebw] object EbwAggregator {
       seqOp = (buf, row) => {
         val vals = row.vals
         val idx = row.idx
-        var t = 0.0
-        if (idx == null) {
-          var j = 0
-          while (j < k) { t += vals(j) * th(j); j += 1 }
-        } else {
-          var p = 0
-          while (p < idx.length) { t += vals(p) * th(idx(p)); p += 1 }
-        }
-        val (r, _) = lk.rAndSlope(t)
+        val (r, _) = lk.rAndSlope(margin(row, th, k))
         val w0 = row.w0
         val wr = w0 * r
         buf(k) += (if (r <= 0.0) w0 else w0 * (r * math.log(r) - r + 1.0))
@@ -262,86 +244,41 @@ private[ebw] object EbwAggregator {
 
   /**
    * The Gram as a DISTRIBUTED dataset — the no-driver-ceiling mode for
-   * the large-N × large-k regime (EbwSizing decides): per-partition
-   * LongMap partials (the runSparse kernel) stream out as (key, value)
-   * pairs and a reduceByKey merges them ACROSS EXECUTORS; the merged Gram
-   * never lands on the driver. The Newton direction is then solved by CG
-   * with distributed matvecs (DriverLinalg.cgSolveRdd) — per-iteration
-   * driver traffic is O(k), not O(gram nnz), so the regime that OOMed the
-   * default 8 GB driver (N=1e7: ~50 M realized Gram entries) runs within
-   * default budgets. Caller persists/unpersists the returned RDD.
+   * the large-N × large-k regime (EbwSizing decides): each partition fills
+   * one [[GramTable]] (the runSparse build) and streams its entries out
+   * as (key, value) pairs; a reduceByKey merges them ACROSS EXECUTORS and
+   * the merged Gram never lands on the driver. The Newton direction is
+   * then solved by CG with distributed matvecs (DriverLinalg.cgSolveRdd) —
+   * per-iteration driver traffic is O(k), not O(gram nnz), so the regime
+   * that OOMed the default 8 GB driver (N=1e7: ~50 M realized Gram
+   * entries) runs within default budgets. Caller persists/unpersists the
+   * returned RDD.
    */
   def gramRdd(rows: RDD[EbwRow], k: Int, theta: Array[Double], link: Link,
       aggParts: Int): RDD[(Long, Double)] = {
     val th = theta
     val lk = link
     rows.mapPartitions { it =>
-      val acc = new scala.collection.mutable.LongMap[Double]()
+      val gram = new GramTable()
       while (it.hasNext) {
         val row = it.next()
-        val vals = row.vals
-        val idx = row.idx
-        var t = 0.0
-        if (idx == null) {
-          var j = 0
-          while (j < k) { t += vals(j) * th(j); j += 1 }
-        } else {
-          var p = 0
-          while (p < idx.length) { t += vals(p) * th(idx(p)); p += 1 }
-        }
-        val (_, rp) = lk.rAndSlope(t)
-        val wrp = row.w0 * rp
-        if (wrp != 0.0) {
-          if (idx == null) {
-            var i = 0
-            while (i < k) {
-              val vi = vals(i)
-              if (vi != 0.0) {
-                val wv = wrp * vi
-                var j = i
-                while (j < k) {
-                  val vj = vals(j)
-                  if (vj != 0.0) {
-                    val key = i.toLong * k + j
-                    acc.update(key, acc.getOrElse(key, 0.0) + wv * vj)
-                  }
-                  j += 1
-                }
-              }
-              i += 1
-            }
-          } else {
-            val nnz = idx.length
-            var p = 0
-            while (p < nnz) {
-              val vi = vals(p)
-              val wv = wrp * vi
-              val i = idx(p)
-              var q = p
-              while (q < nnz) {
-                val key = i.toLong * k + idx(q)
-                acc.update(key, acc.getOrElse(key, 0.0) + wv * vals(q))
-                q += 1
-              }
-              p += 1
-            }
-          }
-        }
+        val (_, rp) = lk.rAndSlope(margin(row, th, k))
+        gram.addRow(0L, k, row.idx, row.vals, row.w0 * rp)
       }
-      acc.iterator
+      gram.iterator
     }.combineByKeyWithClassTag[Double](
       createCombiner = (v: Double) => v,
       mergeValue = (a: Double, b: Double) => a + b,
       mergeCombiners = (a: Double, b: Double) => a + b,
       partitioner = new org.apache.spark.HashPartitioner(aggParts),
-      // The LongMap partial above IS the map-side combine: within a
-      // partition every key is already unique, so reduceByKey's default
-      // map-side aggregation would build a SECOND full-partial-sized hash
-      // map per task purely to rediscover that uniqueness — measured as
-      // the executor heap OOM site (AppendOnlyMap.growTable) at
-      // N=1e7 × 32 concurrent tasks. Streaming pairs straight to the
-      // shuffle writers costs zero extra shuffle volume and caps task
-      // memory at the one partial.
+      // The GramTable above IS the map-side combine: within a partition
+      // every key is already unique, so reduceByKey's default map-side
+      // aggregation would build a SECOND full-partial-sized hash map per
+      // task purely to rediscover that uniqueness — measured as the
+      // executor heap OOM site (AppendOnlyMap.growTable) at N=1e7 × 32
+      // concurrent tasks. Streaming pairs straight to the shuffle writers
+      // costs zero extra shuffle volume and caps task memory at the one
+      // partial.
       mapSideCombine = false)
   }
 

@@ -7,7 +7,7 @@ package graft.ebw
  * into solver BEHAVIOR, decided before the first aggregation pass from
  * numbers the validation scan already produced:
  *
- *  - `partitions`: sized so one partition's LongMap partial stays near
+ *  - `partitions`: sized so one partition's sparse-Gram partial stays near
  *    `TargetPartialBytes` (a partial holds at most
  *    min(realized-Gram, rows/partition · nnz(nnz+1)/2) entries).
  *  - `depth`: treeAggregate depth minimizing the bytes the driver
@@ -27,11 +27,20 @@ package graft.ebw
  */
 private[ebw] object EbwSizing {
 
-  /** Per-partition serialized-partial target (java-serialized LongMap:
-   * two primitive arrays at ~2x load-factor headroom ≈ 32 B/entry). */
+  /** Per-partition serialized-partial target. */
   val TargetPartialBytes: Long = 64L << 20
+  /** Serialized bytes per Gram entry of a partial. A partial ships as a
+   * GramSum: the primitive key and value arrays of its key-sorted runs,
+   * 8 B key + 8 B value = 16 B per run entry. Each run is at most the
+   * partial's merged size and the run sizes more than halve, so the runs
+   * hold under twice the merged entries: 32 B per merged entry bounds it. */
   val SerBytesPerEntry: Long = 32L
-  /** Driver-resident merged LongMap ≈ 48 B/entry, ×2 merge working set. */
+  /** Driver-resident bytes per merged Gram entry: the merged SortedGram
+   * holds 16 B/entry and cgSolve decodes another 8 B/entry of row/column
+   * indices. While a GramSum adds the partials up it holds its pending
+   * runs (under twice the merged Gram), the arriving partial and one
+   * merge's output, under 64 B per merged entry in all. 48 is kept as a
+   * conservative upper bound (×2 merge working set in `plan`). */
   val HeapBytesPerEntry: Long = 48L
   val MaxPartitions: Int = 4096
 
@@ -68,8 +77,12 @@ private[ebw] object EbwSizing {
     f.toLong * math.min(gramCap, ceilDiv(sumPairs, f.toLong)) * SerBytesPerEntry
   }
 
-  /** In-heap bytes per LongMap entry while a partial is BUILDING
-   * (open-addressed primitive arrays at up to 2x growth headroom). */
+  /** In-heap bytes per Gram entry while a partial is BUILDING: a
+   * GramTable holds 16 B per slot at load ≤ 0.5 (32-64 B/entry), and its
+   * grow transient (old table + doubled table, 48 B per old slot) peaks
+   * at 96 B/entry just past a doubling; finishing the sorted partial adds
+   * 16 B/entry to a table that is then at most 64 B/entry. 96 B/entry is
+   * therefore an upper bound on the build. */
   val BuildBytesPerEntry: Long = 2L * HeapBytesPerEntry
 
   /** Per-task in-flight partial budget: `cores` partials build AT ONCE

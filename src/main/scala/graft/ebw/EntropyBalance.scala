@@ -604,8 +604,8 @@ object EntropyBalance {
         else if (distGram) EbwAggregator.runStats(prep.rows, k, th, link)
         else EbwAggregator.runSparse(prep.rows, k, th, link, gramDepth)
       // penalty system: (P^-1 + G) d = rhs with aggregated dS/dz = -G,
-      // hence sign = -1 on the distributed matvec (matches the driver
-      // paths' vals.map(-_) / gram.map(-_))
+      // hence sign = -1 on both CG solves (the dense path negates the
+      // packed Gram)
       def distDir(th: Array[Double], invP: Array[Double], rhs: Array[Double],
           ridge: Double): Array[Double] = {
         val g = EbwAggregator.gramRdd(prep.rows, k, th, link,
@@ -647,8 +647,8 @@ object EntropyBalance {
           val d =
             if (distGram) distDir(z, invP, rhs, ridge)
             else if (pass.isSparse)
-              DriverLinalg.cgSolve(k, pass.gramKeys, pass.gramVals.map(-_),
-                invP, rhs, ridge, null)
+              DriverLinalg.cgSolve(k, pass.gramKeys, pass.gramVals,
+                invP, rhs, ridge, null, sign = -1.0)
             else DriverLinalg.solveWithDiag(k, pass.gram.map(-_), invP, rhs, ridge)
           var alpha = 1.0
           var accepted = false

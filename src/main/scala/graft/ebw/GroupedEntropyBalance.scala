@@ -105,17 +105,22 @@ object GroupedEntropyBalance {
 
   /** Per-round aggregates with per-group accessors; dense layout is the
    * flat [wrsum, s(k), gram(tri)] block per group, sparse layout keeps s
-   * flat and the Gram as per-group key/value arrays for CG. */
+   * flat and the Gram as one key-sorted sparse triangle keyed by
+   * (g*k+i)*k+j, so each group's Gram is a contiguous run of keys. */
   private final class RoundData(
       nG: Int, k: Int, blk: Int,
-      aggDense: Array[Double], sparseS: Array[Double],
-      val gramKeysByG: Array[Array[Long]], val gramValsByG: Array[Array[Double]]) {
+      aggDense: Array[Double], sparseS: Array[Double], sparseGram: SortedGram) {
     def sparse: Boolean = aggDense == null
     def s(g: Int): Array[Double] =
       if (sparse) java.util.Arrays.copyOfRange(sparseS, g * k, (g + 1) * k)
       else java.util.Arrays.copyOfRange(aggDense, g * blk + 1, g * blk + 1 + k)
     def gramDense(g: Int): Array[Double] =
       java.util.Arrays.copyOfRange(aggDense, g * blk + 1 + k, (g + 1) * blk)
+    /** Group g's sparse Gram, keys re-based to i*k+j. */
+    def gramSparse(g: Int): SortedGram = {
+      val span = k.toLong * k
+      sparseGram.slice(g * span, (g + 1) * span)
+    }
   }
 
   /**
@@ -124,8 +129,10 @@ object GroupedEntropyBalance {
    * sum w0 r' x x' under the clip link r = clip(exp(eta_g * t), lb, ub).
    * Above denseGramMax the flat per-task buffer (nG * (1+k+k(k+1)/2)
    * doubles: 500 groups x k=1000 would be ~2 GB/task) is replaced by a
-   * sparse accumulation — s stays flat (nG*k), the Gram becomes a LongMap
-   * keyed by (g*k+i)*k+j, proportional to the realized cross pattern.
+   * sparse accumulation — s stays flat (nG*k), the Gram goes into one
+   * [[GramTable]] per partition keyed by (g*k+i)*k+j, proportional to the
+   * realized cross pattern, and a [[GramSum]] adds the key-sorted
+   * partials up with linear merges.
    */
   private def roundPass(
       rows: RDD[GRow], nG: Int, k: Int,
@@ -191,80 +198,39 @@ object GroupedEntropyBalance {
           },
           (a, c) => { var i = 0; while (i < a.length) { a(i) += c(i); i += 1 }; a },
           depth = 2)
-        new RoundData(nG, k, blk, aggDense, null, null, null)
+        new RoundData(nG, k, blk, aggDense, null, null)
       } else {
-        final case class GAcc(
-            wr: Array[Double], s: Array[Double],
-            gram: scala.collection.mutable.LongMap[Double])
-        val acc0 = GAcc(new Array[Double](nG), new Array[Double](nG * k),
-          new scala.collection.mutable.LongMap[Double]())
-        val agg = rows.treeAggregate(acc0)(
-          (acc, r) => {
+        val sum = (a: (Array[Double], GramSum), c: (Array[Double], GramSum)) => {
+          var i = 0
+          while (i < a._1.length) { a._1(i) += c._1(i); i += 1 }
+          a._2.addAll(c._2)
+          a
+        }
+        val agg = rows.mapPartitions { it =>
+          val s = new Array[Double](nG * k)
+          val gram = new GramTable()
+          while (it.hasNext) {
+            val r = it.next()
             if (!bcDone.value(r.g)) {
               val (wr, wrp) = linkOf(r)
-              acc.wr(r.g) += wr
               val sBase = r.g * k
-              val gBase = r.g.toLong * k * k
               if (r.idx == null) {
                 var i = 0
                 while (i < k) {
                   val vi = r.vals(i)
-                  if (vi != 0.0) {
-                    acc.s(sBase + i) += wr * vi
-                    if (wrp != 0.0) {
-                      var j = i
-                      while (j < k) {
-                        val vj = r.vals(j)
-                        if (vj != 0.0) {
-                          val key = gBase + i.toLong * k + j
-                          acc.gram.update(key, acc.gram.getOrElse(key, 0.0) + wrp * vi * vj)
-                        }
-                        j += 1
-                      }
-                    }
-                  }
+                  if (vi != 0.0) s(sBase + i) += wr * vi
                   i += 1
                 }
               } else {
                 var p = 0
-                while (p < r.idx.length) {
-                  val i = r.idx(p); val vi = r.vals(p)
-                  acc.s(sBase + i) += wr * vi
-                  if (wrp != 0.0) {
-                    var q = p
-                    while (q < r.idx.length) {
-                      val key = gBase + i.toLong * k + r.idx(q)
-                      acc.gram.update(key, acc.gram.getOrElse(key, 0.0) + wrp * vi * r.vals(q))
-                      q += 1
-                    }
-                  }
-                  p += 1
-                }
+                while (p < r.idx.length) { s(sBase + r.idx(p)) += wr * r.vals(p); p += 1 }
               }
+              gram.addRow(r.g.toLong * k * k, k, r.idx, r.vals, wrp)
             }
-            acc
-          },
-          (a, c) => {
-            var i = 0
-            while (i < nG) { a.wr(i) += c.wr(i); i += 1 }
-            i = 0
-            while (i < nG * k) { a.s(i) += c.s(i); i += 1 }
-            c.gram.foreachEntry((key, v) =>
-              a.gram.update(key, a.gram.getOrElse(key, 0.0) + v))
-            a
-          },
-          depth = 2)
-        // split the global map into per-group key/val arrays (keys re-based
-        // to i*k+j) for the CG solver
-        val keyBufs = Array.fill(nG)(new scala.collection.mutable.ArrayBuffer[Long]())
-        val valBufs = Array.fill(nG)(new scala.collection.mutable.ArrayBuffer[Double]())
-        agg.gram.foreachEntry { (key, v) =>
-          val g = (key / (k.toLong * k)).toInt
-          keyBufs(g) += key - g.toLong * k * k
-          valBufs(g) += v
-        }
-        new RoundData(nG, k, blk, null, agg.s,
-          keyBufs.map(_.toArray), valBufs.map(_.toArray))
+          }
+          Iterator((s, new GramSum().add(gram.sorted())))
+        }.treeAggregate((new Array[Double](nG * k), new GramSum()))(sum, sum, depth = 2)
+        new RoundData(nG, k, blk, null, agg._1, agg._2.result)
       }
     bcLambda.destroy()
     bcDone.destroy()
@@ -330,7 +296,7 @@ object GroupedEntropyBalance {
 
   /** DISTRIBUTED-GRAM tier of the grouped solver: G simultaneous
    * large-k problems would hold G sparse Grams in the shared round pass
-   * — the per-task LongMap and its driver merge scale with the SUM of
+   * — the per-task Gram partial and its driver merge scale with the SUM of
    * the groups' realized cross patterns, so at the single-problem
    * distributed-Gram regime (N=1e7 × k=1e5) a handful of groups exhausts
    * the driver budget that one problem already saturates. Routing
@@ -521,9 +487,11 @@ object GroupedEntropyBalance {
             } else {
               val ridge = math.max(1e-8, 1e-5 * math.pow(viol / bscale(g), 0.55))
               val d =
-                if (rd.sparse)
-                  DriverLinalg.cgSolve(k, rd.gramKeysByG(g), rd.gramValsByG(g),
+                if (rd.sparse) {
+                  val gram = rd.gramSparse(g)
+                  DriverLinalg.cgSolve(k, gram.keys, gram.vals,
                     new Array[Double](k), pg, ridge, null)
+                }
                 else DriverLinalg.solveRidged(k, rd.gramDense(g), pg, ridge)
               // damped full step: groups share the pass, so no individual
               // line search — cap the step to keep exp() sane instead
@@ -635,9 +603,11 @@ object GroupedEntropyBalance {
               while (i < k) { rhs(i) = -invP(i) * f(i); i += 1 }
               val ridge = math.max(1e-10, 1e-7 * fNorm / bscale(g))
               val d =
-                if (rd.sparse)
-                  DriverLinalg.cgSolve(k, rd.gramKeysByG(g),
-                    rd.gramValsByG(g).map(-_), invP, rhs, ridge, null)
+                if (rd.sparse) {
+                  val gram = rd.gramSparse(g)
+                  DriverLinalg.cgSolve(k, gram.keys, gram.vals, invP, rhs,
+                    ridge, null, sign = -1.0)
+                }
                 else DriverLinalg.solveWithDiag(k, rd.gramDense(g).map(-_),
                   invP, rhs, ridge)
               val dn = d.map(math.abs).max

@@ -71,6 +71,13 @@ class EbwSolverSpec extends AnyFunSuite {
         assert(math.abs(v - p0.gram(EbwAggregator.pidx(k, i, j))) < 1e-12,
           s"sparse-gram entry ($i,$j)")
       }
+      // ...and no dense entry may be missing from it: one key per nonzero
+      // triangle cell, in strictly ascending order
+      assert(pSp.gramKeys.length == p0.gram.count(_ != 0.0),
+        s"sparse-gram has ${pSp.gramKeys.length} keys, dense triangle " +
+          s"${p0.gram.count(_ != 0.0)} nonzeros")
+      for (p <- 1 until pSp.gramKeys.length)
+        assert(pSp.gramKeys(p - 1) < pSp.gramKeys(p), s"sparse-gram key order at $p")
       val sign = if (link.mode == Link.NEGEXP) -1.0 else 1.0
       for (j <- 0 until k) {
         val tj = theta.clone(); tj(j) += eps

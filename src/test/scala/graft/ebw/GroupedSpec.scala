@@ -101,6 +101,17 @@ class GroupedSpec extends AnyFunSuite {
     assert(pathDiff < 1e-8, s"sparse vs dense grouped paths differ by $pathDiff")
   }
 
+  test("grouped sparse-Gram path over an empty input (no partitions) converges trivially") {
+    import spark.implicits._
+    val k = 600
+    val df = Seq.empty[(String, Seq[Double], Double)].toDF("grp", "feat", "w0")
+    val res = GroupedEntropyBalance.entropyBalanceGrouped(
+      df, "grp", "feat", "w0", Map("a" -> Array.fill(k)(1.0 / k)))
+    assert(res.allConverged)
+    assert(res.groups("a").multipliers.forall(_ == 0.0))
+    assert(res.weighted.count() == 0)
+  }
+
   test("grouped distributed-Gram tier: gramMode=distributed shards groups " +
     "across single-problem solves and matches the shared sparse pass") {
     import spark.implicits._
