@@ -9,42 +9,23 @@ package graft.ebw
  */
 private[ebw] object DriverLinalg {
 
-  /** Solve (G + ridge*I) x = rhs where G is packed upper-triangular SPD-ish. */
-  def solveRidged(k: Int, packed: Array[Double], rhs: Array[Double], ridge0: Double): Array[Double] = {
-    val diag = new Array[Double](k)
-    solveWithDiag(k, packed, diag, rhs, ridge0)
-  }
-
-  /** Solve (G + diag + ridge*I) x = rhs (diag: extra per-coordinate diagonal,
-   * used by the penalty solver's (P^-1 + G) system). */
+  /** Solve (sign*G + diag + ridge*I) x = rhs, G packed upper-triangular
+   * SPD-ish, over the `free` coordinates (ascending; all k when null),
+   * zeros elsewhere. `diag` is an extra per-coordinate diagonal (the
+   * penalty solver's P^-1); `sign` scales
+   * the Gram as in [[cgSolve]] (-1 for the penalty system whose
+   * aggregated dS/dz = -G) and is applied as the packed Gram is copied
+   * into the system, so no negated Gram copy is ever made. */
   def solveWithDiag(
       k: Int,
       packed: Array[Double],
       diag: Array[Double],
       rhs: Array[Double],
-      ridge0: Double): Array[Double] = {
-    var ridge = ridge0
-    var attempts = 0
-    while (attempts < 16) {
-      val a = unpack(k, packed)
-      var i = 0
-      while (i < k) { a(i)(i) += diag(i) + ridge; i += 1 }
-      val x = cholSolve(a, rhs)
-      if (x != null) return x
-      ridge = math.max(ridge, 1e-12) * 10.0
-      attempts += 1
-    }
-    throw new ArithmeticException("EBW Newton system is numerically singular")
-  }
-
-  /** Solve the subsystem restricted to `free` coordinates; zeros elsewhere. */
-  def solveSubset(
-      k: Int,
-      packed: Array[Double],
-      rhs: Array[Double],
-      free: Array[Int],
-      ridge0: Double): Array[Double] = {
-    val m = free.length
+      ridge0: Double,
+      sign: Double = 1.0,
+      free: Array[Int] = null): Array[Double] = {
+    val idx = if (free == null) Array.range(0, k) else free
+    val m = idx.length
     val out = new Array[Double](k)
     if (m == 0) return out
     var ridge = ridge0
@@ -54,45 +35,28 @@ private[ebw] object DriverLinalg {
       val b = new Array[Double](m)
       var ii = 0
       while (ii < m) {
-        val gi = free(ii)
+        val gi = idx(ii)
         b(ii) = rhs(gi)
-        var jj = 0
+        var jj = ii
         while (jj < m) {
-          val gj = free(jj)
-          val lo = math.min(gi, gj)
-          val hi = math.max(gi, gj)
-          a(ii)(jj) = packed(EbwAggregator.pidx(k, lo, hi))
+          val v = sign * packed(EbwAggregator.pidx(k, gi, idx(jj)))
+          a(ii)(jj) = v
+          a(jj)(ii) = v
           jj += 1
         }
-        a(ii)(ii) += ridge
+        a(ii)(ii) += diag(gi) + ridge
         ii += 1
       }
       val x = cholSolve(a, b)
       if (x != null) {
         var p = 0
-        while (p < m) { out(free(p)) = x(p); p += 1 }
+        while (p < m) { out(idx(p)) = x(p); p += 1 }
         return out
       }
       ridge = math.max(ridge, 1e-12) * 10.0
       attempts += 1
     }
-    throw new ArithmeticException("EBW Newton subsystem is numerically singular")
-  }
-
-  private def unpack(k: Int, packed: Array[Double]): Array[Array[Double]] = {
-    val a = Array.ofDim[Double](k, k)
-    var i = 0
-    while (i < k) {
-      var j = i
-      while (j < k) {
-        val v = packed(EbwAggregator.pidx(k, i, j))
-        a(i)(j) = v
-        a(j)(i) = v
-        j += 1
-      }
-      i += 1
-    }
-    a
+    throw new ArithmeticException("EBW Newton system is numerically singular")
   }
 
   /** In-place Cholesky solve; returns null if not positive definite. */

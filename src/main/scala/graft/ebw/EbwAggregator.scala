@@ -295,14 +295,10 @@ private[ebw] object EbwAggregator {
     val out = rows.treeAggregate(new Array[Double](size))(
       seqOp = (buf, rowAndRatio) => {
         val (row, ratio) = rowAndRatio
-        // defensive dimension guards: the solver validates the same frame
+        // defensive row guard: the solver validates the same frame
         // separately, but this pass must never AIOOBE on its own
-        val dimsOk = row.vals != null && (
-          if (row.idx == null) row.vals.length == k
-          else row.idx.length == row.vals.length && (row.idx.length == 0 ||
-            (row.idx(0) >= 0 && row.idx(row.idx.length - 1) < k)))
         if (ratio > 0.0 && !ratio.isInfinite && !ratio.isNaN &&
-            dimsOk && !row.w0.isNaN && row.w0 > 0.0) {
+            rowNnz(row.idx, row.vals, row.w0, k) >= 0) {
           val lnr = math.log(ratio)
           val w0 = row.w0
           val vals = row.vals
@@ -350,34 +346,12 @@ private[ebw] object EbwAggregator {
   /** Validation + sizing pass: returns (badRows, sumW, n, sumPairs) where
    * sumPairs = Σ_i nnz_i(nnz_i+1)/2 — the total Gram-entry contributions,
    * the input to EbwSizing's partition/depth/mode heuristic (counted in
-   * the same scan that checks finiteness, so sizing costs nothing extra).
-   * Mirrors inputs_are_invalid
-   * (/root/reference/entropy_balance_weighting/shared.py:105-133). */
+   * the same scan that checks finiteness, so sizing costs nothing extra). */
   def validate(rows: RDD[EbwRow], k: Int): (Long, Double, Long, Long) = {
     val out = rows.treeAggregate(new Array[Double](4))(
       seqOp = (buf, row) => {
-        var bad = false
-        var nnz = 0
-        if (row.w0.isNaN || row.w0.isInfinite || row.w0 <= 0.0) bad = true
-        if (row.vals == null) bad = true
-        else {
-          if (row.idx == null) {
-            if (row.vals.length != k) bad = true
-          } else {
-            if (row.idx.length != row.vals.length) bad = true
-            else if (row.idx.length > 0 && (row.idx(row.idx.length - 1) >= k || row.idx(0) < 0)) bad = true
-          }
-          if (!bad) {
-            var p = 0
-            while (p < row.vals.length && !bad) {
-              val v = row.vals(p)
-              if (v.isNaN || v.isInfinite) bad = true
-              else if (v != 0.0) nnz += 1
-              p += 1
-            }
-          }
-        }
-        if (bad) buf(0) += 1.0
+        val nnz = rowNnz(row.idx, row.vals, row.w0, k)
+        if (nnz < 0) buf(0) += 1.0
         else {
           buf(1) += row.w0
           buf(3) += nnz.toDouble * (nnz + 1) / 2
@@ -388,5 +362,26 @@ private[ebw] object EbwAggregator {
       combOp = (a, b) => { a(0) += b(0); a(1) += b(1); a(2) += b(2); a(3) += b(3); a },
       depth = 2)
     (out(0).toLong, out(1), out(2).toLong, out(3).toLong)
+  }
+
+  /** The row-validity predicate of every solver, single and grouped:
+   * -1 when the row is invalid (NaN, infinite or non-positive w0;
+   * missing or malformed features; a non-finite feature value), else the
+   * row's feature nnz. Mirrors the reference's inputs_are_invalid
+   * (shared.py:105-133). */
+  def rowNnz(idx: Array[Int], vals: Array[Double], w0: Double, k: Int): Int = {
+    if (w0.isNaN || w0.isInfinite || w0 <= 0.0 || vals == null) return -1
+    if (idx == null) { if (vals.length != k) return -1 }
+    else if (idx.length != vals.length ||
+        (idx.length > 0 && (idx(idx.length - 1) >= k || idx(0) < 0))) return -1
+    var nnz = 0
+    var p = 0
+    while (p < vals.length) {
+      val v = vals(p)
+      if (v.isNaN || v.isInfinite) return -1
+      if (v != 0.0) nnz += 1
+      p += 1
+    }
+    nnz
   }
 }

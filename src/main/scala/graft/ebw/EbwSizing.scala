@@ -1,5 +1,7 @@
 package graft.ebw
 
+import org.apache.spark.SparkContext
+
 /**
  * Pre-flight sizing for the large-k sparse-Gram path — turns the two
  * documented N=1e7 operational cliffs (driver OOM merging per-partition
@@ -144,6 +146,30 @@ private[ebw] object EbwSizing {
         s"driver Gram fits: collect ~${collect >> 20} MiB, heap ~${heapNeed >> 20} MiB"
     Plan(partitions, depth, gramCap, collect, heapNeed,
       distributedGram = overResult || overHeap, why = why)
+  }
+
+  /** The Gram route every solver entry point takes, single and grouped:
+   * None on the dense path (k <= denseGramMax); otherwise the sizing
+   * plan for `sumPairs` Gram contributions over `parts` partitions and
+   * whether the Gram is distributed. gramMode "distributed" forces it,
+   * "driver" fails fast with the sized error when the merged Gram cannot
+   * fit ([[requireDriverFits]]), "auto" follows the plan. */
+  def route(sc: SparkContext, k: Int, sumPairs: Long, parts: Int,
+      options: EbwOptions): Option[(Plan, Boolean)] = {
+    if (k <= options.denseGramMax) return None
+    require(Set("auto", "driver", "distributed")(options.gramMode),
+      s"gramMode must be auto|driver|distributed: ${options.gramMode}")
+    val maxResult = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    val maxHeap = Runtime.getRuntime.maxMemory
+    val plan = EbwSizing.plan(k, sumPairs, parts, maxResult, maxHeap,
+      cores = sc.defaultParallelism)
+    val dist = options.gramMode match {
+      case "driver" =>
+        requireDriverFits(plan, maxResult, maxHeap); false
+      case "distributed" => true
+      case _ => plan.distributedGram
+    }
+    Some((plan, dist))
   }
 
   /** Reduce-side partition count for the distributed Gram

@@ -113,25 +113,19 @@ private[ebw] final case class EbwRow(idx: Array[Int], vals: Array[Double], w0: D
  *   EXP     r = exp(t),                    dr/dt = r       (unbounded dual)
  *   CLIP    r = clip(exp(eta*t), lb, ub),  dr/dt = eta*e on the interior,
  *                                          0 when clipped  (elastic/bounded)
- *   NEGEXP  r = exp(-t),                   dS/dtheta = -Gram (penalty mode;
- *                                          sign handled on the driver)
- * CLIP with eta = -1 doubles as the bounded-penalty map clip(exp(-t),lb,ub).
+ * CLIP with eta = -1 is the penalty map clip(exp(-t), lb, ub) (lb = 0,
+ * ub = inf when unbounded); its aggregated Gram is dS/dz = -G.
  */
 private[graft] final case class Link(mode: Int, eta: Double, lb: Double, ub: Double) {
   /** (r, dr/dt) at t = x . theta — THE shared per-row evaluation for every
    * solver mode (exp inputs capped at 700 to stay finite; the driver line
    * searches reject divergent trials). (Double, Double) tuples are
    * @specialized, so the JIT scalar-replaces them in the hot loops. */
-  @inline def rAndSlope(t: Double): (Double, Double) = mode match {
-    case Link.EXP =>
+  @inline def rAndSlope(t: Double): (Double, Double) =
+    if (mode == Link.EXP) {
       val r = math.exp(if (t > 700.0) 700.0 else t)
       (r, r)
-    case Link.CLIP => Link.clipRAndSlope(eta, lb, ub, t)
-    case _ =>
-      val tt = if (-t > 700.0) -700.0 else t
-      val r = math.exp(-tt)
-      (r, r)
-  }
+    } else Link.clipRAndSlope(eta, lb, ub, t)
 
   /** Ratio only (driver-side column fallback paths). */
   @inline def r(t: Double): Double = rAndSlope(t)._1
@@ -140,10 +134,8 @@ private[graft] final case class Link(mode: Int, eta: Double, lb: Double, ub: Dou
 private[graft] object Link {
   val EXP = 0
   val CLIP = 1
-  val NEGEXP = 2
   def exp: Link = Link(EXP, 1.0, 0.0, Double.PositiveInfinity)
   def clip(eta: Double, lb: Double, ub: Double): Link = Link(CLIP, eta, lb, ub)
-  def negexp: Link = Link(NEGEXP, 1.0, 0.0, Double.PositiveInfinity)
 
   /** Static clip-link evaluation for callers carrying per-group eta
    * (GroupedEntropyBalance) — same math as the CLIP instance mode. */

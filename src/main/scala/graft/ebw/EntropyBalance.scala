@@ -6,7 +6,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 import org.apache.spark.storage.StorageLevel
-import org.slf4j.LoggerFactory
 
 import DriverLinalg.{axpy, dot, norm2}
 
@@ -24,11 +23,12 @@ import DriverLinalg.{axpy, dot, norm2}
  * the output weights stay distributed as a lazily-computed column
  * `w0 * r(x . lambda)`. Bounds (elastic mode) and the penalty variant reduce
  * to the same kernel with a different per-row link — see EbwTypes.Link and
- * SURVEY.md §3 for the derivations.
+ * SURVEY.md §3 for the derivations. All three modes share one
+ * prepare → size → solve → dump wrapper and run on one [[NewtonKernel]]
+ * (aggregation pass, Newton direction, backtracking); each mode's loop
+ * keeps only its own math.
  */
 object EntropyBalance {
-
-  private val log = LoggerFactory.getLogger(getClass)
 
   private[ebw] final case class Prepared(
       rows: RDD[EbwRow], k: Int, sumW: Double, n: Long, sumPairs: Long = 0L)
@@ -58,29 +58,18 @@ object EntropyBalance {
     Prepared(rows, k, sumW, n, sumPairs)
   }
 
-  /** Sparse-path pre-flight (k > denseGramMax): size partitions/tree
-   * depth from the measured row density and pick the Gram placement —
-   * driver-merged when this driver's maxResultSize/heap budget holds it,
-   * distributed otherwise (EbwSizing scaladoc). May replace the cached
-   * row RDD with a repartitioned copy so no partition's Gram partial
-   * outgrows the target. Returns (possibly-new Prepared, plan, dist). */
-  private[ebw] def sizeForSparse(
-      prep: Prepared, options: EbwOptions): (Prepared, Option[EbwSizing.Plan], Boolean) = {
-    if (prep.k <= options.denseGramMax) return (prep, None, false)
-    require(Set("auto", "driver", "distributed")(options.gramMode),
-      s"gramMode must be auto|driver|distributed: ${options.gramMode}")
-    val sc = prep.rows.sparkContext
-    val maxResult = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    val maxHeap = Runtime.getRuntime.maxMemory
-    val plan = EbwSizing.plan(prep.k, prep.sumPairs,
-      prep.rows.getNumPartitions, maxResult, maxHeap,
-      cores = sc.defaultParallelism)
-    val dist = options.gramMode match {
-      case "driver" =>
-        EbwSizing.requireDriverFits(plan, maxResult, maxHeap); false
-      case "distributed" => true
-      case _ => plan.distributedGram
-    }
+  /** Sizing pre-flight: route the problem (EbwSizing.route) and build
+   * its Newton kernel. On the sparse path (k > denseGramMax) partitions
+   * and tree depth are sized from the measured row density and the Gram
+   * placed on the driver when this driver's maxResultSize/heap budget
+   * holds it, distributed otherwise (EbwSizing scaladoc); the cached row
+   * RDD may be replaced by a repartitioned copy so no partition's Gram
+   * partial outgrows the target. */
+  private[ebw] def sizeForSparse(prep: Prepared, options: EbwOptions): NewtonKernel = {
+    val route = EbwSizing.route(prep.rows.sparkContext, prep.k, prep.sumPairs,
+      prep.rows.getNumPartitions, options)
+    if (route.isEmpty) return new NewtonKernel(prep, None, distributed = false)
+    val (plan, dist) = route.get
     EbwLog.info(s"sparse Gram sizing: sumPairs=${prep.sumPairs} " +
       s"parts=${prep.rows.getNumPartitions}->${plan.partitions} " +
       s"depth=${plan.depth} mode=${if (dist) "distributed" else "driver"} " +
@@ -97,7 +86,28 @@ object EntropyBalance {
         prep.rows.unpersist(false)
         prep.copy(rows = r2)
       } else prep
-    (prep2, Some(plan), dist)
+    new NewtonKernel(prep2, Some(plan), dist)
+  }
+
+  /** The ratio bounds (lb, ub) of `options.bounds`, (0, inf) when
+   * unbounded: a negative lb clamps to 0 as in the reference (L362), a
+   * missing ub is +inf. */
+  private[ebw] def ratioBounds(options: EbwOptions): (Double, Double) = {
+    val (lbRaw, ubOpt) = options.bounds.getOrElse((0.0, None: Option[Double]))
+    (math.max(0.0, lbRaw), ubOpt.getOrElse(Double.PositiveInfinity))
+  }
+
+  /** The per-moment penalty vector: one value applies to all k moments;
+   * every penalty must be strictly positive. */
+  private[ebw] def penaltyVector(penaltyParameter: Array[Double], k: Int): Array[Double] = {
+    val pen =
+      if (penaltyParameter.length == 1) Array.fill(k)(penaltyParameter(0))
+      else penaltyParameter
+    if (pen.length != k)
+      throw new IllegalArgumentException("Penalties must be one per moment.")
+    if (!pen.forall(_ > 0.0))
+      throw new IllegalArgumentException("Penalty parameters must be strictly positive.")
+    pen
   }
 
   /** Decode one feature cell; null elements inside an array flag the row
@@ -125,14 +135,10 @@ object EntropyBalance {
     val lk = link
     if (df.schema(featuresCol).dataType.isInstanceOf[ArrayType]) {
       graft.functions.GraftFunctions.register(df.sparkSession)
-      val (eta, lb, ub) = lk.mode match {
-        case 0 => (1.0, 0.0, Double.PositiveInfinity)
-        case 1 => (lk.eta, lk.lb, lk.ub)
-        case _ => (-1.0, 0.0, Double.PositiveInfinity)
-      }
+      // Link.exp carries (eta, lb, ub) = (1, 0, inf): the inert clip
       call_function("graft_ratio",
         col(featuresCol).cast("array<double>"), typedlit(th.toSeq),
-        lit(eta), lit(lb), lit(ub))
+        lit(lk.eta), lit(lk.lb), lit(lk.ub))
     } else {
       val f = udf { v: Vector =>
         var t = 0.0
@@ -143,17 +149,23 @@ object EntropyBalance {
     }
   }
 
-  private def results(
-      df: DataFrame, featuresCol: String, weightCol: String, outputCol: String,
+  /** What a mode's Newton loop hands back to the shared wrapper. */
+  private final case class Outcome(
       theta: Array[Double], link: Link, converged: Boolean, nIter: Int,
       violations: Array[Double], multipliers: Array[Double],
-      eta: Option[Double], fval: Double, msg: String): EbwResult = {
-    val ratio = ratioColumn(df, featuresCol, theta, link)
+      eta: Option[Double], fval: Double, msg: String,
+      momentSlack: Option[Array[Double]] = None)
+
+  private def results(
+      df: DataFrame, featuresCol: String, weightCol: String, outputCol: String,
+      o: Outcome): EbwResult = {
+    val ratio = ratioColumn(df, featuresCol, o.theta, o.link)
     val attempt = df.withColumn(outputCol, col(weightCol) * ratio)
     val weighted =
-      if (converged) attempt else df.withColumn(outputCol, col(weightCol) * lit(1.0))
-    EbwResult(weighted, attempt, converged, nIter, violations, multipliers,
-      eta, fval, msg, theta = theta, link = link)
+      if (o.converged) attempt else df.withColumn(outputCol, col(weightCol) * lit(1.0))
+    EbwResult(weighted, attempt, o.converged, o.nIter, o.violations,
+      o.multipliers, o.eta, o.fval, o.msg, o.momentSlack,
+      theta = o.theta, link = o.link)
   }
 
   /** If a primal ratio guess column is configured (and no explicit dual
@@ -175,7 +187,7 @@ object EntropyBalance {
             toEbwRow(r.get(0), if (r.isNullAt(1)) Double.NaN else r.getDouble(1)),
             if (r.isNullAt(2)) Double.NaN else r.getDouble(2)))
         val (gram, rhs) = EbwAggregator.ratioSeed(rows, k)
-        val lambda0 = DriverLinalg.solveRidged(k, gram, rhs, 1e-10)
+        val lambda0 = DriverLinalg.solveWithDiag(k, gram, new Array[Double](k), rhs, 1e-10)
         EbwLog.info(s"primal warm start: seeded ${k} multipliers from '$rc'")
         options.copy(initialMultipliers = Some(lambda0))
       case (Some(rc), None) =>
@@ -233,20 +245,33 @@ object EntropyBalance {
     if (options.bounds.isDefined)
       return entropyBalanceElastic(df, featuresCol, weightCol,
         meanPopulationMoments, outputCol, options)
-    val k = meanPopulationMoments.length
-    options.initialMultipliers.foreach(mu => require(mu.length == k,
+    solve(df, featuresCol, weightCol, outputCol, meanPopulationMoments,
+      options, warmStart = true)(unboundedLoop)
+  }
+
+  /** prepare → warm start → size → solve → dump → unpersist, shared by the
+   * three single-problem modes. `warmStart` checks `initialMultipliers`
+   * and resolves the primal warm start (the dual modes; the penalty fixed
+   * point always starts at z = 0). The input is validated BEFORE the
+   * warm-start pass, so malformed inputs fail with the documented error,
+   * not an index error inside ratioSeed. */
+  private def solve(
+      df: DataFrame, featuresCol: String, weightCol: String, outputCol: String,
+      m: Array[Double], options: EbwOptions, warmStart: Boolean)(
+      loop: (NewtonKernel, Array[Double], EbwOptions) => Outcome): EbwResult = {
+    val k = m.length
+    if (warmStart) options.initialMultipliers.foreach(mu => require(mu.length == k,
       s"initialMultipliers has ${mu.length} entries, expected $k"))
-    // validate BEFORE the warm-start pass so malformed inputs fail with
-    // the documented error, not an index error inside ratioSeed
-    val prep0 = prepare(df, featuresCol, weightCol, k, meanPopulationMoments)
+    val prep0 = prepare(df, featuresCol, weightCol, k, m)
     var live = prep0
     try {
-      val opts = resolveWarmStart(df, featuresCol, weightCol, k, options)
-      val (prep, plan, dist) = sizeForSparse(prep0, opts)
-      live = prep
-      val res = unboundedLoop(df, featuresCol, weightCol, outputCol, prep,
-        meanPopulationMoments, opts, plan, dist)
-      maybeDump(df.sparkSession, prep, meanPopulationMoments, options, res)
+      val opts =
+        if (warmStart) resolveWarmStart(df, featuresCol, weightCol, k, options)
+        else options
+      val kernel = sizeForSparse(prep0, opts)
+      live = kernel.prep
+      val res = results(df, featuresCol, weightCol, outputCol, loop(kernel, m, opts))
+      maybeDump(df.sparkSession, live, m, options, res)
       res
     } finally live.rows.unpersist(false)
   }
@@ -265,35 +290,16 @@ object EntropyBalance {
   }
 
   private def unboundedLoop(
-      df: DataFrame, featuresCol: String, weightCol: String, outputCol: String,
-      prep: Prepared, m: Array[Double], options: EbwOptions,
-      plan: Option[EbwSizing.Plan] = None, distGram: Boolean = false): EbwResult = {
-    val k = prep.k
+      kn: NewtonKernel, m: Array[Double], options: EbwOptions): Outcome = {
+    val prep = kn.prep
+    val k = kn.k
     val b = m.map(_ * prep.sumW)
     val bscale = math.max(1.0, norm2(b))
     val link = Link.exp
-    val sparseGram = k > options.denseGramMax
-    val gramDepth = plan.map(_.depth).getOrElse(2)
-    // distributed-Gram mode: line-search/gradient passes carry NO Gram
-    // (Θ(N·nnz), runStats); the Gram is built once per accepted iterate
-    // as an RDD and the Newton direction comes from distributed-matvec CG
-    def agg(th: Array[Double]) =
-      if (!sparseGram) EbwAggregator.run(prep.rows, k, th, link)
-      else if (distGram) EbwAggregator.runStats(prep.rows, k, th, link)
-      else EbwAggregator.runSparse(prep.rows, k, th, link, gramDepth)
-    def distDir(th: Array[Double], negCe: Array[Double], ridge: Double): Array[Double] = {
-      val g = EbwAggregator.gramRdd(prep.rows, k, th, link,
-          EbwSizing.gramAggParts(plan.get,
-            Runtime.getRuntime.maxMemory,
-            prep.rows.sparkContext.defaultParallelism))
-        .persist(StorageLevel.MEMORY_AND_DISK_SER)
-      try DriverLinalg.cgSolveRdd(g, k, new Array[Double](k), negCe, ridge, null)
-      finally g.unpersist(false)
-    }
     var lambda = options.initialMultipliers
       .map(_.clone())
       .getOrElse(new Array[Double](k))
-    var pass = agg(lambda)
+    var pass = kn.pass(lambda, link)
     var ce = axpy(-1.0, b, pass.s)
     var steps = 0
     var converged = false
@@ -314,49 +320,38 @@ object EntropyBalance {
         // (G + ridge I) d = -Ce ; adaptive ridge as ebw_routines.py:235-237
         val ridge = math.max(1e-8, 1e-5 * math.pow(viol / bscale, 0.55))
         val negCe = ce.map(-_)
-        val d =
-          if (distGram) distDir(lambda, negCe, ridge)
-          else if (pass.isSparse)
-            DriverLinalg.cgSolve(k, pass.gramKeys, pass.gramVals,
-              new Array[Double](k), negCe, ridge, null)
-          else DriverLinalg.solveRidged(k, pass.gram, negCe, ridge)
+        val d = kn.direction(pass, lambda, link, negCe, new Array[Double](k),
+          ridge, null, 1.0)
         // Armijo backtracking on the dual objective
         // D(lambda) = b.lambda - (sum w0 exp(x.lambda) - sumW)
         val dCur = dot(b, lambda) - (pass.wrsum - prep.sumW)
         val gd = dot(negCe, d) // = grad D . d >= 0
-        var alpha = 1.0
-        var accepted = false
-        var trial = 0
-        while (!accepted && trial < 14) {
-          val cand = axpy(alpha, d, lambda)
-          val p2 = agg(cand)
-          val dCand = dot(b, cand) - (p2.wrsum - prep.sumW)
-          if (!dCand.isNaN &&
-              dCand >= dCur + 1e-4 * alpha * gd - 1e-10 * (1.0 + math.abs(dCur))) {
-            accepted = true
-            lambda = cand
-            pass = p2
-            ce = axpy(-1.0, b, pass.s)
-          } else {
-            alpha /= 2.0
-            trial += 1
-          }
+        val step = kn.backtrack(link, 14)(axpy(_, d, lambda)) { t =>
+          val dCand = dot(b, t.theta) - (t.pass.wrsum - prep.sumW)
+          !dCand.isNaN &&
+            dCand >= dCur + 1e-4 * t.alpha * gd - 1e-10 * (1.0 + math.abs(dCur))
         }
         steps += 1
-        if (!accepted) {
-          failed = true
-          msg = "Bad step, feasibility in doubt; rerun with bounds=(0, None) " +
-            "for a certificate (see reference ebw_routines.py:274-282)."
-          done = true
-        } else if (norm2(d.map(_ * alpha)) < options.stepTol &&
-            norm2(ce) < 1e-3 * bscale) {
-          converged = true; done = true // step sizes converged (shared.py:57)
+        step match {
+          case None =>
+            failed = true
+            msg = "Bad step, feasibility in doubt; rerun with bounds=(0, None) " +
+              "for a certificate (see reference ebw_routines.py:274-282)."
+            done = true
+          case Some(t) =>
+            lambda = t.theta
+            pass = t.pass
+            ce = axpy(-1.0, b, pass.s)
+            if (norm2(d.map(_ * t.alpha)) < options.stepTol &&
+                norm2(ce) < 1e-3 * bscale) {
+              converged = true; done = true // step sizes converged (shared.py:57)
+            }
         }
       }
     }
     if (failed) EbwLog.warn(s"EBW did not converge: $msg")
-    results(df, featuresCol, weightCol, outputCol, lambda, link,
-      converged && !failed, steps, ce, lambda, None, pass.fval, msg)
+    Outcome(lambda, link, converged && !failed, steps, ce, lambda, None,
+      pass.fval, msg)
   }
 
   /**
@@ -381,32 +376,15 @@ object EntropyBalance {
       weightCol: String,
       meanPopulationMoments: Array[Double],
       outputCol: String = "weight_new",
-      options: EbwOptions = EbwOptions()): EbwResult = {
-    val k = meanPopulationMoments.length
-    options.initialMultipliers.foreach(mu => require(mu.length == k,
-      s"initialMultipliers has ${mu.length} entries, expected $k"))
-    // validate first (see entropyBalance)
-    val prep0 = prepare(df, featuresCol, weightCol, k, meanPopulationMoments)
-    var live = prep0
-    try {
-      val opts = resolveWarmStart(df, featuresCol, weightCol, k, options)
-      val (prep, plan, dist) = sizeForSparse(prep0, opts)
-      live = prep
-      val res = elasticLoop(df, featuresCol, weightCol, outputCol, prep,
-        meanPopulationMoments, opts, plan, dist)
-      maybeDump(df.sparkSession, prep, meanPopulationMoments, options, res)
-      res
-    } finally live.rows.unpersist(false)
-  }
+      options: EbwOptions = EbwOptions()): EbwResult =
+    solve(df, featuresCol, weightCol, outputCol, meanPopulationMoments,
+      options, warmStart = true)(elasticLoop)
 
   private def elasticLoop(
-      df: DataFrame, featuresCol: String, weightCol: String, outputCol: String,
-      prep: Prepared, m: Array[Double], options: EbwOptions,
-      plan: Option[EbwSizing.Plan] = None, distGram: Boolean = false): EbwResult = {
-    val k = prep.k
-    val (lbRaw, ubOpt) = options.bounds.getOrElse((0.0, None: Option[Double]))
-    val lb = math.max(0.0, lbRaw) // reference clamps negative lb (L362)
-    val ub = ubOpt.getOrElse(Double.PositiveInfinity)
+      kn: NewtonKernel, m: Array[Double], options: EbwOptions): Outcome = {
+    val prep = kn.prep
+    val k = kn.k
+    val (lb, ub) = ratioBounds(options)
     require(ub > lb, "upper bound must exceed lower bound")
     val b = m.map(_ * prep.sumW)
     val bscale = math.max(1.0, norm2(b))
@@ -417,23 +395,7 @@ object EntropyBalance {
       var i = 0
       while (i < k) { lambda(i) = math.max(-1.0, math.min(1.0, mu(i) / eta)); i += 1 }
     }
-    val sparseGram = k > options.denseGramMax
-    val gramDepth = plan.map(_.depth).getOrElse(2)
-    def agg(th: Array[Double], lnk: Link) =
-      if (!sparseGram) EbwAggregator.run(prep.rows, k, th, lnk)
-      else if (distGram) EbwAggregator.runStats(prep.rows, k, th, lnk)
-      else EbwAggregator.runSparse(prep.rows, k, th, lnk, gramDepth)
-    def distDir(th: Array[Double], lnk: Link, pg: Array[Double],
-        ridge: Double, freeMask: Array[Boolean]): Array[Double] = {
-      val g = EbwAggregator.gramRdd(prep.rows, k, th, lnk,
-          EbwSizing.gramAggParts(plan.get,
-            Runtime.getRuntime.maxMemory,
-            prep.rows.sparkContext.defaultParallelism))
-        .persist(StorageLevel.MEMORY_AND_DISK_SER)
-      try DriverLinalg.cgSolveRdd(g, k, new Array[Double](k), pg, ridge, freeMask)
-      finally g.unpersist(false)
-    }
-    var pass = agg(lambda, Link.clip(eta, lb, ub))
+    var pass = kn.pass(lambda, Link.clip(eta, lb, ub))
     var ce = axpy(-1.0, b, pass.s)
     var totalSteps = 0
     var converged = false
@@ -447,7 +409,6 @@ object EntropyBalance {
       var inner = 0
       var innerDone = false
       var innerConverged = false
-      var lastMove = Double.PositiveInfinity
       while (!innerDone) {
         // gradient of g is -Ce; pin coordinates pushing outside the box
         val grad = ce.map(-_)
@@ -458,7 +419,6 @@ object EntropyBalance {
           if (lambda(i) <= -1.0 + 1e-12 && grad(i) < 0) pinned(i) = true
           i += 1
         }
-        val free = (0 until k).filter(!pinned(_)).toArray
         val pg = new Array[Double](k)
         i = 0
         while (i < k) { pg(i) = if (pinned(i)) 0.0 else grad(i); i += 1 }
@@ -470,12 +430,8 @@ object EntropyBalance {
           innerDone = true
         } else {
           val ridge = math.max(1e-8, 1e-5 * math.pow(pgNorm / bscale, 0.55))
-          val d =
-            if (distGram) distDir(lambda, link, pg, ridge, pinned.map(!_))
-            else if (pass.isSparse)
-              DriverLinalg.cgSolve(k, pass.gramKeys, pass.gramVals,
-                new Array[Double](k), pg, ridge, pinned.map(!_))
-            else DriverLinalg.solveSubset(k, pass.gram, pg, free, ridge)
+          val d = kn.direction(pass, lambda, link, pg, new Array[Double](k),
+            ridge, pinned.map(!_), 1.0)
           // When most rows are clipped the interior Gram is tiny and the
           // Newton direction blows up; any move beyond the box diameter is
           // meaningless, so cap ||d||_inf at 2 (degrades gracefully into
@@ -487,46 +443,41 @@ object EntropyBalance {
             while (j < k) { d(j) *= sc; j += 1 }
           }
           val gCur = pass.fval / eta - dot(lambda, ce)
-          var alpha = 1.0
-          var accepted = false
-          var trial = 0
-          while (!accepted && trial < 24) {
+          val project = (alpha: Double) => {
             val cand = new Array[Double](k)
             var j = 0
             while (j < k) {
               cand(j) = math.max(-1.0, math.min(1.0, lambda(j) + alpha * d(j)))
               j += 1
             }
+            cand
+          }
+          val step = kn.backtrack(link, 24)(project) { t =>
             // projected Armijo: directional derivative along the ACTUAL
             // movement cand - lambda (Bertsekas, projected Newton)
             var gdMove = 0.0
-            j = 0
-            while (j < k) { gdMove += pg(j) * (cand(j) - lambda(j)); j += 1 }
-            val p2 = agg(cand, link)
-            val ce2 = axpy(-1.0, b, p2.s)
-            val gCand = p2.fval / eta - dot(cand, ce2)
-            if (!gCand.isNaN && gdMove >= 0.0 &&
-                gCand >= gCur + 1e-6 * gdMove - 1e-10 * (1.0 + math.abs(gCur))) {
-              accepted = true
-              var mv = 0.0
-              j = 0
-              while (j < k) {
-                val dj = cand(j) - lambda(j); mv += dj * dj; j += 1
-              }
-              lastMove = math.sqrt(mv)
-              lambda = cand
-              pass = p2
-              ce = ce2
-            } else {
-              alpha /= 2.0
-              trial += 1
-            }
+            var j = 0
+            while (j < k) { gdMove += pg(j) * (t.theta(j) - lambda(j)); j += 1 }
+            val gCand = t.pass.fval / eta - dot(t.theta, axpy(-1.0, b, t.pass.s))
+            !gCand.isNaN && gdMove >= 0.0 &&
+              gCand >= gCur + 1e-6 * gdMove - 1e-10 * (1.0 + math.abs(gCur))
           }
           inner += 1
           totalSteps += 1
-          if (!accepted) innerDone = true
-          else if (lastMove < options.stepTol) {
-            innerDone = true; innerConverged = true
+          step match {
+            case None => innerDone = true
+            case Some(t) =>
+              var mv = 0.0
+              var j = 0
+              while (j < k) {
+                val dj = t.theta(j) - lambda(j); mv += dj * dj; j += 1
+              }
+              lambda = t.theta
+              pass = t.pass
+              ce = axpy(-1.0, b, pass.s)
+              if (math.sqrt(mv) < options.stepTol) {
+                innerDone = true; innerConverged = true
+              }
           }
         }
       }
@@ -543,17 +494,15 @@ object EntropyBalance {
           lambda(i) = math.max(-1.0, math.min(1.0, lambda(i) * etaOld / eta))
           i += 1
         }
-        pass = agg(lambda, Link.clip(eta, lb, ub))
+        pass = kn.pass(lambda, Link.clip(eta, lb, ub))
         ce = axpy(-1.0, b, pass.s)
       } else grow = false
       if (outer > 12) grow = false
     }
-    val multipliers = lambda.map(_ * eta)
     val slackLm = lambda.map(l => 1.0 - l) ++ lambda.map(l => 1.0 + l)
-    results(df, featuresCol, weightCol, outputCol, lambda,
-      Link.clip(eta, lb, ub), converged, totalSteps, ce, multipliers,
-      Some(eta), pass.fval, if (converged) "" else "bounded solve did not converge")
-      .copy(momentSlackMultipliers = Some(slackLm))
+    Outcome(lambda, Link.clip(eta, lb, ub), converged, totalSteps, ce,
+      lambda.map(_ * eta), Some(eta), pass.fval,
+      if (converged) "" else "bounded solve did not converge", Some(slackLm))
   }
 
   /**
@@ -574,114 +523,73 @@ object EntropyBalance {
       penaltyParameter: Array[Double],
       outputCol: String = "weight_new",
       options: EbwOptions = EbwOptions()): EbwResult = {
-    val k = meanPopulationMoments.length
-    val pen =
-      if (penaltyParameter.length == 1) Array.fill(k)(penaltyParameter(0))
-      else penaltyParameter
-    if (pen.length != k)
-      throw new IllegalArgumentException("Penalties must be one per moment.")
-    if (!pen.forall(_ > 0.0))
-      throw new IllegalArgumentException("Penalty parameters must be strictly positive.")
-    val prep0 = prepare(df, featuresCol, weightCol, k, meanPopulationMoments)
-    var live = prep0
-    try {
-      val (prep, plan, distGram) = sizeForSparse(prep0, options)
-      live = prep
-      val (lbRaw, ubOpt) = options.bounds.getOrElse((0.0, None: Option[Double]))
-      val lb = math.max(0.0, lbRaw)
-      val ub = ubOpt.getOrElse(Double.PositiveInfinity)
-      // CLIP with eta=-1 gives r = clip(exp(-t), lb, ub); with no bounds the
-      // clip is inert, so one loop serves both variants.
-      val link =
-        if (options.bounds.isDefined) Link.clip(-1.0, lb, ub)
-        else Link.clip(-1.0, 0.0, Double.PositiveInfinity)
-      val b = m2agg(meanPopulationMoments, prep.sumW)
-      val bscale = math.max(1.0, norm2(b))
-      val sparseGram = k > options.denseGramMax
-      val gramDepth = plan.map(_.depth).getOrElse(2)
-      def agg(th: Array[Double]) =
-        if (!sparseGram) EbwAggregator.run(prep.rows, k, th, link)
-        else if (distGram) EbwAggregator.runStats(prep.rows, k, th, link)
-        else EbwAggregator.runSparse(prep.rows, k, th, link, gramDepth)
-      // penalty system: (P^-1 + G) d = rhs with aggregated dS/dz = -G,
-      // hence sign = -1 on both CG solves (the dense path negates the
-      // packed Gram)
-      def distDir(th: Array[Double], invP: Array[Double], rhs: Array[Double],
-          ridge: Double): Array[Double] = {
-        val g = EbwAggregator.gramRdd(prep.rows, k, th, link,
-            EbwSizing.gramAggParts(plan.get,
-            Runtime.getRuntime.maxMemory,
-            prep.rows.sparkContext.defaultParallelism))
-          .persist(StorageLevel.MEMORY_AND_DISK_SER)
-        try DriverLinalg.cgSolveRdd(g, k, invP, rhs, ridge, null, sign = -1.0)
-        finally g.unpersist(false)
-      }
-      var z = new Array[Double](k)
-      var pass = agg(z)
-      var ce = axpy(-1.0, b, pass.s)
-      val maxSteps =
-        if (options.bounds.isDefined) options.maxStepsBounded else options.maxSteps
-      var steps = 0
-      var converged = false
-      var done = false
-      val invP = pen.map(1.0 / _)
-      EbwLog.info(s"EBW penalty: n=${prep.n} k=$k bounded=${options.bounds.isDefined}")
-      while (!done) {
-        // F(z) = z - P Ce(z)
-        val f = new Array[Double](k)
-        var i = 0
-        while (i < k) { f(i) = z(i) - pen(i) * ce(i); i += 1 }
-        val fNorm = norm2(f)
-        EbwLog.info(f"step=$steps%3d ||F||=$fNorm%12.6g ||Ce||=${norm2(ce)}%12.6g")
-        if (fNorm <= options.optimalityTol * math.max(1.0, norm2(z))) {
-          converged = true; done = true
-        } else if (steps >= maxSteps) {
-          done = true
-        } else {
-          // gram accumulated dS/dz with CLIP(-1): dS/dz = -G, G PSD
-          // (P^-1 + G) delta = -P^-1 F
-          val rhs = new Array[Double](k)
-          i = 0
-          while (i < k) { rhs(i) = -invP(i) * f(i); i += 1 }
-          val ridge = math.max(1e-10, 1e-7 * fNorm / bscale)
-          val d =
-            if (distGram) distDir(z, invP, rhs, ridge)
-            else if (pass.isSparse)
-              DriverLinalg.cgSolve(k, pass.gramKeys, pass.gramVals,
-                invP, rhs, ridge, null, sign = -1.0)
-            else DriverLinalg.solveWithDiag(k, pass.gram.map(-_), invP, rhs, ridge)
-          var alpha = 1.0
-          var accepted = false
-          var trial = 0
-          while (!accepted && trial < 14) {
-            val cand = axpy(alpha, d, z)
-            val p2 = agg(cand)
-            val ce2 = axpy(-1.0, b, p2.s)
-            val f2 = new Array[Double](k)
-            var j = 0
-            while (j < k) { f2(j) = cand(j) - pen(j) * ce2(j); j += 1 }
-            if (norm2(f2) <= fNorm * (1.0 - 1e-4 * alpha) + 1e-12) {
-              accepted = true
-              z = cand
-              pass = p2
-              ce = ce2
-            } else {
-              alpha /= 2.0
-              trial += 1
-            }
-          }
-          steps += 1
-          if (!accepted) done = true
-          else if (norm2(d.map(_ * alpha)) < options.stepTol) {
-            converged = true; done = true
-          }
-        }
-      }
-      results(df, featuresCol, weightCol, outputCol, z, link, converged,
-        steps, ce, z.map(-_), None, pass.fval,
-        if (converged) "" else "penalty solve did not converge")
-    } finally live.rows.unpersist(false)
+    val pen = penaltyVector(penaltyParameter, meanPopulationMoments.length)
+    solve(df, featuresCol, weightCol, outputCol, meanPopulationMoments,
+      options, warmStart = false)(penaltyLoop(pen))
   }
 
-  private def m2agg(m: Array[Double], sumW: Double): Array[Double] = m.map(_ * sumW)
+  private def penaltyLoop(pen: Array[Double])(
+      kn: NewtonKernel, m: Array[Double], options: EbwOptions): Outcome = {
+    val prep = kn.prep
+    val k = kn.k
+    val (lb, ub) = ratioBounds(options)
+    // CLIP with eta=-1 gives r = clip(exp(-t), lb, ub); with no bounds
+    // (lb, ub) = (0, inf) and the clip is inert, so one loop serves both
+    // variants
+    val link = Link.clip(-1.0, lb, ub)
+    val b = m.map(_ * prep.sumW)
+    val bscale = math.max(1.0, norm2(b))
+    var z = new Array[Double](k)
+    var pass = kn.pass(z, link)
+    var ce = axpy(-1.0, b, pass.s)
+    val maxSteps =
+      if (options.bounds.isDefined) options.maxStepsBounded else options.maxSteps
+    var steps = 0
+    var converged = false
+    var done = false
+    val invP = pen.map(1.0 / _)
+    // F(z) = z - P Ce(z)
+    def residual(z: Array[Double], ce: Array[Double]): Array[Double] = {
+      val f = new Array[Double](k)
+      var i = 0
+      while (i < k) { f(i) = z(i) - pen(i) * ce(i); i += 1 }
+      f
+    }
+    EbwLog.info(s"EBW penalty: n=${prep.n} k=$k bounded=${options.bounds.isDefined}")
+    while (!done) {
+      val f = residual(z, ce)
+      val fNorm = norm2(f)
+      EbwLog.info(f"step=$steps%3d ||F||=$fNorm%12.6g ||Ce||=${norm2(ce)}%12.6g")
+      if (fNorm <= options.optimalityTol * math.max(1.0, norm2(z))) {
+        converged = true; done = true
+      } else if (steps >= maxSteps) {
+        done = true
+      } else {
+        // the aggregated Gram under CLIP(-1) is dS/dz = -G, G PSD:
+        // (P^-1 + G) delta = -P^-1 F, hence sign = -1
+        val rhs = new Array[Double](k)
+        var i = 0
+        while (i < k) { rhs(i) = -invP(i) * f(i); i += 1 }
+        val ridge = math.max(1e-10, 1e-7 * fNorm / bscale)
+        val d = kn.direction(pass, z, link, rhs, invP, ridge, null, -1.0)
+        val step = kn.backtrack(link, 14)(axpy(_, d, z)) { t =>
+          norm2(residual(t.theta, axpy(-1.0, b, t.pass.s))) <=
+            fNorm * (1.0 - 1e-4 * t.alpha) + 1e-12
+        }
+        steps += 1
+        step match {
+          case None => done = true
+          case Some(t) =>
+            z = t.theta
+            pass = t.pass
+            ce = axpy(-1.0, b, pass.s)
+            if (norm2(d.map(_ * t.alpha)) < options.stepTol) {
+              converged = true; done = true
+            }
+        }
+      }
+    }
+    Outcome(z, link, converged, steps, ce, z.map(-_), None, pass.fval,
+      if (converged) "" else "penalty solve did not converge")
+  }
 }

@@ -18,9 +18,11 @@ import DriverLinalg.{axpy, norm2}
  * the full dataset computing every group's (Ce, Gram) — G problems cost one
  * scan, not G scans. Driver state is a k-vector per group; converged groups
  * freeze (their rows stop contributing Gram work via a skip check). The
- * same round pass serves the exact solver (dual Newton, optional elastic
+ * same round loop ([[solveGroups]]: validation, large-k routing, round
+ * pass, output) serves the exact solver (dual Newton, optional elastic
  * bounds with per-group auto-eta) and the penalty solver (fixed point
- * z = P(A'Phi(z) - b), link = clip(exp(-t)) i.e. eta = -1).
+ * z = P(A'Phi(z) - b), link = clip(exp(-t)) i.e. eta = -1); each supplies
+ * only its per-group step.
  */
 object GroupedEntropyBalance {
 
@@ -68,27 +70,8 @@ object GroupedEntropyBalance {
       rows: RDD[GRow], nG: Int, k: Int): (Array[Double], Long) = {
     val w0Stats = rows.treeAggregate(new Array[Double](nG + 2))(
       (buf, r) => {
-        var bad = r.w0.isNaN || r.w0.isInfinite || r.w0 <= 0.0 || r.vals == null
-        var nnz = 0
-        if (!bad) {
-          if (r.idx == null) {
-            if (r.vals.length != k) bad = true
-          } else {
-            if (r.idx.length != r.vals.length) bad = true
-            else if (r.idx.length > 0 &&
-                (r.idx(r.idx.length - 1) >= k || r.idx(0) < 0)) bad = true
-          }
-        }
-        if (!bad) {
-          var p = 0
-          while (p < r.vals.length && !bad) {
-            val v = r.vals(p)
-            if (v.isNaN || v.isInfinite) bad = true
-            else if (v != 0.0) nnz += 1
-            p += 1
-          }
-        }
-        if (bad) buf(nG) += 1
+        val nnz = EbwAggregator.rowNnz(r.idx, r.vals, r.w0, k)
+        if (nnz < 0) buf(nG) += 1
         else {
           buf(r.g) += r.w0
           buf(nG + 1) += nnz.toDouble * (nnz + 1) / 2
@@ -121,6 +104,14 @@ object GroupedEntropyBalance {
       val span = k.toLong * k
       sparseGram.slice(g * span, (g + 1) * span)
     }
+    /** Group g's Newton direction: (sign*G_g + diag + ridge*I) d = rhs,
+     * by Cholesky on the dense Gram or Jacobi-CG on the sparse one. */
+    def direction(g: Int, diag: Array[Double], rhs: Array[Double],
+        ridge: Double, sign: Double): Array[Double] =
+      if (sparse) {
+        val gram = gramSparse(g)
+        DriverLinalg.cgSolve(k, gram.keys, gram.vals, diag, rhs, ridge, null, sign)
+      } else DriverLinalg.solveWithDiag(k, gramDense(g), diag, rhs, ridge, sign)
   }
 
   /**
@@ -302,10 +293,11 @@ object GroupedEntropyBalance {
    * the driver budget that one problem already saturates. Routing
    * (decided by the same EbwSizing envelope as the single solver, from
    * the TOTAL Σ nnz(nnz+1)/2 the validation pass measured): shard the
-   * groups across single-problem solves — each group's rows filter to
-   * its own cached RDD and the single solver engages its own
-   * distributed-Gram CG (Gram lives as an RDD, O(k) driver traffic per
-   * CG iteration, no driver ceiling) — then stitch one GroupedResult.
+   * groups across single-problem solves (`single`: the exact or penalty
+   * solver of EntropyBalance) — each group's rows filter to its own
+   * cached RDD and the single solver engages its own distributed-Gram CG
+   * (Gram lives as an RDD, O(k) driver traffic per CG iteration, no
+   * driver ceiling) — then stitch one GroupedResult.
    * Shards CO-SCHEDULE on a bounded pool (`options.shardParallelism`
    * concurrent solves; Spark's scheduler interleaves their jobs, so one
    * solve's driver-side linalg gap is another's executor time — the
@@ -319,7 +311,8 @@ object GroupedEntropyBalance {
       df: DataFrame, groupCol: String, featuresCol: String,
       weightCol: String, targets: Map[String, Array[Double]],
       outputCol: String, options: EbwOptions, names: Array[String],
-      sumW: Array[Double], lb: Double, ub: Double): GroupedResult = {
+      sumW: Array[Double], lb: Double, ub: Double,
+      single: (DataFrame, Array[Double]) => EbwResult): GroupedResult = {
     require(options.shardParallelism >= 1,
       s"shardParallelism must be >= 1: ${options.shardParallelism}")
     val k = targets(names(0)).length
@@ -330,11 +323,10 @@ object GroupedEntropyBalance {
       else {
         EbwLog.info(s"grouped distributed-Gram shard: group '$name' " +
           s"(${g + 1}/${names.length}) via the single-problem solver")
-        val res = EntropyBalance.entropyBalance(
-          df.filter(col(groupCol) === name), featuresCol, weightCol,
-          targets(name), outputCol, options)
+        val res = single(df.filter(col(groupCol) === name), targets(name))
         // effective multipliers (eta absorbed): the grouped output stage
-        // computes clip(exp(x . mult), lb, ub) with eta = 1
+        // computes clip(exp(x . mult), lb, ub) with eta = 1 (the penalty
+        // link's eta is -1, so its theta * eta is -z)
         val eff =
           if (res.link.mode == Link.CLIP) res.theta.map(_ * res.link.eta)
           else res.theta
@@ -367,6 +359,86 @@ object GroupedEntropyBalance {
     GroupedResult(weighted, results)
   }
 
+  /** Per-group state the shared round loop advances: targets b_g and
+   * their scale, the k-dim iterate theta_g (lambda for the exact solver,
+   * z for the penalty one), the link's eta_g, and the per-group outputs. */
+  private final class Groups(k: Int, val b: Array[Array[Double]], eta0: Double) {
+    val bscale: Array[Double] = b.map(bg => math.max(1.0, norm2(bg)))
+    val theta: Array[Array[Double]] = Array.fill(b.length)(new Array[Double](k))
+    val etas: Array[Double] = Array.fill(b.length)(eta0)
+    val converged = new Array[Boolean](b.length)
+    val iters = new Array[Int](b.length)
+    val ce: Array[Array[Double]] = Array.fill(b.length)(new Array[Double](k))
+  }
+
+  /** The moment dimension k every group's targets share. */
+  private def momentDim(targets: Map[String, Array[Double]]): Int = {
+    require(targets.nonEmpty)
+    val k = targets.head._2.length
+    require(targets.values.forall(_.length == k), "all groups need k moments")
+    k
+  }
+
+  /** The grouped solve behind both public entry points: prepare and
+   * validate the rows once, route by the same EbwSizing envelope as the
+   * single solver (past it, [[solveSharded]] runs `single` per group),
+   * then advance every unconverged group by one `step` per shared round
+   * pass (the link clip(exp(eta_g * t), lb, ub), eta_g starting at
+   * `eta0`) and write one output with effective multipliers
+   * eta_g * theta_g. */
+  private def solveGroups(
+      df: DataFrame, groupCol: String, featuresCol: String, weightCol: String,
+      targets: Map[String, Array[Double]], outputCol: String,
+      options: EbwOptions, k: Int, eta0: Double,
+      single: (DataFrame, Array[Double]) => EbwResult)(
+      step: (Groups, RoundData, Int) => Unit): GroupedResult = {
+    val names = targets.keys.toArray.sorted
+    val nG = names.length
+    val rows = prepGRows(df, groupCol, featuresCol, weightCol,
+      names.zipWithIndex.toMap, nG, k)
+    try {
+      val (sumW, sumPairs) = validateSumW(rows, nG, k)
+      val (lb, ub) = EntropyBalance.ratioBounds(options)
+      // distributed-Gram tier: the shared sparse pass merges the SUM of
+      // all groups' Gram patterns on the driver — shard into per-group
+      // distributed solves when that exceeds the envelope
+      val route = EbwSizing.route(rows.sparkContext, k, sumPairs,
+        rows.getNumPartitions, options)
+      for ((plan, dist) <- route)
+        EbwLog.info(s"grouped sparse Gram sizing: nG=$nG " +
+          s"sumPairs=$sumPairs mode=${if (dist) "sharded-distributed"
+            else "shared-driver"} (${plan.why})")
+      if (route.exists(_._2))
+        return solveSharded(df, groupCol, featuresCol, weightCol, targets,
+          outputCol, options, names, sumW, lb, ub, single)
+      val st = new Groups(k,
+        Array.tabulate(nG)(g => targets(names(g)).map(_ * sumW(g))), eta0)
+      val maxRounds =
+        if (options.bounds.isDefined) options.maxStepsBounded else options.maxSteps
+      var round = 0
+      while (round < maxRounds && !st.converged.forall(identity)) {
+        val rd = roundPass(rows, nG, k, st.theta, st.etas, st.converged,
+          lb, ub, route.isDefined)
+        var g = 0
+        while (g < nG) {
+          if (!st.converged(g)) {
+            st.ce(g) = axpy(-1.0, st.b(g), rd.s(g))
+            step(st, rd, g)
+          }
+          g += 1
+        }
+        round += 1
+      }
+      val mult = Array.tabulate(nG)(g => st.theta(g).map(_ * st.etas(g)))
+      val weighted = weightedOutput(df, groupCol, featuresCol, weightCol,
+        outputCol, names, mult, lb, ub)
+      val results = names.indices.map { g =>
+        names(g) -> GroupResult(st.converged(g), st.iters(g), mult(g), st.ce(g))
+      }.toMap
+      GroupedResult(weighted, results)
+    } finally rows.unpersist(false)
+  }
+
   /**
    * Solve one unbounded (or elastic-bounded) EBW problem per distinct value
    * of `groupCol`. `targets(g)` are mean population moments for group g;
@@ -393,150 +465,77 @@ object GroupedEntropyBalance {
       targets: Map[String, Array[Double]],
       outputCol: String = "weight_new",
       options: EbwOptions = EbwOptions()): GroupedResult = {
-    require(targets.nonEmpty)
-    val k = targets.head._2.length
-    require(targets.values.forall(_.length == k), "all groups need k moments")
-    val names = targets.keys.toArray.sorted
-    val gIdx = names.zipWithIndex.toMap
-    val nG = names.length
-    val rows = prepGRows(df, groupCol, featuresCol, weightCol, gIdx, nG, k)
-
-    try {
-      val (sumW, sumPairs) = validateSumW(rows, nG, k)
-      val b = Array.tabulate(nG)(g => targets(names(g)).map(_ * sumW(g)))
-      val bscale = Array.tabulate(nG)(g => math.max(1.0, norm2(b(g))))
-
-      // Unified link: r = clip(exp(eta_g * t), lb, ub). Unbounded mode is
-      // lb=0, ub=inf, eta fixed at 1 (clip inert, no box on lambda);
-      // bounded/elastic mode box-projects lambda into [-1,1]^k and
-      // auto-grows each group's eta independently (SURVEY.md §3).
-      val bounded = options.bounds.isDefined
-      val (lbRaw, ubOpt) = options.bounds.getOrElse((0.0, None: Option[Double]))
-      val lb = math.max(0.0, lbRaw)
-      val ub = ubOpt.getOrElse(Double.PositiveInfinity)
-
-      // distributed-Gram tier: the shared sparse pass merges the SUM of
-      // all groups' Gram patterns on the driver — route to sequential
-      // per-group distributed solves when that exceeds the envelope
-      if (k > options.denseGramMax) {
-        require(Set("auto", "driver", "distributed")(options.gramMode),
-          s"gramMode must be auto|driver|distributed: ${options.gramMode}")
-        val sc = rows.sparkContext
-        val maxResult =
-          sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
-        val maxHeap = Runtime.getRuntime.maxMemory
-        val plan = EbwSizing.plan(k, sumPairs, rows.getNumPartitions,
-          maxResult, maxHeap, cores = sc.defaultParallelism)
-        val dist = options.gramMode match {
-          case "driver" =>
-            EbwSizing.requireDriverFits(plan, maxResult, maxHeap); false
-          case "distributed" => true
-          case _ => plan.distributedGram
+    val k = momentDim(targets)
+    // Unified link: r = clip(exp(eta_g * t), lb, ub). Unbounded mode is
+    // lb=0, ub=inf, eta fixed at 1 (clip inert, no box on lambda);
+    // bounded/elastic mode box-projects lambda into [-1,1]^k and
+    // auto-grows each group's eta independently (SURVEY.md §3).
+    val bounded = options.bounds.isDefined
+    val etaFixed = options.eta.isDefined
+    solveGroups(df, groupCol, featuresCol, weightCol, targets, outputCol,
+      options, k, eta0 = if (bounded) options.eta.getOrElse(1.0) else 1.0,
+      (sub, m) => EntropyBalance.entropyBalance(sub, featuresCol, weightCol,
+        m, outputCol, options)) { (st, rd, g) =>
+      val lambda = st.theta(g)
+      val ce = st.ce(g)
+      // projected gradient: pin box-saturated coordinates pushing out
+      val pg = ce.map(-_)
+      if (bounded) {
+        var j = 0
+        while (j < k) {
+          if (lambda(j) >= 1.0 - 1e-12 && pg(j) > 0) pg(j) = 0.0
+          if (lambda(j) <= -1.0 + 1e-12 && pg(j) < 0) pg(j) = 0.0
+          j += 1
         }
-        EbwLog.info(s"grouped sparse Gram sizing: nG=$nG " +
-          s"sumPairs=$sumPairs mode=${if (dist) "sharded-distributed"
-            else "shared-driver"} (${plan.why})")
-        if (dist)
-          return solveSharded(df, groupCol, featuresCol, weightCol,
-            targets, outputCol, options, names, sumW, lb, ub)
       }
-      val etaFixed = options.eta.isDefined
-      val etas = Array.fill(nG)(if (bounded) options.eta.getOrElse(1.0) else 1.0)
-
-      val lambda = Array.fill(nG)(new Array[Double](k))
-      val converged = new Array[Boolean](nG)
-      val iters = new Array[Int](nG)
-      val ceOut = Array.fill(nG)(new Array[Double](k))
-      var round = 0
-      val maxRounds = if (bounded) options.maxStepsBounded else options.maxSteps
-      val sparseGram = k > options.denseGramMax
-
-      while (round < maxRounds && !converged.forall(identity)) {
-        val rd = roundPass(rows, nG, k, lambda, etas, converged, lb, ub, sparseGram)
-        var g = 0
-        while (g < nG) {
-          if (!converged(g)) {
-            val s = rd.s(g)
-            val ce = axpy(-1.0, b(g), s)
-            ceOut(g) = ce
-            // projected gradient: pin box-saturated coordinates pushing out
-            val pg = ce.map(-_)
-            if (bounded) {
-              var j = 0
-              while (j < k) {
-                if (lambda(g)(j) >= 1.0 - 1e-12 && pg(j) > 0) pg(j) = 0.0
-                if (lambda(g)(j) <= -1.0 + 1e-12 && pg(j) < 0) pg(j) = 0.0
-                j += 1
-              }
-            }
-            val viol = norm2(pg)
-            if (viol <= options.optimalityTol * bscale(g)) {
-              // feasibility refinement: pinned with residual violation and
-              // growable eta -> retry at 10x (elastic auto-eta per group)
-              val pinnedAny = bounded && lambda(g).exists(l => math.abs(l) >= 1.0 - 1e-9)
-              if (bounded && !etaFixed && pinnedAny &&
-                  norm2(ce) > options.optimalityTol * bscale(g) && etas(g) < 1e7) {
-                val old = etas(g)
-                etas(g) *= 10.0
-                var j = 0
-                while (j < k) {
-                  lambda(g)(j) = math.max(-1.0, math.min(1.0, lambda(g)(j) * old / etas(g)))
-                  j += 1
-                }
-              } else converged(g) = true
-            } else {
-              val ridge = math.max(1e-8, 1e-5 * math.pow(viol / bscale(g), 0.55))
-              val d =
-                if (rd.sparse) {
-                  val gram = rd.gramSparse(g)
-                  DriverLinalg.cgSolve(k, gram.keys, gram.vals,
-                    new Array[Double](k), pg, ridge, null)
-                }
-                else DriverLinalg.solveRidged(k, rd.gramDense(g), pg, ridge)
-              // damped full step: groups share the pass, so no individual
-              // line search — cap the step to keep exp() sane instead
-              val dn = d.map(math.abs).max
-              val cap = if (bounded) 2.0 else 30.0
-              val scale = if (dn > cap) cap / dn else 1.0
-              var j = 0
-              while (j < k) {
-                val next = lambda(g)(j) + scale * d(j)
-                lambda(g)(j) =
-                  if (bounded) math.max(-1.0, math.min(1.0, next)) else next
-                j += 1
-              }
-              iters(g) += 1
-              // step-size exit (shared.py:57), guarded by a loose
-              // feasibility check as in the single unbounded solver —
-              // stops groups from spinning at the noise floor
-              if (norm2(d) * scale < options.stepTol &&
-                  norm2(ce) < 1e-3 * bscale(g)) converged(g) = true
-            }
+      val viol = norm2(pg)
+      if (viol <= options.optimalityTol * st.bscale(g)) {
+        // feasibility refinement: pinned with residual violation and
+        // growable eta -> retry at 10x (elastic auto-eta per group)
+        val pinnedAny = bounded && lambda.exists(l => math.abs(l) >= 1.0 - 1e-9)
+        if (bounded && !etaFixed && pinnedAny &&
+            norm2(ce) > options.optimalityTol * st.bscale(g) && st.etas(g) < 1e7) {
+          val old = st.etas(g)
+          st.etas(g) *= 10.0
+          var j = 0
+          while (j < k) {
+            lambda(j) = math.max(-1.0, math.min(1.0, lambda(j) * old / st.etas(g)))
+            j += 1
           }
-          g += 1
+        } else st.converged(g) = true
+      } else {
+        val ridge = math.max(1e-8, 1e-5 * math.pow(viol / st.bscale(g), 0.55))
+        val d = rd.direction(g, new Array[Double](k), pg, ridge, 1.0)
+        // damped full step: groups share the pass, so no individual
+        // line search — cap the step to keep exp() sane instead
+        val dn = d.map(math.abs).max
+        val cap = if (bounded) 2.0 else 30.0
+        val scale = if (dn > cap) cap / dn else 1.0
+        var j = 0
+        while (j < k) {
+          val next = lambda(j) + scale * d(j)
+          lambda(j) = if (bounded) math.max(-1.0, math.min(1.0, next)) else next
+          j += 1
         }
-        round += 1
+        st.iters(g) += 1
+        // step-size exit (shared.py:57), guarded by a loose
+        // feasibility check as in the single unbounded solver —
+        // stops groups from spinning at the noise floor
+        if (norm2(d) * scale < options.stepTol &&
+            norm2(ce) < 1e-3 * st.bscale(g)) st.converged(g) = true
       }
-
-      // effective multipliers are eta_g * lambda_g: r = clip(exp(x . mult))
-      val mult = Array.tabulate(nG)(g => lambda(g).map(_ * etas(g)))
-      val weighted = weightedOutput(df, groupCol, featuresCol, weightCol,
-        outputCol, names, mult, lb, ub)
-      val results = names.indices.map { g =>
-        names(g) -> GroupResult(converged(g), iters(g), mult(g), ceOut(g))
-      }.toMap
-      GroupedResult(weighted, results)
-    } finally rows.unpersist(false)
+    }
   }
 
   /**
    * Grouped quadratic-penalty EBW: one penalty problem
    * min phi(r) + 1/2 (A'r - b_g)' P (A'r - b_g) per group, optionally with
    * ratio bounds — the grouped analogue of entropy_balance_penalty
-   * (ebw_penalty.py:17-399). Same per-round shared pass as the exact
-   * grouped solver with the penalty link r = clip(exp(-t), lb, ub)
-   * (eta = -1); per group the driver iterates the k-dim fixed point
-   * F(z) = z - P Ce(z) with damped Newton steps (P^-1 + G) d = -P^-1 F.
+   * (ebw_penalty.py:17-399). Same per-round shared pass and the same
+   * large-k routing as the exact grouped solver, with the penalty link
+   * r = clip(exp(-t), lb, ub) (eta = -1); per group the driver iterates
+   * the k-dim fixed point F(z) = z - P Ce(z) with damped Newton steps
+   * (P^-1 + G) d = -P^-1 F.
    */
   def entropyBalancePenaltyGrouped(
       df: DataFrame,
@@ -547,93 +546,39 @@ object GroupedEntropyBalance {
       penaltyParameter: Array[Double],
       outputCol: String = "weight_new",
       options: EbwOptions = EbwOptions()): GroupedResult = {
-    require(targets.nonEmpty)
-    val k = targets.head._2.length
-    require(targets.values.forall(_.length == k), "all groups need k moments")
-    val pen =
-      if (penaltyParameter.length == 1) Array.fill(k)(penaltyParameter(0))
-      else penaltyParameter
-    if (pen.length != k)
-      throw new IllegalArgumentException("Penalties must be one per moment.")
-    if (!pen.forall(_ > 0.0))
-      throw new IllegalArgumentException("Penalty parameters must be strictly positive.")
+    val k = momentDim(targets)
+    val pen = EntropyBalance.penaltyVector(penaltyParameter, k)
     val invP = pen.map(1.0 / _)
-    val names = targets.keys.toArray.sorted
-    val gIdx = names.zipWithIndex.toMap
-    val nG = names.length
-    val rows = prepGRows(df, groupCol, featuresCol, weightCol, gIdx, nG, k)
-
-    try {
-      val (sumW, _) = validateSumW(rows, nG, k)
-      val b = Array.tabulate(nG)(g => targets(names(g)).map(_ * sumW(g)))
-      val bscale = Array.tabulate(nG)(g => math.max(1.0, norm2(b(g))))
-      val (lbRaw, ubOpt) = options.bounds.getOrElse((0.0, None: Option[Double]))
-      val lb = math.max(0.0, lbRaw)
-      val ub = ubOpt.getOrElse(Double.PositiveInfinity)
-      // penalty link: r = clip(exp(-t), lb, ub) == clip link with eta = -1;
-      // the aggregated "Gram" is then dS/dz = -G (sign handled at the solve)
-      val etas = Array.fill(nG)(-1.0)
-
-      val z = Array.fill(nG)(new Array[Double](k))
-      val converged = new Array[Boolean](nG)
-      val iters = new Array[Int](nG)
-      val ceOut = Array.fill(nG)(new Array[Double](k))
-      var round = 0
-      val maxRounds =
-        if (options.bounds.isDefined) options.maxStepsBounded else options.maxSteps
-      val sparseGram = k > options.denseGramMax
-
-      while (round < maxRounds && !converged.forall(identity)) {
-        val rd = roundPass(rows, nG, k, z, etas, converged, lb, ub, sparseGram)
-        var g = 0
-        while (g < nG) {
-          if (!converged(g)) {
-            val s = rd.s(g)
-            val ce = axpy(-1.0, b(g), s)
-            ceOut(g) = ce
-            val f = new Array[Double](k)
-            var i = 0
-            while (i < k) { f(i) = z(g)(i) - pen(i) * ce(i); i += 1 }
-            val fNorm = norm2(f)
-            if (fNorm <= options.optimalityTol * math.max(1.0, norm2(z(g)))) {
-              converged(g) = true
-            } else {
-              val rhs = new Array[Double](k)
-              i = 0
-              while (i < k) { rhs(i) = -invP(i) * f(i); i += 1 }
-              val ridge = math.max(1e-10, 1e-7 * fNorm / bscale(g))
-              val d =
-                if (rd.sparse) {
-                  val gram = rd.gramSparse(g)
-                  DriverLinalg.cgSolve(k, gram.keys, gram.vals, invP, rhs,
-                    ridge, null, sign = -1.0)
-                }
-                else DriverLinalg.solveWithDiag(k, rd.gramDense(g).map(-_),
-                  invP, rhs, ridge)
-              val dn = d.map(math.abs).max
-              val scale = if (dn > 30.0) 30.0 / dn else 1.0
-              i = 0
-              while (i < k) { z(g)(i) += scale * d(i); i += 1 }
-              iters(g) += 1
-              // step-size exit (shared.py:57 semantics, as in the single
-              // solver): once steps shrink below stepTol the iterate is
-              // done — without this, groups spin at the ||F|| noise floor
-              if (norm2(d) * scale < options.stepTol) converged(g) = true
-            }
-          }
-          g += 1
-        }
-        round += 1
+    // the aggregated "Gram" under eta = -1 is dS/dz = -G: sign = -1 at
+    // the solve; the effective multipliers eta * z are -z
+    solveGroups(df, groupCol, featuresCol, weightCol, targets, outputCol,
+      options, k, eta0 = -1.0,
+      (sub, m) => EntropyBalance.entropyBalancePenalty(sub, featuresCol,
+        weightCol, m, pen, outputCol, options)) { (st, rd, g) =>
+      val z = st.theta(g)
+      val ce = st.ce(g)
+      val f = new Array[Double](k)
+      var i = 0
+      while (i < k) { f(i) = z(i) - pen(i) * ce(i); i += 1 }
+      val fNorm = norm2(f)
+      if (fNorm <= options.optimalityTol * math.max(1.0, norm2(z))) {
+        st.converged(g) = true
+      } else {
+        val rhs = new Array[Double](k)
+        i = 0
+        while (i < k) { rhs(i) = -invP(i) * f(i); i += 1 }
+        val ridge = math.max(1e-10, 1e-7 * fNorm / st.bscale(g))
+        val d = rd.direction(g, invP, rhs, ridge, -1.0)
+        val dn = d.map(math.abs).max
+        val scale = if (dn > 30.0) 30.0 / dn else 1.0
+        i = 0
+        while (i < k) { z(i) += scale * d(i); i += 1 }
+        st.iters(g) += 1
+        // step-size exit (shared.py:57 semantics, as in the single
+        // solver): once steps shrink below stepTol the iterate is
+        // done — without this, groups spin at the ||F|| noise floor
+        if (norm2(d) * scale < options.stepTol) st.converged(g) = true
       }
-
-      // ratio = clip(exp(-x . z), lb, ub): effective multipliers are -z
-      val mult = Array.tabulate(nG)(g => z(g).map(-_))
-      val weighted = weightedOutput(df, groupCol, featuresCol, weightCol,
-        outputCol, names, mult, lb, ub)
-      val results = names.indices.map { g =>
-        names(g) -> GroupResult(converged(g), iters(g), mult(g), ceOut(g))
-      }.toMap
-      GroupedResult(weighted, results)
-    } finally rows.unpersist(false)
+    }
   }
 }

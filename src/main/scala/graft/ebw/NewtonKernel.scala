@@ -1,0 +1,82 @@
+package graft.ebw
+
+import org.apache.spark.storage.StorageLevel
+
+import EbwAggregator.Pass
+
+/**
+ * The dual Newton kernel every single-problem EBW mode runs on (SURVEY.md
+ * §3): one prepared problem (cached rows, k) and its Gram route — dense
+ * (no `plan`), sparse merged on the driver, or `distributed`. Each mode
+ * keeps only its own math (objective and acceptance test, box projection
+ * with eta growth, fixed point) and reaches the data through three calls:
+ *  - [[pass]]: one aggregation pass at theta;
+ *  - [[direction]]: one Newton system solve;
+ *  - [[backtrack]]: the halving line search, one pass per trial.
+ * It lives on the driver: RDD closures only ever see the arrays and links
+ * it passes down to EbwAggregator.
+ */
+private[ebw] final class NewtonKernel(
+    val prep: EntropyBalance.Prepared,
+    plan: Option[EbwSizing.Plan],
+    distributed: Boolean) {
+  import NewtonKernel.Step
+
+  val k: Int = prep.k
+  private def rows = prep.rows
+
+  /** s, fval, wrsum and the Gram at theta: the packed dense triangle, the
+   * key-sorted sparse Gram (merged at the plan's tree depth), or — on the
+   * distributed route — no Gram (line-search trials only need the dual
+   * objective; [[direction]] builds the Gram once per accepted iterate). */
+  def pass(theta: Array[Double], link: Link): Pass = plan match {
+    case None => EbwAggregator.run(rows, k, theta, link)
+    case Some(_) if distributed => EbwAggregator.runStats(rows, k, theta, link)
+    case Some(p) => EbwAggregator.runSparse(rows, k, theta, link, p.depth)
+  }
+
+  /** Solve (sign*G + diag + ridge*I) d = rhs for the Gram G of `pass` at
+   * (theta, link), over the coordinates `free` marks (all when null;
+   * masked ones get d = 0): Cholesky on the dense Gram (restricted to the
+   * free subset when masked), Jacobi-CG on the driver-merged sparse Gram,
+   * or Jacobi-CG with distributed matvecs over the Gram rebuilt at theta
+   * as an RDD. */
+  def direction(pass: Pass, theta: Array[Double], link: Link,
+      rhs: Array[Double], diag: Array[Double], ridge: Double,
+      free: Array[Boolean], sign: Double): Array[Double] =
+    if (distributed) {
+      val g = EbwAggregator.gramRdd(rows, k, theta, link,
+          EbwSizing.gramAggParts(plan.get,
+            Runtime.getRuntime.maxMemory,
+            rows.sparkContext.defaultParallelism))
+        .persist(StorageLevel.MEMORY_AND_DISK_SER)
+      try DriverLinalg.cgSolveRdd(g, k, diag, rhs, ridge, free, sign)
+      finally g.unpersist(false)
+    } else if (pass.isSparse)
+      DriverLinalg.cgSolve(k, pass.gramKeys, pass.gramVals, diag, rhs, ridge,
+        free, sign)
+    else DriverLinalg.solveWithDiag(k, pass.gram, diag, rhs, ridge, sign,
+      if (free == null) null else (0 until k).filter(free(_)).toArray)
+
+  /** Backtracking line search: trial steps alpha = 1, 1/2, 1/4, ... (at
+   * most `trials`), each costing one pass at the candidate `at(alpha)`;
+   * returns the first step `accept` takes, or None. */
+  def backtrack(link: Link, trials: Int)(at: Double => Array[Double])(
+      accept: Step => Boolean): Option[Step] = {
+    var alpha = 1.0
+    var trial = 0
+    while (trial < trials) {
+      val theta = at(alpha)
+      val step = Step(alpha, theta, pass(theta, link))
+      if (accept(step)) return Some(step)
+      alpha /= 2.0
+      trial += 1
+    }
+    None
+  }
+}
+
+private[ebw] object NewtonKernel {
+  /** One line-search trial: step length, candidate iterate and its pass. */
+  final case class Step(alpha: Double, theta: Array[Double], pass: Pass)
+}

@@ -35,10 +35,10 @@ class EbwSolverSpec extends AnyFunSuite {
       "(test_equations.py::test_criterion_hess analogue in dual space)") {
     // The kernel contract every solver mode relies on: s_i(theta) =
     // sum w0 r(t) x_i and Gram_ij = sum w0 r'(t) x_i x_j, i.e. the packed
-    // Gram IS the Jacobian ds/dtheta (negated for NEGEXP, whose slope
-    // aggregates as +Gram by convention). Verified by finite differences
-    // against the distributed aggregate itself — dense and sparse row
-    // encodings must agree too. Deterministic seed keeps the CLIP case
+    // Gram IS the Jacobian ds/dtheta — for the penalty link
+    // clip(exp(-t)) too, whose slope -exp(-t) aggregates as dS/dz = -G.
+    // Verified by finite differences against the distributed aggregate
+    // itself — dense and sparse row encodings must agree too. Deterministic seed keeps the CLIP case
     // away from measure-zero clip boundaries.
     val rng = new scala.util.Random(155)
     val n = 60
@@ -52,7 +52,8 @@ class EbwSolverSpec extends AnyFunSuite {
     val rddS = spark.sparkContext.parallelize(sparse, 4)
     val theta = Array.fill(k)(rng.nextDouble() * 0.4 - 0.2)
     val eps = 1e-6
-    for (link <- Seq(Link.exp, Link.clip(1.3, 0.7, 1.4), Link.negexp)) {
+    for (link <- Seq(Link.exp, Link.clip(1.3, 0.7, 1.4),
+        Link.clip(-1.0, 0.0, Double.PositiveInfinity))) {
       val p0 = EbwAggregator.run(rdd, k, theta, link)
       val p0s = EbwAggregator.run(rddS, k, theta, link)
       for (i <- 0 until k) {
@@ -78,15 +79,14 @@ class EbwSolverSpec extends AnyFunSuite {
           s"${p0.gram.count(_ != 0.0)} nonzeros")
       for (p <- 1 until pSp.gramKeys.length)
         assert(pSp.gramKeys(p - 1) < pSp.gramKeys(p), s"sparse-gram key order at $p")
-      val sign = if (link.mode == Link.NEGEXP) -1.0 else 1.0
       for (j <- 0 until k) {
         val tj = theta.clone(); tj(j) += eps
         val pj = EbwAggregator.run(rdd, k, tj, link)
         for (i <- 0 until k) {
           val fd = (pj.s(i) - p0.s(i)) / eps
           val g = p0.gram(EbwAggregator.pidx(k, math.min(i, j), math.max(i, j)))
-          assert(math.abs(fd - sign * g) < 1e-3 * (1.0 + math.abs(g)),
-            s"link mode ${link.mode}: ds_$i/dtheta_$j fd=$fd gram=${sign * g}")
+          assert(math.abs(fd - g) < 1e-3 * (1.0 + math.abs(g)),
+            s"link $link: ds_$i/dtheta_$j fd=$fd gram=$g")
         }
       }
     }
@@ -259,14 +259,28 @@ class EbwSolverSpec extends AnyFunSuite {
     val sample = Array.fill(300)(Array.fill(k)(rng.nextDouble()))
     val m = Array.tabulate(k)(j => sample.map(_(j)).sum / 300.0)
     val df = denseDf(x, Array.fill(n)(1.0))
-    val dense = EntropyBalance.entropyBalance(df, "feat", "w0", m,
-      options = EbwOptions(optimalityTol = 1e-9))
-    val sparse = EntropyBalance.entropyBalance(df, "feat", "w0", m,
-      options = EbwOptions(optimalityTol = 1e-9, denseGramMax = 1)) // force CG
-    assert(dense.converged && sparse.converged)
-    val dl = dense.equalityMultipliers.zip(sparse.equalityMultipliers)
-      .map { case (a, b) => math.abs(a - b) }.max
-    assert(dl < 1e-6, s"paths disagree by $dl")
+    // every mode on every Gram route of the Newton kernel: dense
+    // Cholesky (default denseGramMax) against driver CG and CG with
+    // distributed matvecs (denseGramMax = 1 forces the sparse path)
+    val modes: Seq[(String, EbwOptions => EbwResult)] = Seq(
+      "unbounded" -> (o => EntropyBalance.entropyBalance(df, "feat", "w0", m,
+        options = o)),
+      "elastic" -> (o => EntropyBalance.entropyBalance(df, "feat", "w0", m,
+        options = o.copy(bounds = Some((0.5, Some(2.0)))))),
+      "penalty" -> (o => EntropyBalance.entropyBalancePenalty(df, "feat", "w0",
+        m, Array(10.0), options = o)))
+    val base = EbwOptions(optimalityTol = 1e-9)
+    for ((mode, solve) <- modes) {
+      val dense = solve(base)
+      assert(dense.converged, s"$mode dense")
+      for (gramMode <- Seq("auto", "driver", "distributed")) {
+        val sparse = solve(base.copy(denseGramMax = 1, gramMode = gramMode)) // force CG
+        assert(sparse.converged, s"$mode $gramMode")
+        val dl = dense.equalityMultipliers.zip(sparse.equalityMultipliers)
+          .map { case (a, b) => math.abs(a - b) }.max
+        assert(dl < 1e-6, s"$mode $gramMode: paths disagree by $dl")
+      }
+    }
   }
 
   test("large-k one-hot design runs the sparse path to the closed form") {
@@ -421,20 +435,27 @@ class EbwSolverSpec extends AnyFunSuite {
   test("save_problem_data / save_failure_data options (shared.py::dump, test_dump.py)") {
     val tmp = graft.ops.Scratch.dir("dump")
     val df = denseDf(Array(Array(1.0), Array(2.0)), Array(1.0, 1.0))
-    // success: problem dumped, failure file absent
-    EntropyBalance.entropyBalance(df, "feat", "w0", Array(1.5),
-      options = EbwOptions(saveProblemData = Some(s"$tmp/ok"),
-        saveFailureData = Some(s"$tmp/okfail")))
-    assert(new java.io.File(s"$tmp/ok/meta").exists())
-    assert(!new java.io.File(s"$tmp/okfail").exists())
-    val (loaded, m2) = ProblemIO.load(spark, s"$tmp/ok")
-    assert(m2.toSeq == Seq(1.5) && loaded.count() == 2)
-    // infeasible (negative target with positive x is unreachable for any
-    // positive weights) -> failure dump written
-    val bad = EntropyBalance.entropyBalance(df, "feat", "w0", Array(-1.0),
-      options = EbwOptions(maxSteps = 5, saveFailureData = Some(s"$tmp/fail")))
-    assert(!bad.converged)
-    assert(new java.io.File(s"$tmp/fail/meta").exists())
+    // (mode, steps that leave the failing input unconverged, solve)
+    val modes: Seq[(String, Int, (Array[Double], EbwOptions) => EbwResult)] = Seq(
+      ("exact", 5, (m, o) => EntropyBalance.entropyBalance(df, "feat", "w0", m,
+        options = o)),
+      ("penalty", 1, (m, o) => EntropyBalance.entropyBalancePenalty(df, "feat",
+        "w0", m, Array(1.0), options = o)))
+    for ((mode, failSteps, solve) <- modes) {
+      // success: problem dumped, failure file absent
+      assert(solve(Array(1.5), EbwOptions(saveProblemData = Some(s"$tmp/$mode-ok"),
+        saveFailureData = Some(s"$tmp/$mode-okfail"))).converged, mode)
+      assert(new java.io.File(s"$tmp/$mode-ok/meta").exists(), mode)
+      assert(!new java.io.File(s"$tmp/$mode-okfail").exists(), mode)
+      val (loaded, m2) = ProblemIO.load(spark, s"$tmp/$mode-ok")
+      assert(m2.toSeq == Seq(1.5) && loaded.count() == 2, mode)
+      // infeasible (negative target with positive x is unreachable for any
+      // positive weights) -> failure dump written
+      val bad = solve(Array(-1.0), EbwOptions(maxSteps = failSteps,
+        saveFailureData = Some(s"$tmp/$mode-fail")))
+      assert(!bad.converged, mode)
+      assert(new java.io.File(s"$tmp/$mode-fail/meta").exists(), mode)
+    }
   }
 
   test("auto-eta grows until feasible bounded problems match exactly") {

@@ -129,7 +129,8 @@ class GramTableSpec extends AnyFunSuite {
     // 3 rows in 8 partitions: at least 5 partials are empty
     val rdd = spark.sparkContext.parallelize(rows, 8)
     val theta = Array(0.1, -0.2, 0.05, 0.0, 0.3, -0.1)
-    for (link <- Seq(Link.exp, Link.clip(1.3, 0.7, 1.4), Link.negexp); depth <- Seq(2, 3)) {
+    for (link <- Seq(Link.exp, Link.clip(1.3, 0.7, 1.4),
+        Link.clip(-1.0, 0.0, Double.PositiveInfinity)); depth <- Seq(2, 3)) {
       val dense = EbwAggregator.run(rdd, k, theta, link)
       val sp = EbwAggregator.runSparse(rdd, k, theta, link, depth)
       assert(sp.count == 3)
@@ -141,7 +142,7 @@ class GramTableSpec extends AnyFunSuite {
       for (i <- 0 until k; j <- i until k) {
         val v = got.getOrElse(i.toLong * k + j, 0.0)
         assert(math.abs(v - dense.gram(EbwAggregator.pidx(k, i, j))) < 1e-12,
-          s"gram ($i,$j) link ${link.mode} depth $depth")
+          s"gram ($i,$j) link $link depth $depth")
       }
       // every stored key is a real upper-triangle cell
       assert(sp.gramKeys.forall(key => key % k >= key / k))

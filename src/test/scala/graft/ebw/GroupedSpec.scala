@@ -226,21 +226,32 @@ class GroupedSpec extends AnyFunSuite {
       .collect().map(_.getString(0))
     val targets = statuses.map(s => s -> Array.fill(k)(1.0 / k)).toMap
     val opts = EbwOptions(optimalityTol = 1e-10)
-    val grouped = GroupedEntropyBalance.entropyBalancePenaltyGrouped(
-      dfv, "o_orderstatus", "feat", "w0", targets, Array(2.0), options = opts)
-    assert(grouped.allConverged,
-      grouped.groups.map { case (g, r) => s"$g:${r.converged}" }.mkString(","))
-    val gw = grouped.weighted.select(col("o_orderkey"), col("weight_new"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    for (s <- statuses) {
-      val sub = dfv.filter(col("o_orderstatus") === s)
-      val solo = EntropyBalance.entropyBalancePenalty(sub, "feat", "w0",
-        Array.fill(k)(1.0 / k), Array(2.0), options = opts)
-      assert(solo.converged)
-      val soloW = solo.weighted.select(col("o_orderkey"), col("weight_new"))
+    // the shared dense round pass, and the sharded tier (every group a
+    // single-problem solve on the distributed-Gram route)
+    for (gOpts <- Seq(opts, opts.copy(denseGramMax = 1, gramMode = "distributed"))) {
+      val grouped = GroupedEntropyBalance.entropyBalancePenaltyGrouped(
+        dfv, "o_orderstatus", "feat", "w0", targets, Array(2.0), options = gOpts)
+      assert(grouped.allConverged,
+        grouped.groups.map { case (g, r) => s"$g:${r.converged}" }.mkString(","))
+      val gw = grouped.weighted.select(col("o_orderkey"), col("weight_new"))
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val maxDiff = soloW.map { case (id, w) => math.abs(w - gw(id)) }.max
-      assert(maxDiff < 1e-7, s"status $s penalty weights differ by $maxDiff")
+      for (s <- statuses) {
+        val sub = dfv.filter(col("o_orderstatus") === s)
+        val solo = EntropyBalance.entropyBalancePenalty(sub, "feat", "w0",
+          Array.fill(k)(1.0 / k), Array(2.0), options = opts)
+        assert(solo.converged)
+        val soloW = solo.weighted.select(col("o_orderkey"), col("weight_new"))
+          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        val maxDiff = soloW.map { case (id, w) => math.abs(w - gw(id)) }.max
+        assert(maxDiff < 1e-7,
+          s"status $s penalty weights differ by $maxDiff (${gOpts.gramMode})")
+      }
+    }
+    // the large-k route checks gramMode like the exact grouped solver
+    intercept[IllegalArgumentException] {
+      GroupedEntropyBalance.entropyBalancePenaltyGrouped(
+        dfv, "o_orderstatus", "feat", "w0", targets, Array(2.0),
+        options = opts.copy(denseGramMax = 1, gramMode = "bogus"))
     }
     // bounded grouped penalty stays within bounds
     val boundedRes = GroupedEntropyBalance.entropyBalancePenaltyGrouped(
