@@ -7,9 +7,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * EBW solver scale canary — measures the repo at the REFERENCE'S OWN
  * scale claim (/root/reference README.md:8: "millions of observations
  * and hundreds of thousands of constraints ... converged in minutes",
- * via sparse MKL + Pardiso). The repo's large-k path is a sparse-Gram
- * treeAggregate + Jacobi-preconditioned CG (EntropyBalance.scala /
- * EbwAggregator.runSparse / DriverLinalg.cgSolve); everything below
+ * via sparse MKL + Pardiso). The repo's large-k path is a sparse Gram
+ * over a per-partition pattern compiled once per solve, value-only
+ * passes after the first, + Jacobi-preconditioned CG (EntropyBalance.scala
+ * / EbwAggregator.runPattern / DriverLinalg.cgSolve); at N=1e6 on 4
+ * cores the sizing picks 5 partitions, which a depth-2 tree leaves
+ * unmerged, so the passes take the direct reduction (partials added on
+ * the driver in partition order); everything below
  * `denseGramMax` = 512 was already spec- and bench-covered, so this
  * main sweeps the ASSERTED-but-unmeasured regime: N = 1e6-1e7 rows,
  * k = 1e3 / 1e4 / 1e5 constraints.

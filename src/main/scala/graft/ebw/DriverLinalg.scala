@@ -106,7 +106,7 @@ private[ebw] object DriverLinalg {
   /**
    * Jacobi-preconditioned conjugate gradient for the large-k regime:
    * solve (sign*G + diag + ridge*I) x = rhs where G is the SPARSE upper-tri
-   * Gram from EbwAggregator.runSparse (keys = i*k+j, i <= j; any order,
+   * Gram from EbwAggregator.runPattern (keys = i*k+j, i <= j; any order,
    * repeats add up). Plays the role of pypardiso.spsolve in the reference
    * (ebw_routines.py:242-245) without needing a sparse direct
    * factorization on the driver. Keys are decoded into row/column indices

@@ -1,6 +1,7 @@
 package graft.ebw
 
 import org.apache.spark.rdd.RDD
+import org.apache.spark.storage.StorageLevel
 
 /**
  * The single distributed kernel behind every solver mode: one
@@ -17,6 +18,10 @@ import org.apache.spark.rdd.RDD
  * (ebw_routines.py:211,226-233) — here it distributes over the N dimension
  * with O(k^2) driver traffic per pass and zero shuffles (treeAggregate is a
  * reduction). Buffers are flat primitive arrays: no per-row allocation.
+ * Large k keeps the Gram sparse: [[sparsePattern]] compiles each
+ * partition's Gram pattern once per solve and [[runPattern]] fills only
+ * its values on every pass. Every pass job is launched from a method of
+ * this object.
  */
 private[ebw] object EbwAggregator {
 
@@ -113,62 +118,235 @@ private[ebw] object EbwAggregator {
   }
 
   /**
-   * Large-k variant: identical statistics, but the Gram is accumulated
-   * sparsely, keyed by i*k+j (i <= j). For group-dummy / interaction
-   * designs (the reference's "hundreds of thousands of constraints" regime,
-   * README.md "models with ... hundreds of thousands of constraints") the
-   * Gram has O(k) to O(k * nnz_row) entries, not k^2 — a packed dense
-   * buffer would be 100 MB+/task at k = 5000 while the sparse Gram stays
-   * proportional to the realized cross pattern. Each partition fills one
-   * primitive [[GramTable]] and finishes it as a key-sorted
-   * [[SortedGram]]; a [[GramSum]] adds the partials up with linear sorted
-   * merges, executor-side up the `depth`-level tree and then on the
-   * driver. `gramKeys` come back
-   * strictly ascending. Paired with the driver-side CG solve in
-   * DriverLinalg.
+   * One partition compiled against its own Gram pattern: the rows as CSR
+   * arrays (`rowPtr`, `idx`, `vals`, `w0`), the strictly ascending local
+   * Gram keys i*k+j (i <= j), and one slot per row contribution (each
+   * pair p <= q of a row's entries, in row order) giving its key's rank
+   * among `keys`. Dense rows keep their nonzero entries; sparse rows keep
+   * every listed index, zeros included, as [[GramTable.addRow]] does. The
+   * pattern is structural: it does not depend on theta or the link.
    */
-  def runSparse(rows: RDD[EbwRow], k: Int, theta: Array[Double], link: Link,
-      depth: Int = 2): Pass = {
-    val th = theta
-    val lk = link
-    val out = rows.mapPartitions { it =>
-      val s = new Array[Double](k)
-      val gram = new GramTable()
-      var fval = 0.0
-      var wrsum = 0.0
-      var count = 0L
-      while (it.hasNext) {
-        val row = it.next()
-        val vals = row.vals
-        val idx = row.idx
-        val (r, rp) = lk.rAndSlope(margin(row, th, k))
-        val w0 = row.w0
-        val wr = w0 * r
-        fval += (if (r <= 0.0) w0 else w0 * (r * math.log(r) - r + 1.0))
-        wrsum += wr
-        count += 1
-        if (idx == null) {
-          var i = 0
-          while (i < k) {
-            val vi = vals(i)
-            if (vi != 0.0) s(i) += wr * vi
-            i += 1
-          }
-        } else {
-          var p = 0
-          while (p < idx.length) { s(idx(p)) += wr * vals(p); p += 1 }
+  final class GramBlock(
+      val rowPtr: Array[Int], val idx: Array[Int], val vals: Array[Double],
+      val w0: Array[Double], val keys: Array[Long], val slots: Array[Int])
+    extends Serializable
+
+  /** Compiles one partition's rows into a [[GramBlock]]. Slots come
+   * from the key index's own probe (id -> sorted rank), not from a
+   * search over the sorted keys. */
+  def compileBlock(rows: Iterator[EbwRow], k: Int): GramBlock = {
+    val rowPtr = Array.newBuilder[Int]
+    val idx = Array.newBuilder[Int]
+    val vals = Array.newBuilder[Double]
+    val w0 = Array.newBuilder[Double]
+    val slots = Array.newBuilder[Int]
+    val index = new KeyIndex
+    val denseI = new Array[Int](k)
+    val denseV = new Array[Double](k)
+    var nnz = 0
+    rowPtr += 0
+    while (rows.hasNext) {
+      val row = rows.next()
+      var ri = row.idx
+      var rv = row.vals
+      var len = if (ri == null) 0 else ri.length
+      if (ri == null) {
+        var j = 0
+        while (j < k) {
+          if (rv(j) != 0.0) { denseI(len) = j; denseV(len) = rv(j); len += 1 }
+          j += 1
         }
-        gram.addRow(0L, k, idx, vals, w0 * rp)
+        ri = denseI
+        rv = denseV
       }
-      Iterator(new SparsePartial(s, new GramSum().add(gram.sorted()), fval, wrsum, count))
-    }.treeAggregate(new SparsePartial(new Array[Double](k), new GramSum(), 0.0, 0.0, 0L))(
-      _ merge _, _ merge _, depth)
-    val gram = out.gram.result
-    Pass(out.s, null, out.fval, out.wrsum, out.count, gram.keys, gram.vals)
+      var p = 0
+      while (p < len) {
+        idx += ri(p)
+        vals += rv(p)
+        val base = ri(p).toLong * k
+        var q = p
+        while (q < len) { slots += index.idOf(base + ri(q)); q += 1 }
+        p += 1
+      }
+      nnz += len
+      rowPtr += nnz
+      w0 += row.w0
+    }
+    val keys = index.sortedKeys()
+    val rank = index.ranks(keys)
+    val sl = slots.result()
+    var c = 0
+    while (c < sl.length) { sl(c) = rank(sl(c)); c += 1 }
+    new GramBlock(rowPtr.result(), idx.result(), vals.result(), w0.result(), keys, sl)
   }
 
-  /** One partition's (or merged subtree's) large-k statistics; `merge`
-   * sums `o` into this one. */
+  /**
+   * The large-k Gram of one solve, split into a symbolic part built once
+   * and numeric passes: `blocks` caches each partition as a
+   * [[GramBlock]] (persisted by the first [[runPattern]] job, inside
+   * that pass), so every pass after it only fills each partition's
+   * values over its cached local keys — no hashing, no sort.
+   *
+   * `direct` picks the reduction. When it holds (every partial reaches
+   * the driver unmerged anyway: EbwSizing.Plan.direct), one job collects
+   * the partials by partition index and the driver adds them in
+   * partition-index order. The first pass ships each partition's local
+   * keys with its values and sums them with a [[GramSum]]; the merged
+   * keys and a per-partition local -> global index map (a linear
+   * merge-walk) are kept, so later passes ship values only (8 B per local
+   * entry) and add them through the maps. s, fval, wrsum and the Gram
+   * are then bit-reproducible for a fixed partitioning.
+   * Otherwise each partition's values ship as a [[SortedGram]] over its
+   * local keys into the keyed `treeAggregate` + [[GramSum]] reduction at
+   * `depth`. The owner releases the cache with [[release]].
+   */
+  final class SparsePattern private[EbwAggregator] (
+      val blocks: RDD[GramBlock], val depth: Int, val direct: Boolean) {
+    /** The merged Gram's keys and each partition's local -> global index
+     * map (direct reduction; set by the first pass). */
+    private[EbwAggregator] var keys: Array[Long] = null
+    private[EbwAggregator] var maps: Array[Array[Int]] = null
+
+    def release(): Unit = blocks.unpersist(false)
+  }
+
+  /** The (not yet materialized) cached pattern of `rows`. */
+  def sparsePattern(rows: RDD[EbwRow], k: Int, depth: Int,
+      direct: Boolean): SparsePattern = {
+    val blocks = rows.mapPartitions(it => Iterator(compileBlock(it, k)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    blocks.setName(s"ebw-gram-pattern-k$k")
+    new SparsePattern(blocks, depth, direct)
+  }
+
+  /**
+   * Large-k pass: the same statistics as [[run]], with the Gram kept
+   * sparse over the realized cross pattern (keyed i*k+j, i <= j,
+   * `gramKeys` strictly ascending). For group-dummy / interaction designs
+   * (the reference's "hundreds of thousands of constraints" regime) the
+   * Gram has O(k) to O(k * nnz_row) entries, not k^2. Paired with the
+   * driver-side CG solve in DriverLinalg.
+   */
+  def runPattern(pat: SparsePattern, k: Int, theta: Array[Double],
+      link: Link): Pass = {
+    val th = theta
+    val lk = link
+    if (!pat.direct) {
+      val out = pat.blocks.map { b =>
+        val part = fillBlock(b, k, th, lk, withKeys = false)
+        new SparsePartial(part.s, new GramSum().add(SortedGram(b.keys, part.vals)),
+          part.fval, part.wrsum, part.count)
+      }.treeAggregate(new SparsePartial(new Array[Double](k), new GramSum(), 0.0, 0.0, 0L))(
+        _ merge _, _ merge _, pat.depth)
+      val gram = out.gram.result
+      return Pass(out.s, null, out.fval, out.wrsum, out.count, gram.keys, gram.vals)
+    }
+    val first = pat.keys == null
+    val parts = new Array[BlockPartial](pat.blocks.getNumPartitions)
+    pat.blocks.sparkContext.runJob(pat.blocks,
+      (it: Iterator[GramBlock]) => fillBlock(it.next(), k, th, lk, withKeys = first),
+      (i: Int, part: BlockPartial) => parts(i) = part)
+    val s = new Array[Double](k)
+    var fval = 0.0
+    var wrsum = 0.0
+    var count = 0L
+    for (part <- parts) {
+      var i = 0
+      while (i < k) { s(i) += part.s(i); i += 1 }
+      fval += part.fval
+      wrsum += part.wrsum
+      count += part.count
+    }
+    val gram =
+      if (first) {
+        val sum = new GramSum()
+        parts.foreach(part => sum.add(SortedGram(part.keys, part.vals)))
+        val merged = sum.result
+        pat.keys = merged.keys
+        pat.maps = parts.map(part => rankIn(part.keys, merged.keys))
+        merged.vals
+      } else {
+        val g = new Array[Double](pat.keys.length)
+        var p = 0
+        while (p < parts.length) {
+          val vals = parts(p).vals
+          val map = pat.maps(p)
+          var i = 0
+          while (i < map.length) { g(map(i)) += vals(i); i += 1 }
+          p += 1
+        }
+        g
+      }
+    Pass(s, null, fval, wrsum, count, pat.keys, gram)
+  }
+
+  /** One block's statistics at theta: s, fval, wrsum, count, and the
+   * Gram values over the block's local keys (shipped with them when
+   * `withKeys`). Rows whose slope is 0 (clipped under the elastic link)
+   * add nothing to keys that exist. */
+  private def fillBlock(b: GramBlock, k: Int, theta: Array[Double],
+      link: Link, withKeys: Boolean): BlockPartial = {
+    val s = new Array[Double](k)
+    val g = new Array[Double](b.keys.length)
+    val idx = b.idx
+    val vals = b.vals
+    val slots = b.slots
+    val n = b.w0.length
+    var fval = 0.0
+    var wrsum = 0.0
+    var c = 0
+    var row = 0
+    while (row < n) {
+      val lo = b.rowPtr(row)
+      val hi = b.rowPtr(row + 1)
+      var t = 0.0
+      var p = lo
+      while (p < hi) { t += vals(p) * theta(idx(p)); p += 1 }
+      val (r, rp) = link.rAndSlope(t)
+      val w0 = b.w0(row)
+      val wr = w0 * r
+      fval += (if (r <= 0.0) w0 else w0 * (r * math.log(r) - r + 1.0))
+      wrsum += wr
+      p = lo
+      while (p < hi) { s(idx(p)) += wr * vals(p); p += 1 }
+      val wrp = w0 * rp
+      if (wrp == 0.0) c += (hi - lo) * (hi - lo + 1) / 2
+      else {
+        p = lo
+        while (p < hi) {
+          val wv = wrp * vals(p)
+          var q = p
+          while (q < hi) { g(slots(c)) += wv * vals(q); c += 1; q += 1 }
+          p += 1
+        }
+      }
+      row += 1
+    }
+    new BlockPartial(s, if (withKeys) b.keys else null, g, fval, wrsum, n)
+  }
+
+  /** Each of `local`'s keys' index in `global` (both strictly ascending,
+   * `local` a subset), by one linear merge-walk. */
+  private def rankIn(local: Array[Long], global: Array[Long]): Array[Int] = {
+    val out = new Array[Int](local.length)
+    var g = 0
+    var i = 0
+    while (i < local.length) {
+      while (global(g) != local(i)) g += 1
+      out(i) = g
+      i += 1
+    }
+    out
+  }
+
+  /** One block's statistics: the Gram as values over its local keys
+   * (`keys` set on a solve's first direct-reduction pass only). */
+  private final class BlockPartial(
+      val s: Array[Double], val keys: Array[Long], val vals: Array[Double],
+      val fval: Double, val wrsum: Double, val count: Long) extends Serializable
+
+  /** One partition's (or merged subtree's) keyed large-k statistics;
+   * `merge` sums `o` into this one. */
   private final class SparsePartial(
       val s: Array[Double], val gram: GramSum,
       var fval: Double, var wrsum: Double, var count: Long) extends Serializable {
@@ -245,8 +423,8 @@ private[ebw] object EbwAggregator {
   /**
    * The Gram as a DISTRIBUTED dataset — the no-driver-ceiling mode for
    * the large-N × large-k regime (EbwSizing decides): each partition fills
-   * one [[GramTable]] (the runSparse build) and streams its entries out
-   * as (key, value) pairs; a reduceByKey merges them ACROSS EXECUTORS and
+   * one [[GramTable]] and streams its entries out as (key, value) pairs;
+   * a reduceByKey merges them ACROSS EXECUTORS and
    * the merged Gram never lands on the driver. The Newton direction is
    * then solved by CG with distributed matvecs (DriverLinalg.cgSolveRdd) —
    * per-iteration driver traffic is O(k), not O(gram nnz), so the regime
@@ -346,10 +524,14 @@ private[ebw] object EbwAggregator {
   /** Validation + sizing pass: returns (badRows, sumW, n, sumPairs) where
    * sumPairs = Σ_i nnz_i(nnz_i+1)/2 — the total Gram-entry contributions,
    * the input to EbwSizing's partition/depth/mode heuristic (counted in
-   * the same scan that checks finiteness, so sizing costs nothing extra). */
+   * the same scan that checks finiteness, so sizing costs nothing extra).
+   * One job; the per-partition sums are added in partition order. */
   def validate(rows: RDD[EbwRow], k: Int): (Long, Double, Long, Long) = {
-    val out = rows.treeAggregate(new Array[Double](4))(
-      seqOp = (buf, row) => {
+    val parts = new Array[Array[Double]](rows.getNumPartitions)
+    rows.sparkContext.runJob(rows, (it: Iterator[EbwRow]) => {
+      val buf = new Array[Double](4)
+      while (it.hasNext) {
+        val row = it.next()
         val nnz = rowNnz(row.idx, row.vals, row.w0, k)
         if (nnz < 0) buf(0) += 1.0
         else {
@@ -357,10 +539,12 @@ private[ebw] object EbwAggregator {
           buf(3) += nnz.toDouble * (nnz + 1) / 2
         }
         buf(2) += 1.0
-        buf
-      },
-      combOp = (a, b) => { a(0) += b(0); a(1) += b(1); a(2) += b(2); a(3) += b(3); a },
-      depth = 2)
+      }
+      buf
+    }, (i: Int, buf: Array[Double]) => parts(i) = buf)
+    // summed in partition order, so sum(w0) repeats for a fixed partitioning
+    val out = new Array[Double](4)
+    for (buf <- parts; j <- 0 until 4) out(j) += buf(j)
     (out(0).toLong, out(1), out(2).toLong, out(3).toLong)
   }
 

@@ -11,10 +11,14 @@ import org.apache.spark.SparkContext
  *
  *  - `partitions`: sized so one partition's sparse-Gram partial stays near
  *    `TargetPartialBytes` (a partial holds at most
- *    min(realized-Gram, rows/partition · nnz(nnz+1)/2) entries).
+ *    min(realized-Gram, rows/partition · nnz(nnz+1)/2) entries) and the
+ *    partials building at once, with their partitions' cached Gram
+ *    patterns, fit the heap.
  *  - `depth`: treeAggregate depth minimizing the bytes the driver
  *    collects (deeper trees merge more partials executor-side; the win
  *    saturates once merged partials approach the realized Gram size).
+ *    A depth that merges nothing executor-side selects the direct
+ *    reduction ([[Plan.direct]]).
  *  - `mode`: when even the best depth cannot land the merged Gram within
  *    the driver's `maxResultSize`/heap budget, the solve switches to the
  *    DISTRIBUTED-Gram mode (EbwAggregator.gramRdd +
@@ -31,21 +35,46 @@ private[ebw] object EbwSizing {
 
   /** Per-partition serialized-partial target. */
   val TargetPartialBytes: Long = 64L << 20
-  /** Serialized bytes per Gram entry of a partial. A partial ships as a
-   * GramSum: the primitive key and value arrays of its key-sorted runs,
-   * 8 B key + 8 B value = 16 B per run entry. Each run is at most the
-   * partial's merged size and the run sizes more than halve, so the runs
-   * hold under twice the merged entries: 32 B per merged entry bounds it. */
+  /** Serialized bytes per Gram entry of a partial, bounding both
+   * reductions of EbwAggregator.runPattern. On the keyed tree a partial
+   * ships as a GramSum: the primitive key and value arrays of its
+   * key-sorted runs, 8 B key + 8 B value = 16 B per run entry. Each run
+   * is at most the partial's merged size and the run sizes more than
+   * halve, so the runs hold under twice the merged entries: 32 B per
+   * merged entry bounds it. The direct reduction ([[Plan.direct]])
+   * collects each partition's values over its local keys, 8 B per local
+   * entry (16 B with the keys on a solve's first pass); with every
+   * partial collected unmerged that is never more than the keyed bound
+   * it replaces. */
   val SerBytesPerEntry: Long = 32L
-  /** Driver-resident bytes per merged Gram entry: the merged SortedGram
-   * holds 16 B/entry and cgSolve decodes another 8 B/entry of row/column
-   * indices. While a GramSum adds the partials up it holds its pending
-   * runs (under twice the merged Gram), the arriving partial and one
-   * merge's output, under 64 B per merged entry in all. 48 is kept as a
-   * conservative upper bound (×2 merge working set in `plan`). */
+  /** Driver-resident bytes per merged Gram entry. The merged keys and
+   * values take 16 B/entry; each cgSolve call decodes them into 4 B row
+   * and 4 B column indices, 8 B/entry more while it runs. While a
+   * GramSum adds keyed partials up it holds its pending runs (under twice
+   * the merged Gram), the arriving partial and one merge's output, under
+   * 64 B per merged entry in all. 48 is kept as a conservative upper
+   * bound (×2 merge working set in `plan`). The direct reduction holds
+   * per-local-entry state instead ([[DirectBytesPerLocalEntry]]). */
   val HeapBytesPerEntry: Long = 48L
+  /** Driver bytes per local Gram entry on the direct reduction: the
+   * collected values (8 B), the local -> global index map kept for the
+   * solve (4 B) and, on the first pass only, the collected local keys
+   * (8 B). */
+  val DirectBytesPerLocalEntry: Long = 20L
+  /** Bytes of one partition's cached Gram pattern (EbwAggregator.GramBlock)
+   * per row contribution: a 4 B slot, at most one 8 B local key, and at
+   * most one CSR entry (12 B: an Int index and a Double value), since
+   * every listed entry contributes its own diagonal pair. */
+  val PatternBytesPerPair: Long = 24L
+  /** Pattern bytes per row: the Int row pointer and the Double w0. */
+  val PatternBytesPerRow: Long = 12L
   val MaxPartitions: Int = 4096
 
+  /** @param direct whether every partial already reaches the driver
+   *               unmerged (treeAggregate at `depth` over `partitions`
+   *               has no executor level), so the sparse pass collects
+   *               them by partition index and adds them in that order on
+   *               the driver (EbwAggregator.runPattern) */
   final case class Plan(
       partitions: Int,
       depth: Int,
@@ -53,7 +82,8 @@ private[ebw] object EbwSizing {
       driverCollectBytes: Long,
       driverHeapBytes: Long,
       distributedGram: Boolean,
-      why: String)
+      why: String,
+      direct: Boolean)
 
   private def ceilDiv(a: Long, b: Long): Long = (a + b - 1) / b
 
@@ -79,15 +109,17 @@ private[ebw] object EbwSizing {
     f.toLong * math.min(gramCap, ceilDiv(sumPairs, f.toLong)) * SerBytesPerEntry
   }
 
-  /** In-heap bytes per Gram entry while a partial is BUILDING: a
-   * GramTable holds 16 B per slot at load ≤ 0.5 (32-64 B/entry), and its
-   * grow transient (old table + doubled table, 48 B per old slot) peaks
-   * at 96 B/entry just past a doubling; finishing the sorted partial adds
-   * 16 B/entry to a table that is then at most 64 B/entry. 96 B/entry is
-   * therefore an upper bound on the build. */
+  /** In-heap bytes per Gram entry while a partial or a partition's
+   * pattern is BUILDING: a KeyIndex holds 12 B per slot (key + id) at
+   * load ≤ 0.5 (24-48 B/entry), and a GramTable adds 8-16 B/entry of
+   * values; the grow transient (old table + doubled table, 36 B per old
+   * slot) peaks at 72 B/entry plus values just past a doubling, and
+   * finishing the sorted keys adds 20 B/entry (keys, values, id ranks).
+   * 96 B/entry is therefore an upper bound on the build. */
   val BuildBytesPerEntry: Long = 2L * HeapBytesPerEntry
 
-  /** Per-task in-flight partial budget: `cores` partials build AT ONCE
+  /** Per-task in-flight budget for a partial and its partition's cached
+   * Gram pattern: `cores` partials build AT ONCE
    * in one executor JVM (local mode: the driver JVM itself), so the
    * concurrent set — not one partial — is what must fit. A quarter of
    * the heap across all concurrent tasks, floored at 8 MiB so tiny
@@ -108,15 +140,20 @@ private[ebw] object EbwSizing {
    * @param cores        concurrent tasks per executor JVM (local mode:
    *                     the session's parallelism); 1 = legacy single-
    *                     partial sizing
+   * @param rows         rows of the problem (each costs its partition's
+   *                     cached pattern [[PatternBytesPerRow]])
    */
   def plan(k: Int, sumPairs: Long, currentParts: Int,
-      maxResultSize: Long, maxHeap: Long, cores: Int = 1): Plan = {
+      maxResultSize: Long, maxHeap: Long, cores: Int = 1, rows: Long = 0L): Plan = {
     val tri = k.toLong * (k + 1) / 2
     val gramCap = math.max(1L, math.min(tri, sumPairs))
     val pForPartial = ceilDiv(sumPairs * SerBytesPerEntry, TargetPartialBytes)
-    val entriesPerPart = math.max(1L,
-      perTaskPartialBytes(maxHeap, cores) / BuildBytesPerEntry)
-    val pForHeap = ceilDiv(sumPairs, entriesPerPart)
+    // a task holds its partial while building it plus its partition's
+    // cached pattern
+    val taskBytes = sumPairs * (BuildBytesPerEntry + PatternBytesPerPair) +
+      rows * PatternBytesPerRow
+    val pForHeap = ceilDiv(taskBytes,
+      math.max(1L, perTaskPartialBytes(maxHeap, cores)))
     val partitions = math.max(currentParts,
       math.min(MaxPartitions.toLong,
         math.max(pForPartial, pForHeap)).toInt)
@@ -132,7 +169,11 @@ private[ebw] object EbwSizing {
       .find(d => collectBytes(gramCap, sumPairs, partitions, d) <= resultBudget)
       .getOrElse((2 to 4).minBy(d => collectBytes(gramCap, sumPairs, partitions, d)))
     val collect = collectBytes(gramCap, sumPairs, partitions, depth)
-    val heapNeed = 2L * gramCap * HeapBytesPerEntry
+    val direct = finalParts(partitions, depth) == partitions
+    // the direct reduction adds its per-local-entry state (at most
+    // sumPairs local entries, and at most the whole Gram per partition)
+    val heapNeed = 2L * gramCap * HeapBytesPerEntry + (if (!direct) 0L
+      else math.min(sumPairs, partitions.toLong * gramCap) * DirectBytesPerLocalEntry)
     val overResult = maxResultSize > 0 && collect > (maxResultSize * 4) / 5
     val overHeap = heapNeed > (maxHeap * 3) / 5
     val why =
@@ -145,7 +186,7 @@ private[ebw] object EbwSizing {
       else
         s"driver Gram fits: collect ~${collect >> 20} MiB, heap ~${heapNeed >> 20} MiB"
     Plan(partitions, depth, gramCap, collect, heapNeed,
-      distributedGram = overResult || overHeap, why = why)
+      distributedGram = overResult || overHeap, why = why, direct = direct)
   }
 
   /** The Gram route every solver entry point takes, single and grouped:
@@ -155,14 +196,14 @@ private[ebw] object EbwSizing {
    * "driver" fails fast with the sized error when the merged Gram cannot
    * fit ([[requireDriverFits]]), "auto" follows the plan. */
   def route(sc: SparkContext, k: Int, sumPairs: Long, parts: Int,
-      options: EbwOptions): Option[(Plan, Boolean)] = {
+      options: EbwOptions, rows: Long = 0L): Option[(Plan, Boolean)] = {
     if (k <= options.denseGramMax) return None
     require(Set("auto", "driver", "distributed")(options.gramMode),
       s"gramMode must be auto|driver|distributed: ${options.gramMode}")
     val maxResult = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
     val maxHeap = Runtime.getRuntime.maxMemory
     val plan = EbwSizing.plan(k, sumPairs, parts, maxResult, maxHeap,
-      cores = sc.defaultParallelism)
+      cores = sc.defaultParallelism, rows = rows)
     val dist = options.gramMode match {
       case "driver" =>
         requireDriverFits(plan, maxResult, maxHeap); false

@@ -67,12 +67,13 @@ object EntropyBalance {
    * partial outgrows the target. */
   private[ebw] def sizeForSparse(prep: Prepared, options: EbwOptions): NewtonKernel = {
     val route = EbwSizing.route(prep.rows.sparkContext, prep.k, prep.sumPairs,
-      prep.rows.getNumPartitions, options)
+      prep.rows.getNumPartitions, options, rows = prep.n)
     if (route.isEmpty) return new NewtonKernel(prep, None, distributed = false)
     val (plan, dist) = route.get
     EbwLog.info(s"sparse Gram sizing: sumPairs=${prep.sumPairs} " +
       s"parts=${prep.rows.getNumPartitions}->${plan.partitions} " +
       s"depth=${plan.depth} mode=${if (dist) "distributed" else "driver"} " +
+      s"reduce=${if (plan.direct) "direct" else "tree"} " +
       s"(${plan.why})")
     val prep2 =
       if (plan.partitions > prep.rows.getNumPartitions) {
@@ -198,9 +199,10 @@ object EntropyBalance {
     }
 
   /**
-   * `criterion` parity (shared.py:41), Spark-shaped: one aggregation pass
-   * evaluating the KL criterion sum(w0 (r ln r - r + 1)) and the moment
-   * violation Ce = A'w(lambda) - m sum(w0) at the given multipliers, with
+   * `criterion` parity (shared.py:41), Spark-shaped: one statistics-only
+   * aggregation pass (no Gram, at any k) evaluating the KL criterion
+   * sum(w0 (r ln r - r + 1)) and the moment violation
+   * Ce = A'w(lambda) - m sum(w0) at the given multipliers, with
    * r = exp(x . lambda). The reference returns the N-vector jacobian and
    * Hessian diagonal; distributed, those stay implicit (the jacobian's
    * aggregate A'-image IS the violation returned here).
@@ -216,10 +218,7 @@ object EntropyBalance {
       s"multipliers has ${multipliers.length} entries, expected $k")
     val prep = prepare(df, featuresCol, weightCol, k, meanPopulationMoments)
     try {
-      val pass =
-        if (k > EbwOptions().denseGramMax)
-          EbwAggregator.runSparse(prep.rows, k, multipliers, Link.exp)
-        else EbwAggregator.run(prep.rows, k, multipliers, Link.exp)
+      val pass = EbwAggregator.runStats(prep.rows, k, multipliers, Link.exp)
       val b = meanPopulationMoments.map(_ * prep.sumW)
       val ce = axpy(-1.0, b, pass.s)
       EbwEvaluation(pass.fval, ce, norm2(ce), pass.wrsum)
@@ -249,12 +248,13 @@ object EntropyBalance {
       options, warmStart = true)(unboundedLoop)
   }
 
-  /** prepare → warm start → size → solve → dump → unpersist, shared by the
+  /** prepare → warm start → size → solve → dump → release, shared by the
    * three single-problem modes. `warmStart` checks `initialMultipliers`
    * and resolves the primal warm start (the dual modes; the penalty fixed
    * point always starts at z = 0). The input is validated BEFORE the
    * warm-start pass, so malformed inputs fail with the documented error,
-   * not an index error inside ratioSeed. */
+   * not an index error inside ratioSeed. The `finally` releases every
+   * RDD the solve cached: the kernel's Gram pattern and the row cache. */
   private def solve(
       df: DataFrame, featuresCol: String, weightCol: String, outputCol: String,
       m: Array[Double], options: EbwOptions, warmStart: Boolean)(
@@ -264,16 +264,20 @@ object EntropyBalance {
       s"initialMultipliers has ${mu.length} entries, expected $k"))
     val prep0 = prepare(df, featuresCol, weightCol, k, m)
     var live = prep0
+    var kernel: NewtonKernel = null
     try {
       val opts =
         if (warmStart) resolveWarmStart(df, featuresCol, weightCol, k, options)
         else options
-      val kernel = sizeForSparse(prep0, opts)
+      kernel = sizeForSparse(prep0, opts)
       live = kernel.prep
       val res = results(df, featuresCol, weightCol, outputCol, loop(kernel, m, opts))
       maybeDump(df.sparkSession, live, m, options, res)
       res
-    } finally live.rows.unpersist(false)
+    } finally {
+      if (kernel != null) kernel.release()
+      live.rows.unpersist(false)
+    }
   }
 
   /** save_problem_data / save_failure_data semantics

@@ -1,44 +1,124 @@
 package graft.ebw
 
 /**
- * The large-k sparse-Gram accumulator behind every sparse EBW pass
- * (EbwAggregator.runSparse / gramRdd, the grouped solver's sparse round):
- * a primitive open-addressing `long -> double` table, keyed by the packed
- * upper-triangular index `base + i*k + j` (i <= j, keys >= 0), that a
- * partition fills row by row and then finishes as a [[SortedGram]].
+ * A primitive open-addressing `long -> int` index that numbers distinct
+ * keys (>= 0) 0, 1, 2, ... in the order they are first seen: the probing
+ * core of [[GramTable]] and of the per-partition Gram pattern
+ * (EbwAggregator.compileBlock).
  *
- * Layout: two parallel arrays (`Array[Long]` keys, `Array[Double]`
- * values) with linear probing, Fibonacci-hashed slots, -1 as the empty
- * key, and load kept at or below 0.5 (the table doubles past it). No
- * value is boxed and each update is one probe sequence.
+ * Layout: two parallel slot arrays (`Array[Long]` keys, `Array[Int]`
+ * ids) with linear probing, Fibonacci-hashed slots, -1 as the empty key,
+ * and load kept at or below 0.5 (the table doubles past it). Nothing is
+ * boxed and each lookup is one probe sequence.
  */
-private[ebw] final class GramTable {
+private[ebw] final class KeyIndex {
   import GramTable._
 
   private var capacity = InitialCapacity
   private var shift = 64 - Integer.numberOfTrailingZeros(capacity)
   private var keys = newKeys(capacity)
-  private var vals = new Array[Double](capacity)
+  private var ids = new Array[Int](capacity)
   private var n = 0
 
   def size: Int = n
 
-  /** Adds `v` to the entry at `key` (>= 0), inserting it if absent. */
-  def add(key: Long, v: Double): Unit = {
+  /** The id of `key`, numbering it `size` if it is new. */
+  def idOf(key: Long): Int = {
     val mask = capacity - 1
     var h = slot(key, shift)
     while (true) {
       val at = keys(h)
-      if (at == key) { vals(h) += v; return }
+      if (at == key) return ids(h)
       if (at == Empty) {
         keys(h) = key
-        vals(h) = v
+        ids(h) = n
         n += 1
         if (n > (capacity >>> 1)) grow()
-        return
+        return n - 1
       }
       h = (h + 1) & mask
     }
+    -1
+  }
+
+  /** Every (key, id) pair, in table order. */
+  def entries: Iterator[(Long, Int)] = {
+    val ks = keys
+    val is = ids
+    Iterator.range(0, ks.length).filter(ks(_) != Empty).map(h => (ks(h), is(h)))
+  }
+
+  /** The keys, strictly ascending. */
+  def sortedKeys(): Array[Long] = {
+    val out = new Array[Long](n)
+    var m = 0
+    var h = 0
+    while (h < capacity) {
+      if (keys(h) != Empty) { out(m) = keys(h); m += 1 }
+      h += 1
+    }
+    java.util.Arrays.sort(out)
+    out
+  }
+
+  /** Each id's rank among the ascending keys (`sorted` is [[sortedKeys]]),
+   * read off the table's own probe of each sorted key. */
+  def ranks(sorted: Array[Long]): Array[Int] = {
+    val out = new Array[Int](n)
+    val mask = capacity - 1
+    var p = 0
+    while (p < n) {
+      val key = sorted(p)
+      var h = slot(key, shift)
+      while (keys(h) != key) h = (h + 1) & mask
+      out(ids(h)) = p
+      p += 1
+    }
+    out
+  }
+
+  private def grow(): Unit = {
+    require(capacity < (1 << 30), s"KeyIndex cannot grow past $n entries")
+    val oldK = keys
+    val oldI = ids
+    capacity <<= 1
+    shift -= 1
+    keys = newKeys(capacity)
+    ids = new Array[Int](capacity)
+    val mask = capacity - 1
+    var h = 0
+    while (h < oldK.length) {
+      val key = oldK(h)
+      if (key != Empty) {
+        var s = slot(key, shift)
+        while (keys(s) != Empty) s = (s + 1) & mask
+        keys(s) = key
+        ids(s) = oldI(h)
+      }
+      h += 1
+    }
+  }
+}
+
+/**
+ * The large-k sparse-Gram accumulator of the passes that build a Gram
+ * from scratch (EbwAggregator.gramRdd, the grouped solver's sparse
+ * round): a [[KeyIndex]] over the packed upper-triangular keys
+ * `base + i*k + j` (i <= j, keys >= 0) with one primitive value per id,
+ * that a partition fills row by row and then finishes as a
+ * [[SortedGram]].
+ */
+private[ebw] final class GramTable {
+  private val index = new KeyIndex
+  private var vals = new Array[Double](GramTable.InitialCapacity >>> 1)
+
+  def size: Int = index.size
+
+  /** Adds `v` to the entry at `key` (>= 0), inserting it if absent. */
+  def add(key: Long, v: Double): Unit = {
+    val id = index.idOf(key)
+    if (id == vals.length) vals = java.util.Arrays.copyOf(vals, 2 * id)
+    vals(id) += v
   }
 
   /**
@@ -80,63 +160,27 @@ private[ebw] final class GramTable {
 
   /** Every (key, value) entry, in table order. */
   def iterator: Iterator[(Long, Double)] = {
-    val ks = keys
     val vs = vals
-    Iterator.range(0, ks.length).filter(ks(_) != Empty).map(h => (ks(h), vs(h)))
+    index.entries.map { case (key, id) => (key, vs(id)) }
   }
 
   /** The entries as strictly ascending keys with their values. */
   def sorted(): SortedGram = {
-    val outK = new Array[Long](n)
-    var m = 0
-    var h = 0
-    while (h < capacity) {
-      if (keys(h) != Empty) { outK(m) = keys(h); m += 1 }
-      h += 1
-    }
-    java.util.Arrays.sort(outK)
-    val outV = new Array[Double](n)
-    val mask = capacity - 1
-    var p = 0
-    while (p < n) {
-      val key = outK(p)
-      var s = slot(key, shift)
-      while (keys(s) != key) s = (s + 1) & mask
-      outV(p) = vals(s)
-      p += 1
-    }
-    SortedGram(outK, outV)
-  }
-
-  private def grow(): Unit = {
-    require(capacity < (1 << 30), s"GramTable cannot grow past $n entries")
-    val oldK = keys
-    val oldV = vals
-    capacity <<= 1
-    shift -= 1
-    keys = newKeys(capacity)
-    vals = new Array[Double](capacity)
-    val mask = capacity - 1
-    var h = 0
-    while (h < oldK.length) {
-      val key = oldK(h)
-      if (key != Empty) {
-        var s = slot(key, shift)
-        while (keys(s) != Empty) s = (s + 1) & mask
-        keys(s) = key
-        vals(s) = oldV(h)
-      }
-      h += 1
-    }
+    val keys = index.sortedKeys()
+    val rank = index.ranks(keys)
+    val out = new Array[Double](keys.length)
+    var id = 0
+    while (id < out.length) { out(rank(id)) = vals(id); id += 1 }
+    SortedGram(keys, out)
   }
 }
 
 private[ebw] object GramTable {
-  private val Empty = -1L
+  private[ebw] val Empty = -1L
   /** Slots of a new table (a power of two). */
   private[ebw] val InitialCapacity = 1024
 
-  private def newKeys(capacity: Int): Array[Long] = {
+  private[ebw] def newKeys(capacity: Int): Array[Long] = {
     val a = new Array[Long](capacity)
     java.util.Arrays.fill(a, Empty)
     a

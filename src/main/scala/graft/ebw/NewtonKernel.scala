@@ -13,6 +13,9 @@ import EbwAggregator.Pass
  *  - [[pass]]: one aggregation pass at theta;
  *  - [[direction]]: one Newton system solve;
  *  - [[backtrack]]: the halving line search, one pass per trial.
+ * On the sparse-driver route the kernel owns the solve's cached Gram
+ * pattern (EbwAggregator.SparsePattern): the first pass compiles it,
+ * later passes only fill values, and [[release]] drops it.
  * It lives on the driver: RDD closures only ever see the arrays and links
  * it passes down to EbwAggregator.
  */
@@ -24,16 +27,24 @@ private[ebw] final class NewtonKernel(
 
   val k: Int = prep.k
   private def rows = prep.rows
+  private var pattern: EbwAggregator.SparsePattern = null
 
   /** s, fval, wrsum and the Gram at theta: the packed dense triangle, the
-   * key-sorted sparse Gram (merged at the plan's tree depth), or — on the
-   * distributed route — no Gram (line-search trials only need the dual
-   * objective; [[direction]] builds the Gram once per accepted iterate). */
+   * key-sorted sparse Gram over the cached pattern (reduced directly or at
+   * the plan's tree depth), or — on the distributed route — no Gram
+   * (line-search trials only need the dual objective; [[direction]]
+   * builds the Gram once per accepted iterate). */
   def pass(theta: Array[Double], link: Link): Pass = plan match {
     case None => EbwAggregator.run(rows, k, theta, link)
     case Some(_) if distributed => EbwAggregator.runStats(rows, k, theta, link)
-    case Some(p) => EbwAggregator.runSparse(rows, k, theta, link, p.depth)
+    case Some(p) =>
+      if (pattern == null)
+        pattern = EbwAggregator.sparsePattern(rows, k, p.depth, p.direct)
+      EbwAggregator.runPattern(pattern, k, theta, link)
   }
+
+  /** Drops the cached Gram pattern, if a pass built one. */
+  def release(): Unit = if (pattern != null) { pattern.release(); pattern = null }
 
   /** Solve (sign*G + diag + ridge*I) d = rhs for the Gram G of `pass` at
    * (theta, link), over the coordinates `free` marks (all when null;

@@ -73,6 +73,20 @@ class EbwSizingSpec extends AnyFunSuite {
     assert(p.driverCollectBytes < (64L << 20), s"${p.driverCollectBytes}")
   }
 
+  test("plan: the benchmark shape and the N=1e6 5-partition tiers take " +
+    "the direct reduction") {
+    // graftbench ebw_sparse_poststrat: N=5e4 rows at nnz=4, k=1e3, 4 parts
+    val bench = EbwSizing.plan(k = 1000, sumPairs = 500000L, currentParts = 4,
+      maxResultSize = 1 * GiB, maxHeap = 8 * GiB, cores = 4, rows = 50000L)
+    assert(bench.partitions == 4 && bench.depth == 2 && bench.direct, bench)
+    // EbwScaling N=1e6 at nnz=4 (sumPairs=1e7) on 4 cores, k=1e3 and 1e5
+    for (k <- Seq(1000, 100000)) {
+      val tier = EbwSizing.plan(k = k, sumPairs = 10000000L, currentParts = 4,
+        maxResultSize = 1 * GiB, maxHeap = 8 * GiB, cores = 4, rows = 1000000L)
+      assert(tier.partitions == 5 && tier.direct && !tier.distributedGram, tier)
+    }
+  }
+
   test("plan: treeAggregate final-partial model and depth choice") {
     // scale = ceil(sqrt(48)) = 7; 48 > 7 + ceil(48/7) = 14 -> 48/7 = 6
     // (INTEGER division, the RDD.treeAggregate body); 6 <= 7 + 1 stops.

@@ -64,7 +64,8 @@ class EbwSolverSpec extends AnyFunSuite {
       }
       // the sparse-Gram aggregation (big-k CG path) must produce the same
       // moment map and the same Gram entries as the dense triangle
-      val pSp = EbwAggregator.runSparse(rddS, k, theta, link)
+      val pat = EbwAggregator.sparsePattern(rddS, k, depth = 2, direct = true)
+      val pSp = try EbwAggregator.runPattern(pat, k, theta, link) finally pat.release()
       for (i <- 0 until k)
         assert(math.abs(p0.s(i) - pSp.s(i)) < 1e-12, s"sparse-gram s $i")
       pSp.gramKeys.zip(pSp.gramVals).foreach { case (key, v) =>
@@ -557,6 +558,41 @@ class EbwSolverSpec extends AnyFunSuite {
       res.equalityMultipliers)
     assert(atOpt.violationNorm < 1e-9)
     assert(math.abs(atOpt.criterionValue - res.criterionValue) < 1e-12)
+  }
+
+  test("a sparse-driver solve releases every RDD it cached: converged, " +
+      "not converged, and failing after its first pass") {
+    import org.apache.spark.ml.linalg.Vectors
+    val rng = new scala.util.Random(31)
+    val k = 600 // > denseGramMax: the cached Gram pattern route
+    val rows = (0 until 3000).map(i =>
+      (Vectors.sparse(k, Array(i % k), Array(1.0)), 0.5 + rng.nextDouble()))
+    val df = spark.createDataFrame(rows).toDF("feat", "w0")
+    val m = Array.fill(k)(1.0 / k)
+    val sc = spark.sparkContext
+    def solverRdds: Set[Int] = sc.getPersistentRDDs.collect {
+      case (id, r) if r.name != null &&
+        (r.name.startsWith("ebw-input-") || r.name.startsWith("ebw-gram-pattern-")) => id
+    }.toSet
+    val before = solverRdds
+    def leaked: Set[Int] = solverRdds -- before
+    val ok = EntropyBalance.entropyBalance(df, "feat", "w0", m)
+    assert(ok.converged, ok.errorMessage)
+    assert(leaked.isEmpty, s"converged solve left $leaked")
+    val stopped = EntropyBalance.entropyBalance(df, "feat", "w0", m,
+      options = EbwOptions(maxSteps = 1))
+    assert(!stopped.converged)
+    assert(leaked.isEmpty, s"non-converged solve left $leaked")
+    // the problem dump runs after every pass; a path below a regular file
+    // makes it throw
+    val file = java.io.File.createTempFile("ebw-release", ".txt")
+    try {
+      intercept[Exception] {
+        EntropyBalance.entropyBalance(df, "feat", "w0", m,
+          options = EbwOptions(saveProblemData = Some(s"${file.getPath}/dump")))
+      }
+      assert(leaked.isEmpty, s"failed solve left $leaked")
+    } finally file.delete()
   }
 
   test("poststratification closed form via one-hot design") {

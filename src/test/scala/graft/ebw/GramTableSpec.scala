@@ -120,32 +120,76 @@ class GramTableSpec extends AnyFunSuite {
     }
   }
 
-  test("runSparse over mostly-empty partitions matches the dense triangle") {
+  // one cached pattern per reduction (direct, keyed tree at depth 2 and
+  // 3), each pass at two thetas against the dense triangle
+  test("pattern pass over mostly-empty partitions matches the dense triangle") {
     val k = 6
     val rows = Seq(
+      // a dense row with zeros, a sparse row with an explicit zero
       EbwRow(null, Array(1.0, 0.0, 2.0, 0.0, 0.5, 1.0), 1.5),
-      EbwRow(Array(0, 3, 5), Array(1.0, 2.0, -1.0), 0.75),
+      EbwRow(Array(0, 3, 5), Array(1.0, 0.0, -1.0), 0.75),
       EbwRow(Array(1, 2), Array(0.5, 1.0), 2.0))
     // 3 rows in 8 partitions: at least 5 partials are empty
     val rdd = spark.sparkContext.parallelize(rows, 8)
-    val theta = Array(0.1, -0.2, 0.05, 0.0, 0.3, -0.1)
-    for (link <- Seq(Link.exp, Link.clip(1.3, 0.7, 1.4),
-        Link.clip(-1.0, 0.0, Double.PositiveInfinity)); depth <- Seq(2, 3)) {
-      val dense = EbwAggregator.run(rdd, k, theta, link)
-      val sp = EbwAggregator.runSparse(rdd, k, theta, link, depth)
-      assert(sp.count == 3)
-      assert(math.abs(sp.fval - dense.fval) < 1e-12)
-      assert(math.abs(sp.wrsum - dense.wrsum) < 1e-12)
-      for (i <- 0 until k) assert(math.abs(sp.s(i) - dense.s(i)) < 1e-12, s"s $i")
-      assertAscending(sp.gramKeys)
-      val got = sp.gramKeys.zip(sp.gramVals).toMap
-      for (i <- 0 until k; j <- i until k) {
-        val v = got.getOrElse(i.toLong * k + j, 0.0)
-        assert(math.abs(v - dense.gram(EbwAggregator.pidx(k, i, j))) < 1e-12,
-          s"gram ($i,$j) link $link depth $depth")
-      }
-      // every stored key is a real upper-triangle cell
-      assert(sp.gramKeys.forall(key => key % k >= key / k))
+    val thetas = Seq(Array(0.1, -0.2, 0.05, 0.0, 0.3, -0.1),
+      Array(0.4, 0.3, -0.2, 0.1, 0.6, 0.2))
+    val clip = Link.clip(1.3, 0.7, 1.4)
+    // at the second theta the clip link clips the dense row (slope 0):
+    // its structural keys stay in the pattern and receive nothing
+    assert(clip.rAndSlope(0.5)._2 == 0.0 &&
+      (0 until k).map(j => rows.head.vals(j) * thetas(1)(j)).sum > 0.49)
+    for ((depth, direct) <- Seq((2, true), (2, false), (3, false))) {
+      val pat = EbwAggregator.sparsePattern(rdd, k, depth, direct)
+      try for (theta <- thetas; link <- Seq(Link.exp, clip,
+          Link.clip(-1.0, 0.0, Double.PositiveInfinity))) {
+        val what = s"link $link depth $depth direct $direct theta ${theta.toSeq}"
+        val dense = EbwAggregator.run(rdd, k, theta, link)
+        val sp = EbwAggregator.runPattern(pat, k, theta, link)
+        assert(sp.count == 3)
+        assert(math.abs(sp.fval - dense.fval) < 1e-12, what)
+        assert(math.abs(sp.wrsum - dense.wrsum) < 1e-12, what)
+        for (i <- 0 until k) assert(math.abs(sp.s(i) - dense.s(i)) < 1e-12, s"s $i $what")
+        assertAscending(sp.gramKeys)
+        val got = sp.gramKeys.zip(sp.gramVals).toMap
+        for (i <- 0 until k; j <- i until k) {
+          val v = got.getOrElse(i.toLong * k + j, 0.0)
+          assert(math.abs(v - dense.gram(EbwAggregator.pidx(k, i, j))) < 1e-12,
+            s"gram ($i,$j) $what")
+        }
+        // every stored key is a real upper-triangle cell, and the pattern
+        // is structural: the same keys at every theta and link
+        assert(sp.gramKeys.forall(key => key % k >= key / k))
+        assert(sp.gramKeys.length == 15, s"${sp.gramKeys.toSeq} $what")
+      } finally pat.release()
+      assert(!spark.sparkContext.getPersistentRDDs.contains(pat.blocks.id))
+    }
+  }
+
+  test("a sparse-driver solve on the direct reduction repeats bit for bit") {
+    import org.apache.spark.ml.linalg.Vectors
+    // two one-hot blocks of 300 cells (k = 600 > denseGramMax) with
+    // fractional base weights, in 5 partitions on local[4]: 5 is the
+    // most partitions a depth-2 tree leaves unmerged, so the passes take
+    // the direct reduction and the validation sums run in partition
+    // order too
+    val rng = new scala.util.Random(23)
+    val k = 600
+    val rows = Seq.fill(6000) {
+      val a = rng.nextInt(300)
+      val b = 300 + rng.nextInt(300)
+      (Vectors.sparse(k, Array(a, b), Array(1.0, 1.0)), 0.5 + rng.nextDouble())
+    }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 5))
+      .toDF("feat", "w0")
+    assert(EbwSizing.finalParts(5, 2) == 5)
+    val m = Array.tabulate(k)(j => (if (j % 2 == 0) 1.05 else 0.95) / 300)
+    val runs = Seq.fill(3)(EntropyBalance.entropyBalance(df, "feat", "w0", m))
+    assert(runs.forall(_.converged), runs.map(_.errorMessage))
+    def bits(r: EbwResult) = r.equalityMultipliers.map(java.lang.Double.doubleToLongBits)
+    for (r <- runs.tail) {
+      assert(r.nIterations == runs.head.nIterations)
+      val differ = bits(r).zip(bits(runs.head)).count { case (a, b) => a != b }
+      assert(differ == 0, s"$differ of $k multipliers differ between solves")
     }
   }
 }
