@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Graph}
@@ -42,7 +42,6 @@ object PairScaling {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
     // doubling chain; SPARK_GRAFT_SCALING_MULTIPLES="1,2,4,8,16,32,64"
     // extends the evidence to the sizes where fixed scheduling overhead
@@ -50,14 +49,7 @@ object PairScaling {
     val multiples = sys.env.get("SPARK_GRAFT_SCALING_MULTIPLES")
       .map(_.split(",").map(_.trim.toInt).toSeq)
       .getOrElse(Seq(1, 2, 4, 8, 16))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
 
     // comma-separated op allowlist for re-measuring one tier
     val only = sys.env.get("SPARK_GRAFT_SCALING_ONLY")

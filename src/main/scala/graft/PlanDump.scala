@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Optimization-round helper: dump `.explain("formatted")` for a
   * comma-separated query subset to an output directory (one file per
   * query) so plan claims in OPTIMIZATION_r18.md are checkable without
-  * running Spark. Mirrors the Bench session config exactly.
+  * running Spark. Runs in Bench's session ([[GraftSession.forMain]]).
   *
   *   sbt "runMain graft.PlanDump /root/testdata/sf0.1 plans/r18 q1,q2 [suffix]"
   */
@@ -16,16 +15,7 @@ object PlanDump {
     val outDir = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val suffix = if (args.length > 3) args(3) else "before"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

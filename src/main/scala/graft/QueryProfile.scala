@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Throwaway optimization-round profiler: run named SparkEntry queries
   * with a stage-metrics listener and print per-stage task time so the
   * cost lands on a named stage. Delete when the round closes. */
@@ -9,16 +7,7 @@ object QueryProfile {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
     val stageTime = new java.util.concurrent.ConcurrentHashMap[Int, (Int, Long, Long, String)]()
     val taskAcc = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -47,13 +47,7 @@ object ScaleUp {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/sfx1")
     val m = sys.env.getOrElse("SPARK_GRAFT_SCALE_M", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
     def rd(t: String) = spark.read.parquet(s"$sfDir/$t.parquet")
     def wr(df: DataFrame, t: String): Unit =
       df.write.mode("overwrite").parquet(s"$outDir/$t.parquet")

@@ -1,29 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER=local-cluster[2,16,4096] replays every gate
-    // across a real executor boundary (see Bench.scala) — catches
-    // non-serializable closures and broadcast assumptions local[] masks.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Bench: AQE-planned cached-plan output partitioning (the
-      // r18 optimization conf) so Verify replays the exact plans the
-      // bench times
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_JARS").foreach(j => builder.config("spark.jars", j))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the session Bench times; SPARK_GRAFT_MASTER=local-cluster[...]
+    // replays every gate across a real executor boundary, catching
+    // non-serializable closures and broadcast assumptions local[] masks
+    val spark = GraftSession.forMain()
     new java.io.File(outDir).mkdirs()
     // comma-separated allowlist for iterating on a single gate locally;
     // unset (the driver's mode) dumps everything

@@ -522,7 +522,8 @@ private[ebw] object EbwAggregator {
   }
 
   /** Validation + sizing pass: returns (badRows, sumW, n, sumPairs) where
-   * sumPairs = Σ_i nnz_i(nnz_i+1)/2 — the total Gram-entry contributions,
+   * sumPairs = Σ_i nnz_i(nnz_i+1)/2 over each row's [[rowNnz]] — the total
+   * Gram-entry contributions (Σ slots of the compiled [[GramBlock]]s),
    * the input to EbwSizing's partition/depth/mode heuristic (counted in
    * the same scan that checks finiteness, so sizing costs nothing extra).
    * One job; the per-partition sums are added in partition order. */
@@ -551,8 +552,10 @@ private[ebw] object EbwAggregator {
   /** The row-validity predicate of every solver, single and grouped:
    * -1 when the row is invalid (NaN, infinite or non-positive w0;
    * missing or malformed features; a non-finite feature value), else the
-   * row's feature nnz. Mirrors the reference's inputs_are_invalid
-   * (shared.py:105-133). */
+   * number of entries the row contributes to the Gram: a dense row's
+   * nonzeros, a sparse row's listed indices, zeros included (the Gram
+   * paths skip a dense row's zeros and key every listed sparse index).
+   * Mirrors the reference's inputs_are_invalid (shared.py:105-133). */
   def rowNnz(idx: Array[Int], vals: Array[Double], w0: Double, k: Int): Int = {
     if (w0.isNaN || w0.isInfinite || w0 <= 0.0 || vals == null) return -1
     if (idx == null) { if (vals.length != k) return -1 }
@@ -566,6 +569,6 @@ private[ebw] object EbwAggregator {
       if (v != 0.0) nnz += 1
       p += 1
     }
-    nnz
+    if (idx == null) nnz else vals.length
   }
 }

@@ -133,7 +133,9 @@ private[ebw] object EbwSizing {
 
   /**
    * @param k            moment dimension
-   * @param sumPairs     Σ nnz_i(nnz_i+1)/2 from the validation pass
+   * @param sumPairs     Σ nnz_i(nnz_i+1)/2 from the validation pass, nnz_i
+   *                     a dense row's nonzeros or a sparse row's listed
+   *                     entries (EbwAggregator.rowNnz)
    * @param currentParts partitions of the prepared row RDD
    * @param maxResultSize `spark.driver.maxResultSize` in bytes (0 = unlimited)
    * @param maxHeap      driver JVM max heap (Runtime.maxMemory)

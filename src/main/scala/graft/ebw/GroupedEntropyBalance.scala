@@ -64,8 +64,9 @@ object GroupedEntropyBalance {
 
   /** One pass: per-group sumW plus the same validation discipline as
    * EbwAggregator.validate (fail fast, never AIOOBE in the solve loop),
-   * and the total Gram-entry contributions Σ nnz(nnz+1)/2 — the EbwSizing
-   * input, counted in the same scan so routing costs nothing extra. */
+   * and the total Gram-entry contributions Σ nnz(nnz+1)/2 (nnz per
+   * EbwAggregator.rowNnz) — the EbwSizing input, counted in the same scan
+   * so routing costs nothing extra. */
   private def validateSumW(
       rows: RDD[GRow], nG: Int, k: Int): (Array[Double], Long) = {
     val w0Stats = rows.treeAggregate(new Array[Double](nG + 2))(

@@ -1,8 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.ops.{Dedup, Sampling, TextMetrics}
 
 /**
@@ -28,20 +28,14 @@ import graft.ops.{Dedup, Sampling, TextMetrics}
  *      sequence packing of the scrubbed corpus (training-batch shapes)
  *
  * Every stage is a narrow map or a single keyed shuffle; nothing collects
- * to the driver except final counts. Run:
+ * to the driver except final counts. Run (session env:
+ * [[graft.GraftSession.forMain]], e.g. SPARK_GRAFT_CPUS=8):
  *   sbt "runMain graft.examples.CurationPipelineExample [sfDir]"
  */
 object CurationPipelineExample {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("curation-pipeline-example")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val n0 = docs.count()

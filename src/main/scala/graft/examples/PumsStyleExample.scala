@@ -1,8 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.ebw.{DesignMatrix, EbwOptions, EbwLog, EntropyBalance, ProblemIO}
 
 /**
@@ -13,19 +13,13 @@ import graft.ebw.{DesignMatrix, EbwOptions, EbwLog, EntropyBalance, ProblemIO}
  * balance — same moment structure (group dummies + group x variable
  * interactions), built by DesignMatrix.equalizeGroups.
  *
- * Run: sbt "runMain graft.examples.PumsStyleExample [sfDir]"
+ * Run (session env: [[graft.GraftSession.forMain]], e.g. SPARK_GRAFT_CPUS=8):
+ *   sbt "runMain graft.examples.PumsStyleExample [sfDir]"
  */
 object PumsStyleExample {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("pums-style-example")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
     EbwLog.setupLogging("/tmp/ebw_example.log")
 
     val cust = spark.read.parquet(s"$sfDir/customer.parquet")

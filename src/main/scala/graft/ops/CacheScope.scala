@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -39,17 +40,13 @@ private[graft] object CacheScope {
    * owning index object, never by `Dedup`/`Similarity.unpersistAll`. */
   val Index = "index"
 
-  /** LEGACY scope: Bloom-filter broadcasts, from when
-   * [[Dedup.exactIncrementalBloom]] pinned a session-lifetime broadcast.
-   * The filter now lives inside the result plan as a foldable literal
-   * (nothing to track), so this scope stays empty; kept so
-   * `Dedup.releaseBloomFilters` remains a safe no-op. */
-  val Bloom = "bloom"
-
   private val registry =
     new java.util.WeakHashMap[
       SparkSession,
       scala.collection.mutable.Map[String, scala.collection.mutable.Buffer[DataFrame]]]()
+
+  /** Set once the first pin without cached-plan AQE has been reported. */
+  private[graft] val warnedCachedPlan = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Cache `df` and remember it under its session + scope for later release. */
   def track(df: DataFrame, scope: String = Ops): DataFrame = synchronized {
@@ -58,6 +55,12 @@ private[graft] object CacheScope {
     // sweep stopped sessions here to bound the registry to live sessions
     // plus at most the most recently stopped ones.
     registry.keySet.removeIf(s => s.sparkContext.isStopped)
+    if (!df.sparkSession.conf.get(GraftSession.CachedPlanConf, "false").toBoolean &&
+        warnedCachedPlan.compareAndSet(false, true))
+      org.slf4j.LoggerFactory.getLogger("graft.ops.CacheScope").warn(
+        s"${GraftSession.CachedPlanConf} is off: operator pins are planned " +
+          "without AQE and keep every shuffle partition, so their consumers run " +
+          "near-empty tasks; build the session with graft.GraftSession.builder")
     df.cache()
     var scopes = registry.get(df.sparkSession)
     if (scopes == null) {
@@ -68,42 +71,13 @@ private[graft] object CacheScope {
     df
   }
 
-  private val broadcasts =
-    new java.util.WeakHashMap[
-      SparkSession,
-      scala.collection.mutable.Map[
-        String, scala.collection.mutable.Buffer[org.apache.spark.broadcast.Broadcast[_]]]]()
-
-  /** Remember an operator-created broadcast (e.g. the incremental-dedup
-   * Bloom filter) under a scope for later release — without tracking,
-   * every call would pin its broadcast on the driver and all executors
-   * for the application lifetime. */
-  def trackBroadcast(spark: SparkSession,
-      bc: org.apache.spark.broadcast.Broadcast[_],
-      scope: String = Ops): Unit = synchronized {
-    var scopes = broadcasts.get(spark)
-    if (scopes == null) {
-      scopes = scala.collection.mutable.Map.empty
-      broadcasts.put(spark, scopes)
-    }
-    scopes.getOrElseUpdate(scope, scala.collection.mutable.Buffer.empty) += bc
-  }
-
   /** Unpersist every operator-cached frame of `spark` in `scope`
-   * (non-blocking), destroy that scope's tracked broadcasts, and forget
-   * both. Safe to call at any time for CACHES (in-flight queries
-   * re-materialize lazily) — but a DESTROYED BROADCAST does not come
-   * back, which is why Bloom broadcasts live in their own scope and are
-   * never released by the routine Ops-scope call. */
+   * (non-blocking) and forget them. Safe to call at any time: in-flight
+   * queries re-materialize lazily. */
   def unpersistAll(spark: SparkSession, scope: String = Ops): Unit = synchronized {
     val scopes = registry.get(spark)
     if (scopes != null) scopes.remove(scope).foreach(_.foreach { df =>
       try df.unpersist(false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    })
-    val bscopes = broadcasts.get(spark)
-    if (bscopes != null) bscopes.remove(scope).foreach(_.foreach { bc =>
-      try bc.destroy()
       catch { case scala.util.control.NonFatal(_) => () }
     })
   }

@@ -252,14 +252,6 @@ object Dedup {
     if (cur.forall(_ < atLeast)) spark.conf.set(key, atLeast.toString)
   }
 
-  /** Historical release hook from when [[exactIncrementalBloom]] pinned a
-   * session-lifetime broadcast. The filter now lives inside the result's
-   * own plan as a literal (released by GC with the plan), so there is
-   * nothing to destroy; kept as a no-op for source compatibility, and it
-   * still drains any legacy entries in the Bloom scope. */
-  def releaseBloomFilters(spark: org.apache.spark.sql.SparkSession): Unit =
-    CacheScope.unpersistAll(spark, CacheScope.Bloom)
-
   /** Canonical URL key: lowercase, strip scheme / leading `www.` /
    * fragment / query string / trailing slashes. Anchored regexes in the
    * Java∩RE2 subset; each pattern can match at most once, so Spark's

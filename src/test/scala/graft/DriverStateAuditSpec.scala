@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /**
  * Driver-state meta-audit — the [[InventorySpec]] pattern applied to the
  * other recurring scale risk: a `.collect()`-family call whose result
@@ -15,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * Out of scope, deliberately: the run harness mains (Bench/Verify/
  * *Scaling/ScaleUp collect RESULT summaries by design) and test sources.
  */
-class DriverStateAuditSpec extends AnyFunSuite {
+class DriverStateAuditSpec extends GraftSparkSuite {
 
   private val pattern =
     """\.collect\(\)|\.head\(\)|\.first\(\)|collectAsList|toLocalIterator""".r
@@ -122,12 +120,6 @@ class DriverStateAuditSpec extends AnyFunSuite {
     "return; lazy scan results keep their pin until " +
     "Profile.unpersistAll") {
     import org.apache.spark.sql.functions._
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
     val scan = graft.ops.CacheScope.Scan
     graft.ops.CacheScope.unpersistAll(spark, scan) // a clean slate
     val orders = spark.read

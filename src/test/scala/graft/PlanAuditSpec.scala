@@ -1,23 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /**
  * Plan audits: the scale claims in SURVEY.md §6 (pushdown, pruning,
  * broadcast dims, bounded shuffle counts, no-shuffle top-k) asserted
  * against the actual physical plans so a regression in plan shape fails
  * CI, not a 100 TB run.
  */
-class PlanAuditSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("plan-audit")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class PlanAuditSpec extends GraftSparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * Source/sink coverage: the operators are source-agnostic DataFrame
@@ -14,15 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * PlanAuditSpec). Verified on the real testdata tables, not synthetic
  * frames.
  */
-class SourcesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("sources-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class SourcesSpec extends GraftSparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
   private def docs = spark.read.parquet(s"$dir/documents.parquet")

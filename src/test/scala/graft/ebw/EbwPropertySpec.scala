@@ -1,8 +1,7 @@
 package graft.ebw
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSparkSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * Property-based fuzzing, the analogue of the reference's hypothesis tests
@@ -11,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * match the targets — or reports failure cleanly; it never throws on
  * validated input.
  */
-class EbwPropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("ebw-prop-spec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class EbwPropertySpec extends GraftSparkSuite {
 
   private val problemGen: Gen[(Array[Array[Double]], Array[Double], Int)] = for {
     n <- Gen.choose(10, 24)

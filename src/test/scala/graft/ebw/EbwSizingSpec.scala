@@ -1,7 +1,6 @@
 package graft.ebw
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSparkSuite
 
 /**
  * Pins the sparse-Gram sizing heuristic (EbwSizing) and proves the
@@ -11,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * maxResultSize trip): below the budget nothing changes, above it the
  * solve keeps converging with O(k) driver traffic instead of dying.
  */
-class EbwSizingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("ebw-sizing-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class EbwSizingSpec extends GraftSparkSuite {
 
   private val GiB = 1L << 30
 

@@ -1,20 +1,12 @@
 package graft.ebw
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSparkSuite
+import org.apache.spark.sql.DataFrame
 
 /** Replicates the reference test suite numerically:
  * test_dense.py, test_sparse.py, test_colinear.py, test_elastic.py,
  * test_penalty.py (same problem shapes, same assertions). */
-class EbwSolverSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("ebw-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class EbwSolverSpec extends GraftSparkSuite {
 
   import org.apache.spark.sql.functions._
 

@@ -1,20 +1,11 @@
 package graft.ebw
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSparkSuite
 
 /** The large-k sparse-Gram accumulator: the open-addressing table against
  * a reference map, the key-sorted partials and their linear merge, and
  * the sparse aggregation pass built on them against the dense triangle. */
-class GramTableSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("gram-table-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class GramTableSpec extends GraftSparkSuite {
 
   private def assertAscending(keys: Array[Long]): Unit =
     for (p <- 1 until keys.length)
@@ -163,6 +154,29 @@ class GramTableSpec extends AnyFunSuite {
       } finally pat.release()
       assert(!spark.sparkContext.getPersistentRDDs.contains(pat.blocks.id))
     }
+  }
+
+  // sizing budgets every key the pattern builds: a dense row's nonzeros,
+  // every listed entry of a sparse row (zeros included)
+  test("validate's sumPairs counts the compiled blocks' slots: dense rows " +
+    "with zeros, sparse rows listing zeros") {
+    val k = 8
+    val rows = Seq(
+      EbwRow(null, Array(1.0, 0.0, 2.0, 0.0, 0.0, 0.5, 0.0, 1.0), 1.5),
+      EbwRow(Array(0, 3, 5, 6), Array(1.0, 0.0, 0.0, -1.0), 0.75),
+      EbwRow(Array(1, 2, 4, 7), Array(0.0, 0.0, 0.0, 0.0), 2.0),
+      EbwRow(null, Array.fill(k)(0.0), 1.0),
+      EbwRow(Array.emptyIntArray, Array.emptyDoubleArray, 1.0),
+      EbwRow(Array(2, 7), Array(0.5, 1.0), 2.0))
+    val rdd = spark.sparkContext.parallelize(rows, 3)
+    val (bad, _, n, sumPairs) = EbwAggregator.validate(rdd, k)
+    assert(bad == 0 && n == rows.length)
+    val slots = rdd.mapPartitions(it =>
+      Iterator(EbwAggregator.compileBlock(it, k).slots.length.toLong)).sum().toLong
+    // dense 4 nonzeros: 10; sparse 4 listed: 10 + 10; dense zeros: 0;
+    // empty: 0; sparse 2 listed: 3
+    assert(slots == 33)
+    assert(sumPairs == slots, s"sumPairs $sumPairs, compiled slots $slots")
   }
 
   test("a sparse-driver solve on the direct reduction repeats bit for bit") {

@@ -1,18 +1,9 @@
 package graft.ebw
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSparkSuite
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class GroupedSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("grouped-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class GroupedSpec extends GraftSparkSuite {
 
   test("grouped solve equals independent per-group solves") {
     val cust = spark.read.parquet("/root/testdata/sf0.01/customer.parquet")

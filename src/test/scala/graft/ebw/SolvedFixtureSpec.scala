@@ -1,8 +1,7 @@
 package graft.ebw
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSparkSuite
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * Cross-implementation solver-parity fixtures: committed problem zips in
@@ -16,15 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * scipy/pypardiso/MKL deps need network) must return exactly these
  * weights. Tol 1e-6 is the round-12 verdict's parity criterion.
  */
-class SolvedFixtureSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("ebw-solved-fixture-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class SolvedFixtureSpec extends GraftSparkSuite {
 
   private def expected(name: String): Array[Double] =
     NpyIO.read(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(

@@ -1,20 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSparkSuite
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Similarity
 
-class FunctionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("functions-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class FunctionsSpec extends GraftSparkSuite {
 
   test("native graft_dot equals built-in composition on real embeddings") {
     GraftFunctions.register(spark)

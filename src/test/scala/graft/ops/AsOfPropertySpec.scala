@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSparkSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * Property fuzz for the as-of join: on random event sets (with heavy
@@ -11,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * match = argmax over right rows with same key and rt <= lt, ordered by
  * (rt, rid); left rows with no candidate are absent from the output.
  */
-class AsOfPropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("asof-prop-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class AsOfPropertySpec extends GraftSparkSuite {
 
   private val caseGen: Gen[(Seq[(Long, Long, Long)], Seq[(Long, Long, Long, Double)])] =
     for {

@@ -1,20 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSparkSuite
 
 /** Funnel + cohort retention: closed-form fixtures, the greedy-fold ==
   * sequential-min equivalence the oracle's cross-derivation rests on, and
   * plan shape. */
-class BehaviorSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("behavior-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class BehaviorSpec extends GraftSparkSuite {
 
   private val steps = Seq("A", "B", "C")
 

@@ -1,22 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftSparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable
 
 /** Round-8 curation operators: domain-mixture sampling, quality-aware
   * survivor election, training-shard assignment, blocked fuzzy linkage,
   * Z-order layout, and distributed BPE training. */
-class CurationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("curation-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class CurationSpec extends GraftSparkSuite {
 
   private def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
@@ -2109,7 +2101,6 @@ class CurationSpec extends AnyFunSuite {
         expectedItems = 10)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(raw.values.forall(_ == 0L), s"$raw")
-    Dedup.releaseBloomFilters(spark)
   }
 
   test("registrableDomain: eTLD+1 under two-label suffixes, plain TLDs, " +

@@ -1,9 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSparkSuite
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * Property fuzz for the curation operators' core invariants:
@@ -19,15 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * - deterministicSample: partitioning-independence — the kept id set is
  *   identical under any repartitioning of the input.
  */
-class DedupPropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("dedup-prop-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class DedupPropertySpec extends GraftSparkSuite {
 
   private val corpusGen: Gen[(Seq[(Long, String)], Int, Long)] = for {
     nDocs <- Gen.choose(1, 40)

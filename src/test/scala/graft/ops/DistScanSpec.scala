@@ -1,10 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSparkSuite
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The shared distributed prefix scan behind the running-total family
   * (ROC AUC, KS, Mann-Whitney, Spearman, BH-FDR, RFM, selectByBudget):
@@ -17,15 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and the stability test below releases it mid-flight to prove results
   * cannot depend on it (the exact failure an early unpersistAll used to
   * cause under the round-14 spark_partition_id bucketing). */
-class DistScanSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("distscan-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class DistScanSpec extends GraftSparkSuite {
 
   private def runProp(prop: Prop, n: Int): Unit = {
     val res = SCTest.check(

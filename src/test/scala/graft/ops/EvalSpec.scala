@@ -1,21 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSparkSuite
 
 /** Eval-tier operators: pass@k against hand-computed combinatorics
   * (incl. the all-pass shortcut and the <k drop rule), Fleiss' kappa on a
   * worked 2-item example plus the modal-panel drop, and majority-vote
   * election determinism under ties. */
-class EvalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("eval-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class EvalSpec extends GraftSparkSuite {
 
   test("passAtK: unbiased estimator matches hand combinatorics") {
     import spark.implicits._

@@ -1,20 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSparkSuite
 
 /** Bucketed interval joins: brute-force equality (every qualifying pair
   * exactly once, none missed), boundary semantics, and bucket-width
   * independence — the bucketing is an execution detail, never semantics. */
-class IntervalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("interval-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class IntervalSpec extends GraftSparkSuite {
 
   // deterministic pseudo-random intervals: spans from tiny (sub-bucket) to
   // huge (many buckets), starts scattered, some zero-length

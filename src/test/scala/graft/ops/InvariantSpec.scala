@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSparkSuite
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * Cross-operator invariants on pseudo-random data — properties that must
@@ -11,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * (Holt with β = 0 IS the EWMA). Deterministic multiplicative-hash data,
  * never an unseeded RNG.
  */
-class InvariantSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("invariant-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class InvariantSpec extends GraftSparkSuite {
 
   private def h(i: Long): Long = (i * 2654435761L) & 0x7fffffffL
 

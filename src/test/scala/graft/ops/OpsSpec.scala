@@ -1,18 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSparkSuite
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class OpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("ops-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class OpsSpec extends GraftSparkSuite {
 
   private def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
@@ -2753,12 +2744,10 @@ class OpsSpec extends AnyFunSuite {
       hashes, expectedItems = 100000, fpp = 0.01)
     assert(outDup.count() == dupIds.count())
 
-    // routine Ops-scope release between pipeline stages must NOT destroy
-    // the bloom broadcast an unconsumed result still references...
+    // routine Ops-scope release between pipeline stages leaves an
+    // unconsumed result intact: its filter is a literal in its own plan
     Dedup.unpersistAll(spark)
     assert(out.count() == newBatch.count())
-    // ...only the dedicated handle does
-    Dedup.releaseBloomFilters(spark)
 
     // envelope fail-fast: a sizing past the maxFilterBytes ceiling
     // throws the sized, range-partition-advice error BEFORE any build

@@ -1,21 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSparkSuite
 
 /** Generation-eval scoring: ROUGE-n against hand-counted clipped
   * overlaps (incl. the clipping rule and the empty-side zero), corpus
   * BLEU against closed-form precision/brevity cases, and the Chao1 /
   * Good–Turing coverage estimators on a tiny countable corpus. */
-class TextEvalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("texteval-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class TextEvalSpec extends GraftSparkSuite {
 
   test("rougeN: unigram and bigram closed forms, clipping, empty side") {
     import spark.implicits._

@@ -1,21 +1,12 @@
 package graft.pipeline
 
+import graft.GraftSparkSuite
 import org.apache.spark.ml.Pipeline
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ebw.{DesignMatrix, EbwOptions, EntropyBalance, ProblemIO}
 
-class PipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("pipeline-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class PipelineSpec extends GraftSparkSuite {
 
   private def cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
     .withColumn("bal_k", col("c_acctbal") / 1000.0)
