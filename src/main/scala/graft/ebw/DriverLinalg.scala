@@ -1,5 +1,7 @@
 package graft.ebw
 
+import org.apache.spark.rdd.RDD
+
 /**
  * Driver-side dense linear algebra for the k x k Newton systems (k << N).
  * Plays the role of pypardiso/scipy solves in the reference
@@ -8,6 +10,37 @@ package graft.ebw
  * columns harmless (test_colinear.py relies on exactly this behavior).
  */
 private[ebw] object DriverLinalg {
+
+  /** a += b elementwise; returns a. */
+  def addInto(a: Array[Double], b: Array[Double]): Array[Double] = {
+    var i = 0
+    while (i < a.length) { a(i) += b(i); i += 1 }
+    a
+  }
+
+  /** The array-sum reduction of the dense EBW passes and of
+   * [[cgSolveRdd]]'s matvecs: `add` folds each element into its task's
+   * zeroed `size`-array, and a depth-2 `treeAggregate` sums the task
+   * arrays. It lives here, not in EbwAggregator, because jobs are
+   * attributed by the frames that launch them: a matvec job must not run
+   * under an EbwAggregator frame. */
+  def treeSum[T](rdd: RDD[T], size: Int)(
+      add: (Array[Double], T) => Unit): Array[Double] =
+    rdd.treeAggregate(new Array[Double](size))(
+      (buf, x) => { add(buf, x); buf }, addInto, depth = 2)
+
+  /** The row and column index of each sparse Gram key i*k+j. */
+  def decode(k: Int, keys: Array[Long]): (Array[Int], Array[Int]) = {
+    val rows = new Array[Int](keys.length)
+    val cols = new Array[Int](keys.length)
+    var p = 0
+    while (p < keys.length) {
+      rows(p) = (keys(p) / k).toInt
+      cols(p) = (keys(p) % k).toInt
+      p += 1
+    }
+    (rows, cols)
+  }
 
   /** Solve (sign*G + diag + ridge*I) x = rhs, G packed upper-triangular
    * SPD-ish, over the `free` coordinates (ascending; all k when null),
@@ -106,39 +139,34 @@ private[ebw] object DriverLinalg {
   /**
    * Jacobi-preconditioned conjugate gradient for the large-k regime:
    * solve (sign*G + diag + ridge*I) x = rhs where G is the SPARSE upper-tri
-   * Gram from EbwAggregator.runPattern (keys = i*k+j, i <= j; any order,
-   * repeats add up). Plays the role of pypardiso.spsolve in the reference
-   * (ebw_routines.py:242-245) without needing a sparse direct
-   * factorization on the driver. Keys are decoded into row/column indices
-   * once per solve, not per matvec. `sign` scales the Gram as in
-   * [[cgSolveRdd]] (-1 for the penalty system whose aggregated dS/dz = -G).
-   * `free` masks pinned coordinates (elastic box): masked rows/cols behave
-   * as identity.
+   * Gram from EbwAggregator.runPattern, given as entries (rows(p),
+   * cols(p), vals(p)) with rows(p) <= cols(p) (any order, repeats add
+   * up): the keys i*k+j [[decode]]d by the caller, which keeps the decode
+   * for as long as the keys stay the same array. Plays the role of
+   * pypardiso.spsolve in the reference (ebw_routines.py:242-245) without
+   * needing a sparse direct factorization on the driver. `sign` scales
+   * the Gram as in [[cgSolveRdd]] (-1 for the penalty system whose
+   * aggregated dS/dz = -G). `free` masks pinned coordinates (elastic
+   * box): masked rows/cols behave as identity.
    */
   def cgSolve(
       k: Int,
-      keys: Array[Long],
+      rows: Array[Int],
+      cols: Array[Int],
       vals: Array[Double],
       diag: Array[Double],
       rhs: Array[Double],
       ridge: Double,
       free: Array[Boolean],
       sign: Double = 1.0): Array[Double] = {
-    val nnz = keys.length
+    val nnz = vals.length
     @inline def isFree(i: Int): Boolean = free == null || free(i)
-    val rows = new Array[Int](nnz)
-    val cols = new Array[Int](nnz)
     val precond = new Array[Double](k)
     var i = 0
     while (i < k) { precond(i) = diag(i) + ridge; i += 1 }
     var p0 = 0
     while (p0 < nnz) {
-      val key = keys(p0)
-      val a = (key / k).toInt
-      val b = (key % k).toInt
-      rows(p0) = a
-      cols(p0) = b
-      if (a == b) precond(a) += sign * vals(p0)
+      if (rows(p0) == cols(p0)) precond(rows(p0)) += sign * vals(p0)
       p0 += 1
     }
     i = 0
@@ -218,7 +246,7 @@ private[ebw] object DriverLinalg {
    * parity spec asserts 1e-8 relative agreement.
    */
   def cgSolveRdd(
-      gram: org.apache.spark.rdd.RDD[(Long, Double)],
+      gram: RDD[(Long, Double)],
       k: Int,
       diag: Array[Double],
       rhs: Array[Double],
@@ -231,14 +259,10 @@ private[ebw] object DriverLinalg {
     val kk = k
     val sg = sign
     // Jacobi preconditioner: Gram diagonal in ONE aggregation pass
-    val gdiag = gram.treeAggregate(new Array[Double](kk))(
-      seqOp = (buf, kv) => {
-        val i = (kv._1 / kk).toInt
-        if ((kv._1 % kk).toInt == i) buf(i) += sg * kv._2
-        buf
-      },
-      combOp = (a, b) => { var i = 0; while (i < kk) { a(i) += b(i); i += 1 }; a },
-      depth = 2)
+    val gdiag = treeSum(gram, kk) { (buf, kv) =>
+      val i = (kv._1 / kk).toInt
+      if ((kv._1 % kk).toInt == i) buf(i) += sg * kv._2
+    }
     val precond = new Array[Double](k)
     var i = 0
     while (i < k) {
@@ -251,23 +275,19 @@ private[ebw] object DriverLinalg {
     def mv(x: Array[Double]): Array[Double] = {
       val xb = sc.broadcast(x)
       try {
-        val gx = gram.treeAggregate(new Array[Double](kk))(
-          seqOp = (buf, kv) => {
-            val key = kv._1
-            val a = (key / kk).toInt
-            val b = (key % kk).toInt
-            val fa = if (freeBc == null) true else freeBc.value(a)
-            val fb = if (freeBc == null) true else freeBc.value(b)
-            if (fa && fb) {
-              val v = sg * kv._2
-              val xv = xb.value
-              buf(a) += v * xv(b)
-              if (a != b) buf(b) += v * xv(a)
-            }
-            buf
-          },
-          combOp = (a, b) => { var i = 0; while (i < kk) { a(i) += b(i); i += 1 }; a },
-          depth = 2)
+        val gx = treeSum(gram, kk) { (buf, kv) =>
+          val key = kv._1
+          val a = (key / kk).toInt
+          val b = (key % kk).toInt
+          val fa = if (freeBc == null) true else freeBc.value(a)
+          val fb = if (freeBc == null) true else freeBc.value(b)
+          if (fa && fb) {
+            val v = sg * kv._2
+            val xv = xb.value
+            buf(a) += v * xv(b)
+            if (a != b) buf(b) += v * xv(a)
+          }
+        }
         var q = 0
         while (q < kk) {
           if (isFree(q)) gx(q) += (diag(q) + ridge) * x(q) else gx(q) = x(q)

@@ -4,9 +4,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
 
 /**
- * The single distributed kernel behind every solver mode: one
- * `treeAggregate` traversal computes, for the current k-dim dual iterate
- * theta,
+ * The distributed passes behind every solver mode, single and grouped.
+ * For a k-dim dual iterate theta, a pass computes
  *
  *   s    = sum_i w0_i r_i x_i                  (k)      weighted moment totals
  *   gram = sum_i w0_i r'_i x_i x_i^T           (k(k+1)/2, packed upper tri)
@@ -16,12 +15,14 @@ import org.apache.spark.storage.StorageLevel
  * where r_i = link(x_i . theta). This is the same access pattern the
  * reference implements with MKL sparse matvecs + gram_matrix_mkl
  * (ebw_routines.py:211,226-233) — here it distributes over the N dimension
- * with O(k^2) driver traffic per pass and zero shuffles (treeAggregate is a
- * reduction). Buffers are flat primitive arrays: no per-row allocation.
- * Large k keeps the Gram sparse: [[sparsePattern]] compiles each
- * partition's Gram pattern once per solve and [[runPattern]] fills only
- * its values on every pass. Every pass job is launched from a method of
- * this object.
+ * with O(k^2) driver traffic per pass and zero shuffles. Every pass shares
+ * one set of per-row helpers ([[margin]], [[kl]], [[addScaled]],
+ * [[addPacked]]) and one validation pass ([[validate]]). The dense pass
+ * ([[run]]) is one `treeAggregate` over flat primitive arrays, one
+ * block per group. Large k keeps the Gram sparse: [[sparsePattern]]
+ * compiles each partition's Gram pattern once per solve and
+ * [[runPattern]] fills only its values on every pass. Every pass job is
+ * launched from a method of this object.
  */
 private[ebw] object EbwAggregator {
 
@@ -39,37 +40,10 @@ private[ebw] object EbwAggregator {
   /** Packed upper-triangular index for i <= j. */
   @inline def pidx(k: Int, i: Int, j: Int): Int = i * k - i * (i + 1) / 2 + j
 
-  def run(rows: RDD[EbwRow], k: Int, theta: Array[Double], link: Link): Pass = {
-    val tri = k * (k + 1) / 2
-    val size = k + tri + 3
-    val th = theta
-    val lk = link
-    val out = rows.treeAggregate(new Array[Double](size))(
-      seqOp = (buf, row) => { add(buf, row, th, lk, k, tri); buf },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < size) { a(i) += b(i); i += 1 }
-        a
-      },
-      depth = 2)
-    Pass(
-      s = java.util.Arrays.copyOfRange(out, 0, k),
-      gram = java.util.Arrays.copyOfRange(out, k, k + tri),
-      fval = out(k + tri),
-      wrsum = out(k + tri + 1),
-      count = out(k + tri + 2).toLong)
-  }
-
-  private def add(
-      buf: Array[Double],
-      row: EbwRow,
-      theta: Array[Double],
-      link: Link,
-      k: Int,
-      tri: Int): Unit = {
+  /** t = x . theta for one row (dense or sparse encoding). */
+  @inline def margin(row: EbwRow, theta: Array[Double], k: Int): Double = {
     val vals = row.vals
     val idx = row.idx
-    // t = x . theta
     var t = 0.0
     if (idx == null) {
       var j = 0
@@ -78,22 +52,41 @@ private[ebw] object EbwAggregator {
       var p = 0
       while (p < idx.length) { t += vals(p) * theta(idx(p)); p += 1 }
     }
-    val (r, rp) = link.rAndSlope(t)
-    val w0 = row.w0
-    val wr = w0 * r
-    // KL criterion term; r -> 0 limit of (r ln r - r + 1) is 1.
-    buf(k + tri) += (if (r <= 0.0) w0 else w0 * (r * math.log(r) - r + 1.0))
-    buf(k + tri + 1) += wr
-    buf(k + tri + 2) += 1.0
-    val wrp = w0 * rp
+    t
+  }
+
+  /** One row's KL criterion term w0 (r ln r - r + 1); its r -> 0 limit
+   * is w0. */
+  @inline def kl(w0: Double, r: Double): Double =
+    if (r <= 0.0) w0 else w0 * (r * math.log(r) - r + 1.0)
+
+  /** buf(off + i) += scale * x_i over the row's entries (a dense row's
+   * nonzeros, a sparse row's listed indices). */
+  @inline def addScaled(buf: Array[Double], off: Int, k: Int,
+      idx: Array[Int], vals: Array[Double], scale: Double): Unit =
     if (idx == null) {
       var i = 0
       while (i < k) {
         val vi = vals(i)
-        buf(i) += wr * vi
-        if (wrp != 0.0 && vi != 0.0) {
-          val wv = wrp * vi
-          val base = k + i * k - i * (i + 1) / 2
+        if (vi != 0.0) buf(off + i) += scale * vi
+        i += 1
+      }
+    } else {
+      var p = 0
+      while (p < idx.length) { buf(off + idx(p)) += scale * vals(p); p += 1 }
+    }
+
+  /** scale * x x^T into the packed upper triangle at buf(off ..): a dense
+   * row's nonzero rows, every pair of a sparse row's listed indices. */
+  @inline def addPacked(buf: Array[Double], off: Int, k: Int,
+      idx: Array[Int], vals: Array[Double], scale: Double): Unit =
+    if (idx == null) {
+      var i = 0
+      while (i < k) {
+        val vi = vals(i)
+        if (vi != 0.0) {
+          val wv = scale * vi
+          val base = off + pidx(k, i, 0)
           var j = i
           while (j < k) { buf(base + j) += wv * vals(j); j += 1 }
         }
@@ -103,17 +96,48 @@ private[ebw] object EbwAggregator {
       val nnz = idx.length
       var p = 0
       while (p < nnz) {
-        val i = idx(p)
-        val vi = vals(p)
-        buf(i) += wr * vi
-        if (wrp != 0.0) {
-          val wv = wrp * vi
-          val base = k + i * k - i * (i + 1) / 2
-          var q = p
-          while (q < nnz) { buf(base + idx(q)) += wv * vals(q); q += 1 }
-        }
+        val wv = scale * vals(p)
+        val base = off + pidx(k, idx(p), 0)
+        var q = p
+        while (q < nnz) { buf(base + idx(q)) += wv * vals(q); q += 1 }
         p += 1
       }
+    }
+
+  /**
+   * The dense pass, one block [s(k), gram(tri), fval, wrsum, count] per
+   * group: group g's rows (EbwRow.g; every row is group 0 in a single
+   * problem) at `thetas(g)` under `links(g)`. Rows of the groups `skip`
+   * marks (converged grouped problems; null skips none) add nothing. One
+   * `treeAggregate` of nG * (k + k(k+1)/2 + 3) doubles.
+   */
+  def run(rows: RDD[EbwRow], k: Int, thetas: Array[Array[Double]],
+      links: Array[Link], skip: Array[Boolean] = null): Array[Pass] = {
+    val tri = k * (k + 1) / 2
+    val blk = k + tri + 3
+    val out = DriverLinalg.treeSum(rows, thetas.length * blk) { (buf, row) =>
+      val g = row.g
+      if (skip == null || !skip(g)) {
+        val (r, rp) = links(g).rAndSlope(margin(row, thetas(g), k))
+        val off = g * blk
+        val w0 = row.w0
+        val wr = w0 * r
+        val wrp = w0 * rp
+        addScaled(buf, off, k, row.idx, row.vals, wr)
+        if (wrp != 0.0) addPacked(buf, off + k, k, row.idx, row.vals, wrp)
+        buf(off + k + tri) += kl(w0, r)
+        buf(off + k + tri + 1) += wr
+        buf(off + k + tri + 2) += 1.0
+      }
+    }
+    Array.tabulate(thetas.length) { g =>
+      val off = g * blk
+      Pass(
+        s = java.util.Arrays.copyOfRange(out, off, off + k),
+        gram = java.util.Arrays.copyOfRange(out, off + k, off + k + tri),
+        fval = out(off + k + tri),
+        wrsum = out(off + k + tri + 1),
+        count = out(off + k + tri + 2).toLong)
     }
   }
 
@@ -251,8 +275,7 @@ private[ebw] object EbwAggregator {
     var wrsum = 0.0
     var count = 0L
     for (part <- parts) {
-      var i = 0
-      while (i < k) { s(i) += part.s(i); i += 1 }
+      DriverLinalg.addInto(s, part.s)
       fval += part.fval
       wrsum += part.wrsum
       count += part.count
@@ -305,7 +328,7 @@ private[ebw] object EbwAggregator {
       val (r, rp) = link.rAndSlope(t)
       val w0 = b.w0(row)
       val wr = w0 * r
-      fval += (if (r <= 0.0) w0 else w0 * (r * math.log(r) - r + 1.0))
+      fval += kl(w0, r)
       wrsum += wr
       p = lo
       while (p < hi) { s(idx(p)) += wr * vals(p); p += 1 }
@@ -351,29 +374,13 @@ private[ebw] object EbwAggregator {
       val s: Array[Double], val gram: GramSum,
       var fval: Double, var wrsum: Double, var count: Long) extends Serializable {
     def merge(o: SparsePartial): SparsePartial = {
-      var i = 0
-      while (i < s.length) { s(i) += o.s(i); i += 1 }
+      DriverLinalg.addInto(s, o.s)
       gram.addAll(o.gram)
       fval += o.fval
       wrsum += o.wrsum
       count += o.count
       this
     }
-  }
-
-  /** t = x . theta for one row (dense or sparse encoding). */
-  @inline private def margin(row: EbwRow, theta: Array[Double], k: Int): Double = {
-    val vals = row.vals
-    val idx = row.idx
-    var t = 0.0
-    if (idx == null) {
-      var j = 0
-      while (j < k) { t += vals(j) * theta(j); j += 1 }
-    } else {
-      var p = 0
-      while (p < idx.length) { t += vals(p) * theta(idx(p)); p += 1 }
-    }
-    t
   }
 
   /**
@@ -386,32 +393,15 @@ private[ebw] object EbwAggregator {
   def runStats(rows: RDD[EbwRow], k: Int, theta: Array[Double], link: Link): Pass = {
     val th = theta
     val lk = link
-    val size = k + 3
-    val out = rows.treeAggregate(new Array[Double](size))(
-      seqOp = (buf, row) => {
-        val vals = row.vals
-        val idx = row.idx
-        val (r, _) = lk.rAndSlope(margin(row, th, k))
-        val w0 = row.w0
-        val wr = w0 * r
-        buf(k) += (if (r <= 0.0) w0 else w0 * (r * math.log(r) - r + 1.0))
-        buf(k + 1) += wr
-        buf(k + 2) += 1.0
-        if (idx == null) {
-          var i = 0
-          while (i < k) { buf(i) += wr * vals(i); i += 1 }
-        } else {
-          var p = 0
-          while (p < idx.length) { buf(idx(p)) += wr * vals(p); p += 1 }
-        }
-        buf
-      },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < size) { a(i) += b(i); i += 1 }
-        a
-      },
-      depth = 2)
+    val out = DriverLinalg.treeSum(rows, k + 3) { (buf, row) =>
+      val (r, _) = lk.rAndSlope(margin(row, th, k))
+      val w0 = row.w0
+      val wr = w0 * r
+      addScaled(buf, 0, k, row.idx, row.vals, wr)
+      buf(k) += kl(w0, r)
+      buf(k + 1) += wr
+      buf(k + 2) += 1.0
+    }
     Pass(
       s = java.util.Arrays.copyOfRange(out, 0, k),
       gram = null,
@@ -469,84 +459,52 @@ private[ebw] object EbwAggregator {
    */
   def ratioSeed(rows: RDD[(EbwRow, Double)], k: Int): (Array[Double], Array[Double]) = {
     val tri = k * (k + 1) / 2
-    val size = tri + k
-    val out = rows.treeAggregate(new Array[Double](size))(
-      seqOp = (buf, rowAndRatio) => {
-        val (row, ratio) = rowAndRatio
-        // defensive row guard: the solver validates the same frame
-        // separately, but this pass must never AIOOBE on its own
-        if (ratio > 0.0 && !ratio.isInfinite && !ratio.isNaN &&
-            rowNnz(row.idx, row.vals, row.w0, k) >= 0) {
-          val lnr = math.log(ratio)
-          val w0 = row.w0
-          val vals = row.vals
-          val idx = row.idx
-          if (idx == null) {
-            var i = 0
-            while (i < k) {
-              val vi = vals(i)
-              if (vi != 0.0) {
-                buf(tri + i) += w0 * lnr * vi
-                val wv = w0 * vi
-                val base = i * k - i * (i + 1) / 2
-                var j = i
-                while (j < k) { buf(base + j) += wv * vals(j); j += 1 }
-              }
-              i += 1
-            }
-          } else {
-            val nnz = idx.length
-            var p = 0
-            while (p < nnz) {
-              val i = idx(p)
-              val vi = vals(p)
-              buf(tri + i) += w0 * lnr * vi
-              val wv = w0 * vi
-              val base = i * k - i * (i + 1) / 2
-              var q = p
-              while (q < nnz) { buf(base + idx(q)) += wv * vals(q); q += 1 }
-              p += 1
-            }
-          }
-        }
-        buf
-      },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < size) { a(i) += b(i); i += 1 }
-        a
-      },
-      depth = 2)
+    val out = DriverLinalg.treeSum(rows, tri + k) { (buf, rowAndRatio) =>
+      val (row, ratio) = rowAndRatio
+      // defensive row guard: the solver validates the same frame
+      // separately, but this pass must never AIOOBE on its own
+      if (ratio > 0.0 && !ratio.isInfinite && !ratio.isNaN &&
+          rowNnz(row.idx, row.vals, row.w0, k) >= 0) {
+        val w0 = row.w0
+        addScaled(buf, tri, k, row.idx, row.vals, w0 * math.log(ratio))
+        addPacked(buf, 0, k, row.idx, row.vals, w0)
+      }
+    }
     (java.util.Arrays.copyOfRange(out, 0, tri),
-      java.util.Arrays.copyOfRange(out, tri, size))
+      java.util.Arrays.copyOfRange(out, tri, tri + k))
   }
 
-  /** Validation + sizing pass: returns (badRows, sumW, n, sumPairs) where
-   * sumPairs = Σ_i nnz_i(nnz_i+1)/2 over each row's [[rowNnz]] — the total
-   * Gram-entry contributions (Σ slots of the compiled [[GramBlock]]s),
-   * the input to EbwSizing's partition/depth/mode heuristic (counted in
-   * the same scan that checks finiteness, so sizing costs nothing extra).
-   * One job; the per-partition sums are added in partition order. */
-  def validate(rows: RDD[EbwRow], k: Int): (Long, Double, Long, Long) = {
+  /** Validation + sizing pass of every solver, single (`nG` = 1) and
+   * grouped: returns (badRows, sumW, n, sumPairs) with sumW(g) the w0
+   * sum of group g's valid rows and sumPairs = Σ_i nnz_i(nnz_i+1)/2 over
+   * each row's [[rowNnz]] — the total Gram-entry contributions (Σ slots
+   * of the compiled [[GramBlock]]s), the input to EbwSizing's
+   * partition/depth/mode heuristic (counted in the same scan that checks
+   * finiteness, so sizing costs nothing extra). One job; the
+   * per-partition sums are added in partition order, so every sum
+   * repeats for a fixed partitioning. */
+  def validate(rows: RDD[EbwRow], k: Int,
+      nG: Int): (Long, Array[Double], Long, Long) = {
     val parts = new Array[Array[Double]](rows.getNumPartitions)
+    // [bad, n, sumPairs, sumW(0 until nG)]
     rows.sparkContext.runJob(rows, (it: Iterator[EbwRow]) => {
-      val buf = new Array[Double](4)
+      val buf = new Array[Double](3 + nG)
       while (it.hasNext) {
         val row = it.next()
         val nnz = rowNnz(row.idx, row.vals, row.w0, k)
         if (nnz < 0) buf(0) += 1.0
         else {
-          buf(1) += row.w0
-          buf(3) += nnz.toDouble * (nnz + 1) / 2
+          buf(3 + row.g) += row.w0
+          buf(2) += nnz.toDouble * (nnz + 1) / 2
         }
-        buf(2) += 1.0
+        buf(1) += 1.0
       }
       buf
     }, (i: Int, buf: Array[Double]) => parts(i) = buf)
-    // summed in partition order, so sum(w0) repeats for a fixed partitioning
-    val out = new Array[Double](4)
-    for (buf <- parts; j <- 0 until 4) out(j) += buf(j)
-    (out(0).toLong, out(1), out(2).toLong, out(3).toLong)
+    val out = new Array[Double](3 + nG)
+    parts.foreach(DriverLinalg.addInto(out, _))
+    (out(0).toLong, java.util.Arrays.copyOfRange(out, 3, 3 + nG),
+      out(1).toLong, out(2).toLong)
   }
 
   /** The row-validity predicate of every solver, single and grouped:

@@ -48,13 +48,19 @@ private[ebw] object EbwSizing {
    * it replaces. */
   val SerBytesPerEntry: Long = 32L
   /** Driver-resident bytes per merged Gram entry. The merged keys and
-   * values take 16 B/entry; each cgSolve call decodes them into 4 B row
-   * and 4 B column indices, 8 B/entry more while it runs. While a
-   * GramSum adds keyed partials up it holds its pending runs (under twice
-   * the merged Gram), the arriving partial and one merge's output, under
-   * 64 B per merged entry in all. 48 is kept as a conservative upper
-   * bound (×2 merge working set in `plan`). The direct reduction holds
-   * per-local-entry state instead ([[DirectBytesPerLocalEntry]]). */
+   * values take 16 B/entry; the Newton kernel keeps them decoded into 4 B
+   * row and 4 B column indices for cgSolve, 8 B/entry more — held for the
+   * whole solve on the direct reduction (its keys never change), and
+   * from one direction to the next pass's on the keyed tree. That is
+   * 24 B/entry held between passes, plus 8 B for the next pass's values.
+   * While a GramSum adds keyed partials up it holds its pending runs
+   * (under twice the merged Gram), the arriving partial and one merge's
+   * output, under 64 B per merged entry in all, 72 B with the kernel's
+   * decode of the previous keys.
+   * 48 is kept as a conservative upper bound: `plan` budgets it ×2 (96 B)
+   * for the merge working set, which still covers both. The direct
+   * reduction holds per-local-entry state on top
+   * ([[DirectBytesPerLocalEntry]]). */
   val HeapBytesPerEntry: Long = 48L
   /** Driver bytes per local Gram entry on the direct reduction: the
    * collected values (8 B), the local -> global index map kept for the

@@ -104,47 +104,39 @@ final case class EbwEvaluation(
     violationNorm: Double,
     weightTotal: Double)
 
-/** One observation: features (sparse iff idx != null, sorted indices) + initial weight. */
-private[ebw] final case class EbwRow(idx: Array[Int], vals: Array[Double], w0: Double)
+/** One observation: features (sparse iff idx != null, sorted indices),
+ * initial weight, and the row's group (0 for a single problem). */
+private[ebw] final case class EbwRow(
+    idx: Array[Int], vals: Array[Double], w0: Double, g: Int = 0)
 
 /**
- * Per-row primal map r(t), t = x . theta. One aggregation kernel serves all
- * solver modes:
- *   EXP     r = exp(t),                    dr/dt = r       (unbounded dual)
- *   CLIP    r = clip(exp(eta*t), lb, ub),  dr/dt = eta*e on the interior,
- *                                          0 when clipped  (elastic/bounded)
- * CLIP with eta = -1 is the penalty map clip(exp(-t), lb, ub) (lb = 0,
- * ub = inf when unbounded); its aggregated Gram is dS/dz = -G.
+ * Per-row primal map r(t), t = x . theta, of every solver mode: r =
+ * clip(exp(eta * t), lb, ub), dr/dt = eta * exp(eta * t) on the interior
+ * and 0 where clipped. One aggregation kernel serves them all:
+ *   unbounded dual   [[Link.exp]] = (1, 0, inf): r = exp(t), dr/dt = r
+ *   elastic/bounded  (eta, lb, ub): box-projected dual, auto-grown eta
+ *   penalty          (-1, lb, ub): clip(exp(-t), lb, ub) (lb = 0, ub = inf
+ *                    when unbounded); its aggregated Gram is dS/dz = -G.
  */
-private[graft] final case class Link(mode: Int, eta: Double, lb: Double, ub: Double) {
+private[graft] final case class Link(eta: Double, lb: Double, ub: Double) {
   /** (r, dr/dt) at t = x . theta — THE shared per-row evaluation for every
    * solver mode (exp inputs capped at 700 to stay finite; the driver line
-   * searches reject divergent trials). (Double, Double) tuples are
+   * searches reject divergent trials). Under [[Link.exp]] this is
+   * (exp(min(t, 700)), same) bit for bit: 1.0 * t == t and the clip is
+   * inert. A NaN t gives (NaN, 0). (Double, Double) tuples are
    * @specialized, so the JIT scalar-replaces them in the hot loops. */
-  @inline def rAndSlope(t: Double): (Double, Double) =
-    if (mode == Link.EXP) {
-      val r = math.exp(if (t > 700.0) 700.0 else t)
-      (r, r)
-    } else Link.clipRAndSlope(eta, lb, ub, t)
-
-  /** Ratio only (driver-side column fallback paths). */
-  @inline def r(t: Double): Double = rAndSlope(t)._1
-}
-
-private[graft] object Link {
-  val EXP = 0
-  val CLIP = 1
-  def exp: Link = Link(EXP, 1.0, 0.0, Double.PositiveInfinity)
-  def clip(eta: Double, lb: Double, ub: Double): Link = Link(CLIP, eta, lb, ub)
-
-  /** Static clip-link evaluation for callers carrying per-group eta
-   * (GroupedEntropyBalance) — same math as the CLIP instance mode. */
-  @inline def clipRAndSlope(
-      eta: Double, lb: Double, ub: Double, t: Double): (Double, Double) = {
+  @inline def rAndSlope(t: Double): (Double, Double) = {
     var et = eta * t
     if (et > 700.0) et = 700.0
     val e = math.exp(et)
     val r = if (e < lb) lb else if (e > ub) ub else e
     (r, if (e > lb && e < ub) eta * e else 0.0)
   }
+
+  /** Ratio only (driver-side column fallback paths). */
+  @inline def r(t: Double): Double = rAndSlope(t)._1
+}
+
+private[graft] object Link {
+  def exp: Link = Link(1.0, 0.0, Double.PositiveInfinity)
 }

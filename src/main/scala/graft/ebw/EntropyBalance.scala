@@ -19,8 +19,9 @@ import DriverLinalg.{axpy, dot, norm2}
  * `q * exp(X lambda)` (ebw_routines.py:263-272) is evaluated every step and
  * taken whenever it wins. We work in that dual space exclusively: all solver
  * state is the k-vector of equality multipliers on the driver, each Newton
- * iteration is exactly ONE `treeAggregate` pass over the (cached) data, and
- * the output weights stay distributed as a lazily-computed column
+ * step costs one aggregation pass (EbwAggregator) over the (cached) data
+ * per line-search trial, and the output weights stay distributed as a
+ * lazily-computed column
  * `w0 * r(x . lambda)`. Bounds (elastic mode) and the penalty variant reduce
  * to the same kernel with a different per-row link — see EbwTypes.Link and
  * SURVEY.md §3 for the derivations. All three modes share one
@@ -49,13 +50,13 @@ object EntropyBalance {
       .map(r => toEbwRow(r.get(0), if (r.isNullAt(1)) Double.NaN else r.getDouble(1)))
       .persist(StorageLevel.MEMORY_AND_DISK)
     rows.setName(s"ebw-input-k$k")
-    val (bad, sumW, n, sumPairs) = EbwAggregator.validate(rows, k)
+    val (bad, sumW, n, sumPairs) = EbwAggregator.validate(rows, k, 1)
     if (bad > 0 || n == 0) {
       rows.unpersist(false)
       throw new IllegalArgumentException(
         "Inputs include invalid values (NaNs, non-positive weights, etc)")
     }
-    Prepared(rows, k, sumW, n, sumPairs)
+    Prepared(rows, k, sumW(0), n, sumPairs)
   }
 
   /** Sizing pre-flight: route the problem (EbwSizing.route) and build
@@ -111,16 +112,17 @@ object EntropyBalance {
     pen
   }
 
-  /** Decode one feature cell; null elements inside an array flag the row
-   * invalid (vals = null) instead of silently unboxing to 0.0. */
-  private[ebw] def toEbwRow(feat: Any, w: Double): EbwRow = feat match {
-    case v: SparseVector => EbwRow(v.indices, v.values, w)
-    case v: DenseVector  => EbwRow(null, v.values, w)
+  /** Decode one feature cell of group `g`; null elements inside an array
+   * flag the row invalid (vals = null) instead of silently unboxing to
+   * 0.0. */
+  private[ebw] def toEbwRow(feat: Any, w: Double, g: Int = 0): EbwRow = feat match {
+    case v: SparseVector => EbwRow(v.indices, v.values, w, g)
+    case v: DenseVector  => EbwRow(null, v.values, w, g)
     case s: scala.collection.Seq[_] =>
       val seq = s.asInstanceOf[scala.collection.Seq[Any]]
-      if (seq.exists(_ == null)) EbwRow(null, null, w)
-      else EbwRow(null, seq.map(_.asInstanceOf[Double]).toArray, w)
-    case _ => EbwRow(null, null, w)
+      if (seq.exists(_ == null)) EbwRow(null, null, w, g)
+      else EbwRow(null, seq.map(_.asInstanceOf[Double]).toArray, w, g)
+    case _ => EbwRow(null, null, w, g)
   }
 
   /** The ratio r(x . theta) as a DataFrame column. For array<double>
@@ -399,7 +401,7 @@ object EntropyBalance {
       var i = 0
       while (i < k) { lambda(i) = math.max(-1.0, math.min(1.0, mu(i) / eta)); i += 1 }
     }
-    var pass = kn.pass(lambda, Link.clip(eta, lb, ub))
+    var pass = kn.pass(lambda, Link(eta, lb, ub))
     var ce = axpy(-1.0, b, pass.s)
     var totalSteps = 0
     var converged = false
@@ -408,7 +410,7 @@ object EntropyBalance {
     EbwLog.info(s"EBW elastic: n=${prep.n} k=$k bounds=($lb,$ub) eta0=$eta")
     while (grow) {
       outer += 1
-      val link = Link.clip(eta, lb, ub)
+      val link = Link(eta, lb, ub)
       // ---- inner: box-projected Newton at fixed eta
       var inner = 0
       var innerDone = false
@@ -498,13 +500,13 @@ object EntropyBalance {
           lambda(i) = math.max(-1.0, math.min(1.0, lambda(i) * etaOld / eta))
           i += 1
         }
-        pass = kn.pass(lambda, Link.clip(eta, lb, ub))
+        pass = kn.pass(lambda, Link(eta, lb, ub))
         ce = axpy(-1.0, b, pass.s)
       } else grow = false
       if (outer > 12) grow = false
     }
     val slackLm = lambda.map(l => 1.0 - l) ++ lambda.map(l => 1.0 + l)
-    Outcome(lambda, Link.clip(eta, lb, ub), converged, totalSteps, ce,
+    Outcome(lambda, Link(eta, lb, ub), converged, totalSteps, ce,
       lambda.map(_ * eta), Some(eta), pass.fval,
       if (converged) "" else "bounded solve did not converge", Some(slackLm))
   }
@@ -537,10 +539,10 @@ object EntropyBalance {
     val prep = kn.prep
     val k = kn.k
     val (lb, ub) = ratioBounds(options)
-    // CLIP with eta=-1 gives r = clip(exp(-t), lb, ub); with no bounds
+    // eta = -1 gives r = clip(exp(-t), lb, ub); with no bounds
     // (lb, ub) = (0, inf) and the clip is inert, so one loop serves both
     // variants
-    val link = Link.clip(-1.0, lb, ub)
+    val link = Link(-1.0, lb, ub)
     val b = m.map(_ * prep.sumW)
     val bscale = math.max(1.0, norm2(b))
     var z = new Array[Double](k)
@@ -569,7 +571,7 @@ object EntropyBalance {
       } else if (steps >= maxSteps) {
         done = true
       } else {
-        // the aggregated Gram under CLIP(-1) is dS/dz = -G, G PSD:
+        // the aggregated Gram under eta = -1 is dS/dz = -G, G PSD:
         // (P^-1 + G) delta = -P^-1 F, hence sign = -1
         val rhs = new Array[Double](k)
         var i = 0

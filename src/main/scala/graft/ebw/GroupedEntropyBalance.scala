@@ -14,15 +14,20 @@ import DriverLinalg.{axpy, norm2}
  * ONE big joint problem; at pipeline scale you often need thousands of
  * independent small ones, e.g. per-source reweighting of training data).
  *
- * All groups advance together: each Newton round is ONE treeAggregate over
- * the full dataset computing every group's (Ce, Gram) — G problems cost one
- * scan, not G scans. Driver state is a k-vector per group; converged groups
- * freeze (their rows stop contributing Gram work via a skip check). The
- * same round loop ([[solveGroups]]: validation, large-k routing, round
- * pass, output) serves the exact solver (dual Newton, optional elastic
- * bounds with per-group auto-eta) and the penalty solver (fixed point
- * z = P(A'Phi(z) - b), link = clip(exp(-t)) i.e. eta = -1); each supplies
- * only its per-group step.
+ * All groups advance together: each Newton round is ONE aggregation pass
+ * over the full dataset computing every group's (Ce, Gram) — G problems
+ * cost one scan, not G scans. The rows are the single solver's
+ * [[EbwRow]]s tagged with their group, validated by the same pass
+ * (EbwAggregator.validate), and below denseGramMax a round IS the single
+ * solver's dense pass (EbwAggregator.run, one block per group). Driver
+ * state is a k-vector per group; converged groups freeze (their rows stop
+ * contributing via a skip mask). The same round loop ([[solveGroups]]:
+ * validation, large-k routing, round pass, output) serves the exact
+ * solver (dual Newton, optional elastic bounds with per-group auto-eta)
+ * and the penalty solver (fixed point z = P(A'Phi(z) - b), link =
+ * clip(exp(-t)) i.e. eta = -1); each supplies only its per-group step.
+ * The solver owns no broadcasts: per-round iterates and links, the group
+ * index and the output multipliers travel in closures.
  */
 object GroupedEntropyBalance {
 
@@ -38,196 +43,91 @@ object GroupedEntropyBalance {
     def allConverged: Boolean = groups.values.forall(_.converged)
   }
 
-  private final case class GRow(g: Int, idx: Array[Int], vals: Array[Double], w0: Double)
-
   // ------------------------------------------------------------ shared plumbing
 
-  private def prepGRows(
+  /** The rows of the groups in `gIdx` as cached [[EbwRow]]s carrying
+   * their group's index; rows of other groups are dropped. */
+  private def prepRows(
       df: DataFrame, groupCol: String, featuresCol: String, weightCol: String,
-      gIdx: Map[String, Int], nG: Int, k: Int): RDD[GRow] = {
-    val bcGIdx = df.sparkSession.sparkContext.broadcast(gIdx)
+      gIdx: Map[String, Int], k: Int): RDD[EbwRow] = {
     val rows = df
       .select(col(groupCol).cast("string"), col(featuresCol), col(weightCol).cast(DoubleType))
       .rdd
       .flatMap { r =>
         val gname = if (r.isNullAt(0)) null else r.getString(0)
-        Option(gname).flatMap(bcGIdx.value.get).map { g =>
+        Option(gname).flatMap(gIdx.get).map { g =>
           val w = if (r.isNullAt(2)) Double.NaN else r.getDouble(2)
-          val e = EntropyBalance.toEbwRow(r.get(1), w)
-          GRow(g, e.idx, e.vals, e.w0)
+          EntropyBalance.toEbwRow(r.get(1), w, g)
         }
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
-    rows.setName(s"ebw-grouped-${nG}g-k$k")
+    rows.setName(s"ebw-grouped-${gIdx.size}g-k$k")
     rows
   }
 
-  /** One pass: per-group sumW plus the same validation discipline as
-   * EbwAggregator.validate (fail fast, never AIOOBE in the solve loop),
-   * and the total Gram-entry contributions Σ nnz(nnz+1)/2 (nnz per
-   * EbwAggregator.rowNnz) — the EbwSizing input, counted in the same scan
-   * so routing costs nothing extra. */
-  private def validateSumW(
-      rows: RDD[GRow], nG: Int, k: Int): (Array[Double], Long) = {
-    val w0Stats = rows.treeAggregate(new Array[Double](nG + 2))(
-      (buf, r) => {
-        val nnz = EbwAggregator.rowNnz(r.idx, r.vals, r.w0, k)
-        if (nnz < 0) buf(nG) += 1
-        else {
-          buf(r.g) += r.w0
-          buf(nG + 1) += nnz.toDouble * (nnz + 1) / 2
-        }
-        buf
-      },
-      (a, b) => { var i = 0; while (i <= nG + 1) { a(i) += b(i); i += 1 }; a },
-      depth = 2)
-    if (w0Stats(nG) > 0)
-      throw new IllegalArgumentException(
-        "Inputs include invalid values (NaNs, non-positive weights, etc)")
-    (Array.tabulate(nG)(w0Stats), w0Stats(nG + 1).toLong)
-  }
-
-  /** Per-round aggregates with per-group accessors; dense layout is the
-   * flat [wrsum, s(k), gram(tri)] block per group, sparse layout keeps s
-   * flat and the Gram as one key-sorted sparse triangle keyed by
-   * (g*k+i)*k+j, so each group's Gram is a contiguous run of keys. */
+  /** One round's aggregates with per-group accessors: the dense pass's
+   * per-group [[EbwAggregator.Pass]]es, or the sparse round's flat s
+   * (nG * k) and one key-sorted sparse triangle keyed by (g*k+i)*k+j,
+   * so each group's Gram is a contiguous run of keys. */
   private final class RoundData(
-      nG: Int, k: Int, blk: Int,
-      aggDense: Array[Double], sparseS: Array[Double], sparseGram: SortedGram) {
-    def sparse: Boolean = aggDense == null
+      k: Int, dense: Array[EbwAggregator.Pass],
+      sparseS: Array[Double], sparseGram: SortedGram) {
     def s(g: Int): Array[Double] =
-      if (sparse) java.util.Arrays.copyOfRange(sparseS, g * k, (g + 1) * k)
-      else java.util.Arrays.copyOfRange(aggDense, g * blk + 1, g * blk + 1 + k)
-    def gramDense(g: Int): Array[Double] =
-      java.util.Arrays.copyOfRange(aggDense, g * blk + 1 + k, (g + 1) * blk)
-    /** Group g's sparse Gram, keys re-based to i*k+j. */
-    def gramSparse(g: Int): SortedGram = {
-      val span = k.toLong * k
-      sparseGram.slice(g * span, (g + 1) * span)
-    }
+      if (dense != null) dense(g).s
+      else java.util.Arrays.copyOfRange(sparseS, g * k, (g + 1) * k)
     /** Group g's Newton direction: (sign*G_g + diag + ridge*I) d = rhs,
-     * by Cholesky on the dense Gram or Jacobi-CG on the sparse one. */
+     * by Cholesky on the dense Gram or Jacobi-CG on the sparse one (its
+     * keys re-based to i*k+j and decoded per group). */
     def direction(g: Int, diag: Array[Double], rhs: Array[Double],
         ridge: Double, sign: Double): Array[Double] =
-      if (sparse) {
-        val gram = gramSparse(g)
-        DriverLinalg.cgSolve(k, gram.keys, gram.vals, diag, rhs, ridge, null, sign)
-      } else DriverLinalg.solveWithDiag(k, gramDense(g), diag, rhs, ridge, sign)
+      if (dense != null)
+        DriverLinalg.solveWithDiag(k, dense(g).gram, diag, rhs, ridge, sign)
+      else {
+        val span = k.toLong * k
+        val gram = sparseGram.slice(g * span, (g + 1) * span)
+        val (rows, cols) = DriverLinalg.decode(k, gram.keys)
+        DriverLinalg.cgSolve(k, rows, cols, gram.vals, diag, rhs, ridge, null, sign)
+      }
   }
 
   /**
-   * THE shared distributed kernel: one treeAggregate computing, for every
-   * unconverged group g, wrsum_g, s_g = sum w0 r x and the Gram
-   * sum w0 r' x x' under the clip link r = clip(exp(eta_g * t), lb, ub).
-   * Above denseGramMax the flat per-task buffer (nG * (1+k+k(k+1)/2)
-   * doubles: 500 groups x k=1000 would be ~2 GB/task) is replaced by a
-   * sparse accumulation — s stays flat (nG*k), the Gram goes into one
+   * One round over every unconverged group g (`done` marks the others,
+   * whose rows add nothing) at theta_g under the link
+   * clip(exp(eta_g * t), lb, ub). At or below denseGramMax this is the
+   * single solver's dense pass, EbwAggregator.run, one block per group.
+   * Above it the flat per-task blocks (nG * (k + k(k+1)/2 + 3) doubles:
+   * 500 groups x k=1000 would be ~2 GB/task) give way to a sparse
+   * accumulation — s stays flat (nG*k), the Gram goes into one
    * [[GramTable]] per partition keyed by (g*k+i)*k+j, proportional to the
    * realized cross pattern, and a [[GramSum]] adds the key-sorted
    * partials up with linear merges.
    */
   private def roundPass(
-      rows: RDD[GRow], nG: Int, k: Int,
-      lambda: Array[Array[Double]], etas: Array[Double], done: Array[Boolean],
-      lb: Double, ub: Double, sparseGram: Boolean): RoundData = {
-    val spark = rows.sparkContext
-    val tri = k * (k + 1) / 2
-    val blk = 1 + k + tri
-    val bcLambda = spark.broadcast(lambda)
-    val bcDone = spark.broadcast(done)
-    val bcEta = spark.broadcast(etas)
-
-    @inline def linkOf(r: GRow): (Double, Double) = {
-      val th = bcLambda.value(r.g)
-      val eta = bcEta.value(r.g)
-      var t = 0.0
-      if (r.idx == null) {
-        var j = 0
-        while (j < k) { t += r.vals(j) * th(j); j += 1 }
-      } else {
-        var p = 0
-        while (p < r.idx.length) { t += r.vals(p) * th(r.idx(p)); p += 1 }
-      }
-      val (rr, rp) = Link.clipRAndSlope(eta, lb, ub, t)
-      (r.w0 * rr, r.w0 * rp)
+      rows: RDD[EbwRow], k: Int, thetas: Array[Array[Double]],
+      links: Array[Link], done: Array[Boolean], sparseGram: Boolean): RoundData = {
+    if (!sparseGram)
+      return new RoundData(k, EbwAggregator.run(rows, k, thetas, links, done), null, null)
+    val nG = thetas.length
+    val sum = (a: (Array[Double], GramSum), c: (Array[Double], GramSum)) => {
+      DriverLinalg.addInto(a._1, c._1)
+      a._2.addAll(c._2)
+      a
     }
-
-    val out =
-      if (!sparseGram) {
-        val aggDense = rows.treeAggregate(new Array[Double](nG * blk))(
-          (buf, r) => {
-            if (!bcDone.value(r.g)) {
-              val (wr, wrp) = linkOf(r)
-              val base = r.g * blk
-              buf(base) += wr
-              if (r.idx == null) {
-                var i = 0
-                while (i < k) {
-                  val vi = r.vals(i)
-                  buf(base + 1 + i) += wr * vi
-                  if (vi != 0.0 && wrp != 0.0) {
-                    val gb = base + 1 + k + i * k - i * (i + 1) / 2
-                    var j = i
-                    while (j < k) { buf(gb + j) += wrp * vi * r.vals(j); j += 1 }
-                  }
-                  i += 1
-                }
-              } else {
-                var p = 0
-                while (p < r.idx.length) {
-                  val i = r.idx(p); val vi = r.vals(p)
-                  buf(base + 1 + i) += wr * vi
-                  if (wrp != 0.0) {
-                    val gb = base + 1 + k + i * k - i * (i + 1) / 2
-                    var q = p
-                    while (q < r.idx.length) { buf(gb + r.idx(q)) += wrp * vi * r.vals(q); q += 1 }
-                  }
-                  p += 1
-                }
-              }
-            }
-            buf
-          },
-          (a, c) => { var i = 0; while (i < a.length) { a(i) += c(i); i += 1 }; a },
-          depth = 2)
-        new RoundData(nG, k, blk, aggDense, null, null)
-      } else {
-        val sum = (a: (Array[Double], GramSum), c: (Array[Double], GramSum)) => {
-          var i = 0
-          while (i < a._1.length) { a._1(i) += c._1(i); i += 1 }
-          a._2.addAll(c._2)
-          a
+    val agg = rows.mapPartitions { it =>
+      val s = new Array[Double](nG * k)
+      val gram = new GramTable()
+      while (it.hasNext) {
+        val r = it.next()
+        val g = r.g
+        if (!done(g)) {
+          val (rr, rp) = links(g).rAndSlope(EbwAggregator.margin(r, thetas(g), k))
+          EbwAggregator.addScaled(s, g * k, k, r.idx, r.vals, r.w0 * rr)
+          gram.addRow(g.toLong * k * k, k, r.idx, r.vals, r.w0 * rp)
         }
-        val agg = rows.mapPartitions { it =>
-          val s = new Array[Double](nG * k)
-          val gram = new GramTable()
-          while (it.hasNext) {
-            val r = it.next()
-            if (!bcDone.value(r.g)) {
-              val (wr, wrp) = linkOf(r)
-              val sBase = r.g * k
-              if (r.idx == null) {
-                var i = 0
-                while (i < k) {
-                  val vi = r.vals(i)
-                  if (vi != 0.0) s(sBase + i) += wr * vi
-                  i += 1
-                }
-              } else {
-                var p = 0
-                while (p < r.idx.length) { s(sBase + r.idx(p)) += wr * r.vals(p); p += 1 }
-              }
-              gram.addRow(r.g.toLong * k * k, k, r.idx, r.vals, wrp)
-            }
-          }
-          Iterator((s, new GramSum().add(gram.sorted())))
-        }.treeAggregate((new Array[Double](nG * k), new GramSum()))(sum, sum, depth = 2)
-        new RoundData(nG, k, blk, null, agg._1, agg._2.result)
       }
-    bcLambda.destroy()
-    bcDone.destroy()
-    bcEta.destroy()
-    out
+      Iterator((s, new GramSum().add(gram.sorted())))
+    }.treeAggregate((new Array[Double](nG * k), new GramSum()))(sum, sum, depth = 2)
+    new RoundData(k, null, agg._1, agg._2.result)
   }
 
   /** Output stage shared by both solvers: one narrow pass computing
@@ -240,9 +140,8 @@ object GroupedEntropyBalance {
     val spark = df.sparkSession
     graft.functions.GraftFunctions.register(spark)
     val multByName = names.indices.map(g => names(g) -> mult(g).toSeq).toMap
-    val bcM = spark.sparkContext.broadcast(multByName)
     val lamCol = udf { (gname: String) =>
-      if (gname == null) null else bcM.value.get(gname).map(_.toSeq).orNull
+      if (gname == null) null else multByName.get(gname).orNull
     }
     val lam = lamCol(col(groupCol).cast("string"))
     val isArr = df.schema(featuresCol).dataType
@@ -255,9 +154,9 @@ object GroupedEntropyBalance {
             lit(1.0), lit(lb), lit(ub)))
       else {
         // effective multipliers already absorb eta, so eta = 1 here
-        val outLink = Link.clip(1.0, lb, ub)
+        val outLink = Link(1.0, lb, ub)
         val f = udf { (v: org.apache.spark.ml.linalg.Vector, gname: String) =>
-          bcM.value.get(if (gname == null) "" else gname) match {
+          multByName.get(if (gname == null) "" else gname) match {
             case None => 1.0
             case Some(th) =>
               var t = 0.0
@@ -328,10 +227,8 @@ object GroupedEntropyBalance {
         // effective multipliers (eta absorbed): the grouped output stage
         // computes clip(exp(x . mult), lb, ub) with eta = 1 (the penalty
         // link's eta is -1, so its theta * eta is -z)
-        val eff =
-          if (res.link.mode == Link.CLIP) res.theta.map(_ * res.link.eta)
-          else res.theta
-        GroupResult(res.converged, res.nIterations, eff,
+        GroupResult(res.converged, res.nIterations,
+          res.theta.map(_ * res.link.eta),
           res.constraintViolations)
       })
     val par = math.max(1, math.min(options.shardParallelism, names.length))
@@ -395,10 +292,16 @@ object GroupedEntropyBalance {
       step: (Groups, RoundData, Int) => Unit): GroupedResult = {
     val names = targets.keys.toArray.sorted
     val nG = names.length
-    val rows = prepGRows(df, groupCol, featuresCol, weightCol,
-      names.zipWithIndex.toMap, nG, k)
+    val rows = prepRows(df, groupCol, featuresCol, weightCol,
+      names.zipWithIndex.toMap, k)
     try {
-      val (sumW, sumPairs) = validateSumW(rows, nG, k)
+      // the single solver's validation: one partition-ordered pass
+      // (fail fast, never AIOOBE in the solve loop) yielding the
+      // per-group w0 sums and the EbwSizing input Σ nnz(nnz+1)/2
+      val (bad, sumW, _, sumPairs) = EbwAggregator.validate(rows, k, nG)
+      if (bad > 0)
+        throw new IllegalArgumentException(
+          "Inputs include invalid values (NaNs, non-positive weights, etc)")
       val (lb, ub) = EntropyBalance.ratioBounds(options)
       // distributed-Gram tier: the shared sparse pass merges the SUM of
       // all groups' Gram patterns on the driver — shard into per-group
@@ -418,8 +321,8 @@ object GroupedEntropyBalance {
         if (options.bounds.isDefined) options.maxStepsBounded else options.maxSteps
       var round = 0
       while (round < maxRounds && !st.converged.forall(identity)) {
-        val rd = roundPass(rows, nG, k, st.theta, st.etas, st.converged,
-          lb, ub, route.isDefined)
+        val rd = roundPass(rows, k, st.theta,
+          st.etas.map(Link(_, lb, ub)), st.converged, route.isDefined)
         var g = 0
         while (g < nG) {
           if (!st.converged(g)) {

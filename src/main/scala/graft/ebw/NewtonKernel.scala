@@ -15,7 +15,9 @@ import EbwAggregator.Pass
  *  - [[backtrack]]: the halving line search, one pass per trial.
  * On the sparse-driver route the kernel owns the solve's cached Gram
  * pattern (EbwAggregator.SparsePattern): the first pass compiles it,
- * later passes only fill values, and [[release]] drops it.
+ * later passes only fill values, and [[release]] drops it. It also keeps
+ * the merged Gram's keys decoded into row and column indices until the
+ * keys change.
  * It lives on the driver: RDD closures only ever see the arrays and links
  * it passes down to EbwAggregator.
  */
@@ -28,6 +30,12 @@ private[ebw] final class NewtonKernel(
   val k: Int = prep.k
   private def rows = prep.rows
   private var pattern: EbwAggregator.SparsePattern = null
+  /** The last sparse Gram keys [[direction]] decoded, and their row and
+   * column indices: the direct reduction hands every pass the same keys
+   * array, so it decodes once per solve. */
+  private var decodedKeys: Array[Long] = null
+  private var keyRows: Array[Int] = null
+  private var keyCols: Array[Int] = null
 
   /** s, fval, wrsum and the Gram at theta: the packed dense triangle, the
    * key-sorted sparse Gram over the cached pattern (reduced directly or at
@@ -35,7 +43,7 @@ private[ebw] final class NewtonKernel(
    * (line-search trials only need the dual objective; [[direction]]
    * builds the Gram once per accepted iterate). */
   def pass(theta: Array[Double], link: Link): Pass = plan match {
-    case None => EbwAggregator.run(rows, k, theta, link)
+    case None => EbwAggregator.run(rows, k, Array(theta), Array(link))(0)
     case Some(_) if distributed => EbwAggregator.runStats(rows, k, theta, link)
     case Some(p) =>
       if (pattern == null)
@@ -43,8 +51,12 @@ private[ebw] final class NewtonKernel(
       EbwAggregator.runPattern(pattern, k, theta, link)
   }
 
-  /** Drops the cached Gram pattern, if a pass built one. */
-  def release(): Unit = if (pattern != null) { pattern.release(); pattern = null }
+  /** Drops the cached Gram pattern, if a pass built one, and the decoded
+   * keys. */
+  def release(): Unit = {
+    if (pattern != null) { pattern.release(); pattern = null }
+    decodedKeys = null; keyRows = null; keyCols = null
+  }
 
   /** Solve (sign*G + diag + ridge*I) d = rhs for the Gram G of `pass` at
    * (theta, link), over the coordinates `free` marks (all when null;
@@ -63,9 +75,14 @@ private[ebw] final class NewtonKernel(
         .persist(StorageLevel.MEMORY_AND_DISK_SER)
       try DriverLinalg.cgSolveRdd(g, k, diag, rhs, ridge, free, sign)
       finally g.unpersist(false)
-    } else if (pass.isSparse)
-      DriverLinalg.cgSolve(k, pass.gramKeys, pass.gramVals, diag, rhs, ridge,
-        free, sign)
+    } else if (pass.isSparse) {
+      if (pass.gramKeys ne decodedKeys) {
+        val (r, c) = DriverLinalg.decode(k, pass.gramKeys)
+        decodedKeys = pass.gramKeys; keyRows = r; keyCols = c
+      }
+      DriverLinalg.cgSolve(k, keyRows, keyCols, pass.gramVals, diag, rhs,
+        ridge, free, sign)
+    }
     else DriverLinalg.solveWithDiag(k, pass.gram, diag, rhs, ridge, sign,
       if (free == null) null else (0 until k).filter(free(_)).toArray)
 

@@ -12,8 +12,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
  * row. Replaces the exp(least(graft_dot(...), 700)) / greatest / least
  * expression tree: one pass over the feature array, no intermediate
  * expression nodes, exp input capped at 700 exactly like the solver's
- * aggregation kernel (EbwAggregator / Link.rAndSlope), so transform
- * output bit-matches the solve.
+ * one link formula (graft.ebw.Link.rAndSlope, which every EbwAggregator
+ * pass evaluates), so transform output bit-matches the solve.
  *
  * eta/lb/ub are foldable parameters (captured at plan time): the common
  * call shape is graft_ratio(features, lit(theta), eta, lb, ub).

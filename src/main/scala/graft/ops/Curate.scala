@@ -42,6 +42,27 @@ import org.apache.spark.sql.functions._
  * artifact the training loader reads).
  */
 object Curate {
+  /**
+   * Materializes `df` and truncates its lineage at a stage boundary: a
+   * reliable checkpoint when the session has a checkpoint dir (set one on
+   * a real cluster), else localCheckpoint — the connectedComponents
+   * contract. Later plans then start from the pinned rows instead of
+   * re-embedding the upstream plan.
+   *
+   * CHECKPOINT LIFECYCLE: reliable checkpoint FILES are only auto-deleted
+   * when `spark.cleaner.referenceTracking.cleanCheckpoints=true` (Spark
+   * defaults it to false) — set it on a real cluster or the per-stage
+   * snapshots accumulate in the checkpoint dir until app exit;
+   * localCheckpoint blocks release via the ContextCleaner once the
+   * returned frame is unreferenced, at the cost of fault tolerance for
+   * that intermediate (an executor loss re-fails the query instead of
+   * recomputing — acceptable for a per-refresh batch job, set a
+   * checkpoint dir if it is not).
+   */
+  private[graft] def pin(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
+
   def curateCorpus(docs: DataFrame, textCol: String, idCol: String,
       sourceCol: String, coeffs: DataFrame, intercept: Double,
       buckets: Int, minQuality: Double, weights: Map[String, Double],
@@ -49,10 +70,8 @@ object Curate {
       maxBucketSize: Int = 100000): DataFrame = {
     require(nShards >= 1, s"nShards must be >= 1: $nShards")
     // EVERY stage boundary is materialized AND lineage-truncated
-    // (reliable checkpoint when the session has a checkpoint dir — set
-    // one on a real cluster — else localCheckpoint, the
-    // connectedComponents contract): a stage's survivors are referenced
-    // by MULTIPLE downstream subtrees (the next stage's verdict frame +
+    // ([[pin]]): a stage's survivors are referenced by MULTIPLE
+    // downstream subtrees (the next stage's verdict frame +
     // the glue join's left side; scoreLinear and mixtureSample each
     // read their input 2-3 times internally), so without the pin the
     // lineage re-executes the whole upstream chain per reference and
@@ -70,17 +89,6 @@ object Curate {
     // repartition was tried and measured NET-NEGATIVE at gate scale —
     // the per-stage exchanges cost more than the occasional
     // coalesced-to-one-partition consumer stage they prevent.
-    // CHECKPOINT LIFECYCLE (the connectedComponents contract): reliable
-    // checkpoint FILES are only auto-deleted when
-    // `spark.cleaner.referenceTracking.cleanCheckpoints=true` (Spark
-    // defaults it to false) — set it on a real cluster or the per-stage
-    // snapshots accumulate in the checkpoint dir until app exit;
-    // localCheckpoint blocks release via the ContextCleaner once the
-    // returned frame is unreferenced, at the cost of fault tolerance
-    // for that intermediate (an executor loss re-fails the query
-    // instead of recomputing — acceptable for a per-refresh batch job,
-    // set a checkpoint dir if it is not).
-    val reliable = docs.sparkSession.sparkContext.getCheckpointDir.isDefined
     // Examined twice, left alone (r18 + r19): AQE sizes the checkpoint
     // job's last exchange by BYTES, so a small stage output freezes at 1
     // partition and one consumer stage serializes (r19 profiled a single
@@ -93,8 +101,6 @@ object Curate {
     // are garbage-inflated here, so a stats-driven FanOut can never
     // fire either. At corpus scale stage outputs hold >= cores
     // partitions and none of this applies.
-    def pin(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
     // stage 1: C4 — keep pages passing the page rules, and carry each
     // page's REWRITTEN text (kept lines only) forward: C4 ships the
     // rewrite, not just the verdict

@@ -152,15 +152,16 @@ class EbwSizingSpec extends GraftSparkSuite {
     val ridge = 1e-8
     val sc = spark.sparkContext
     val gram = sc.parallelize(keys.zip(vals).toSeq, 6)
+    val (rows, cols) = DriverLinalg.decode(k, keys)
 
-    val d1 = DriverLinalg.cgSolve(k, keys, vals, diag, rhs, ridge, null)
+    val d1 = DriverLinalg.cgSolve(k, rows, cols, vals, diag, rhs, ridge, null)
     val r1 = DriverLinalg.cgSolveRdd(gram, k, diag, rhs, ridge, null)
     val e1 = d1.zip(r1).map { case (a, b) => math.abs(a - b) }.max /
       math.max(1.0, d1.map(math.abs).max)
     assert(e1 < 1e-8, s"plain parity: $e1")
 
     val free = Array.tabulate(k)(i => i % 3 != 0)
-    val d2 = DriverLinalg.cgSolve(k, keys, vals, diag, rhs, ridge, free)
+    val d2 = DriverLinalg.cgSolve(k, rows, cols, vals, diag, rhs, ridge, free)
     val r2 = DriverLinalg.cgSolveRdd(gram, k, diag, rhs, ridge, free)
     val e2 = d2.zip(r2).map { case (a, b) => math.abs(a - b) }.max /
       math.max(1.0, d2.map(math.abs).max)
@@ -169,7 +170,7 @@ class EbwSizingSpec extends GraftSparkSuite {
     // the penalty path hands the driver CG NEGATED values and the
     // distributed CG the raw RDD with sign=-1: same effective system
     val negGram = sc.parallelize(keys.zip(vals.map(-_)).toSeq, 6)
-    val d3 = DriverLinalg.cgSolve(k, keys, vals, diag, rhs, ridge, null)
+    val d3 = DriverLinalg.cgSolve(k, rows, cols, vals, diag, rhs, ridge, null)
     val r3 = DriverLinalg.cgSolveRdd(negGram, k, diag, rhs, ridge, null, sign = -1.0)
     val e3 = d3.zip(r3).map { case (a, b) => math.abs(a - b) }.max /
       math.max(1.0, d3.map(math.abs).max)

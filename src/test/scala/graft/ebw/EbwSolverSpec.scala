@@ -44,10 +44,10 @@ class EbwSolverSpec extends GraftSparkSuite {
     val rddS = spark.sparkContext.parallelize(sparse, 4)
     val theta = Array.fill(k)(rng.nextDouble() * 0.4 - 0.2)
     val eps = 1e-6
-    for (link <- Seq(Link.exp, Link.clip(1.3, 0.7, 1.4),
-        Link.clip(-1.0, 0.0, Double.PositiveInfinity))) {
-      val p0 = EbwAggregator.run(rdd, k, theta, link)
-      val p0s = EbwAggregator.run(rddS, k, theta, link)
+    for (link <- Seq(Link.exp, Link(1.3, 0.7, 1.4),
+        Link(-1.0, 0.0, Double.PositiveInfinity))) {
+      val p0 = EbwAggregator.run(rdd, k, Array(theta), Array(link))(0)
+      val p0s = EbwAggregator.run(rddS, k, Array(theta), Array(link))(0)
       for (i <- 0 until k) {
         assert(math.abs(p0.s(i) - p0s.s(i)) < 1e-12, s"dense/sparse s $i")
         for (j <- i until k)
@@ -74,7 +74,7 @@ class EbwSolverSpec extends GraftSparkSuite {
         assert(pSp.gramKeys(p - 1) < pSp.gramKeys(p), s"sparse-gram key order at $p")
       for (j <- 0 until k) {
         val tj = theta.clone(); tj(j) += eps
-        val pj = EbwAggregator.run(rdd, k, tj, link)
+        val pj = EbwAggregator.run(rdd, k, Array(tj), Array(link))(0)
         for (i <- 0 until k) {
           val fd = (pj.s(i) - p0.s(i)) / eps
           val g = p0.gram(EbwAggregator.pidx(k, math.min(i, j), math.max(i, j)))
@@ -490,6 +490,25 @@ class EbwSolverSpec extends GraftSparkSuite {
       EntropyBalance.entropyBalance(df, "feat", "w0", Array(1.5),
         options = EbwOptions(initialMultipliers = Some(Array(0.0, 0.0))))
     }
+  }
+
+  test("Link.exp is exp(min(t, 700)) with slope r, bit for bit") {
+    for (t <- Seq(Double.NegativeInfinity, -1e9, -800.0, -745.2, -1.0, -0.0,
+        0.0, 1e-300, 1.0, 699.9, 700.0, 1e9, Double.PositiveInfinity)) {
+      val (r, rp) = Link.exp.rAndSlope(t)
+      val want = java.lang.Double.doubleToRawLongBits(math.exp(math.min(t, 700.0)))
+      assert(java.lang.Double.doubleToRawLongBits(r) == want, s"r at t=$t")
+      assert(java.lang.Double.doubleToRawLongBits(rp) == want, s"slope at t=$t")
+    }
+  }
+
+  test("unbounded solve from a NaN initial multiplier stops on the NaN check") {
+    val df = denseDf(Array(Array(1.0, 0.5), Array(2.0, 1.0), Array(0.5, 3.0)),
+      Array(1.0, 1.0, 1.0))
+    val res = EntropyBalance.entropyBalance(df, "feat", "w0", Array(1.5, 1.5),
+      options = EbwOptions(initialMultipliers = Some(Array(Double.NaN, 0.0))))
+    assert(!res.converged)
+    assert(res.errorMessage == "NaN in optimality conditions", res.errorMessage)
   }
 
   test("primal warm start (initial_ratio_guess parity) cuts iteration count") {

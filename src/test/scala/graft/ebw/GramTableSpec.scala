@@ -124,7 +124,7 @@ class GramTableSpec extends GraftSparkSuite {
     val rdd = spark.sparkContext.parallelize(rows, 8)
     val thetas = Seq(Array(0.1, -0.2, 0.05, 0.0, 0.3, -0.1),
       Array(0.4, 0.3, -0.2, 0.1, 0.6, 0.2))
-    val clip = Link.clip(1.3, 0.7, 1.4)
+    val clip = Link(1.3, 0.7, 1.4)
     // at the second theta the clip link clips the dense row (slope 0):
     // its structural keys stay in the pattern and receive nothing
     assert(clip.rAndSlope(0.5)._2 == 0.0 &&
@@ -132,9 +132,9 @@ class GramTableSpec extends GraftSparkSuite {
     for ((depth, direct) <- Seq((2, true), (2, false), (3, false))) {
       val pat = EbwAggregator.sparsePattern(rdd, k, depth, direct)
       try for (theta <- thetas; link <- Seq(Link.exp, clip,
-          Link.clip(-1.0, 0.0, Double.PositiveInfinity))) {
+          Link(-1.0, 0.0, Double.PositiveInfinity))) {
         val what = s"link $link depth $depth direct $direct theta ${theta.toSeq}"
-        val dense = EbwAggregator.run(rdd, k, theta, link)
+        val dense = EbwAggregator.run(rdd, k, Array(theta), Array(link))(0)
         val sp = EbwAggregator.runPattern(pat, k, theta, link)
         assert(sp.count == 3)
         assert(math.abs(sp.fval - dense.fval) < 1e-12, what)
@@ -169,7 +169,7 @@ class GramTableSpec extends GraftSparkSuite {
       EbwRow(Array.emptyIntArray, Array.emptyDoubleArray, 1.0),
       EbwRow(Array(2, 7), Array(0.5, 1.0), 2.0))
     val rdd = spark.sparkContext.parallelize(rows, 3)
-    val (bad, _, n, sumPairs) = EbwAggregator.validate(rdd, k)
+    val (bad, _, n, sumPairs) = EbwAggregator.validate(rdd, k, 1)
     assert(bad == 0 && n == rows.length)
     val slots = rdd.mapPartitions(it =>
       Iterator(EbwAggregator.compileBlock(it, k).slots.length.toLong)).sum().toLong

@@ -103,6 +103,63 @@ class GroupedSpec extends GraftSparkSuite {
     assert(res.weighted.count() == 0)
   }
 
+  test("grouped dense path over an empty input (no partitions) converges trivially") {
+    import spark.implicits._
+    val df = Seq.empty[(String, Seq[Double], Double)].toDF("grp", "feat", "w0")
+    val res = GroupedEntropyBalance.entropyBalanceGrouped(
+      df, "grp", "feat", "w0", Map("a" -> Array(0.5, 0.5)))
+    assert(res.allConverged)
+    assert(res.groups("a").multipliers.forall(_ == 0.0))
+    assert(res.weighted.count() == 0)
+  }
+
+  test("both grouped solvers reject invalid rows on the dense and the " +
+    "sparse route with the single solver's message") {
+    import org.apache.spark.ml.linalg.Vectors
+    import spark.implicits._
+    val k = 3
+    val good = (0 until 6).map(i => ("a", Vectors.dense(1.0, i.toDouble, 0.5), 1.0))
+    def vecs(bad: (String, org.apache.spark.ml.linalg.Vector, Double)) =
+      (good :+ bad).toDF("grp", "feat", "w0")
+    val inputs = Seq(
+      "NaN w0" -> vecs(("a", Vectors.dense(1.0, 1.0, 1.0), Double.NaN)),
+      "non-positive w0" -> vecs(("a", Vectors.dense(1.0, 1.0, 1.0), 0.0)),
+      "out-of-range sparse index" ->
+        vecs(("a", Vectors.sparse(k + 1, Array(0, k), Array(1.0, 1.0)), 1.0)),
+      "null array element" -> spark.createDataFrame(Seq(
+        ("a", Seq[java.lang.Double](1.0, 0.0, 0.5), 1.0),
+        ("a", Seq[java.lang.Double](1.0, null, 0.5), 1.0))).toDF("grp", "feat", "w0"))
+    val targets = Map("a" -> Array(1.0, 2.0, 0.5))
+    for ((what, df) <- inputs; denseGramMax <- Seq(512, 0)) {
+      val opts = EbwOptions(denseGramMax = denseGramMax)
+      val solvers = Seq[(String, () => Any)](
+        "exact" -> (() => GroupedEntropyBalance.entropyBalanceGrouped(
+          df, "grp", "feat", "w0", targets, options = opts)),
+        "penalty" -> (() => GroupedEntropyBalance.entropyBalancePenaltyGrouped(
+          df, "grp", "feat", "w0", targets, Array(10.0), options = opts)))
+      for ((solver, solve) <- solvers) {
+        val e = intercept[IllegalArgumentException](solve())
+        assert(e.getMessage.startsWith("Inputs include invalid values"),
+          s"$solver, $what, denseGramMax=$denseGramMax: ${e.getMessage}")
+      }
+    }
+  }
+
+  test("validate's per-group w0 sums repeat bit for bit over 8 partitions") {
+    val rng = new scala.util.Random(808)
+    val nG = 3
+    val rows = (0 until 4000).map { i =>
+      EbwRow(null, Array(rng.nextDouble()), 0.1 + rng.nextDouble() * 1e3, i % nG)
+    }
+    val rdd = spark.sparkContext.parallelize(rows, 8)
+    val runs = (0 until 5).map { _ =>
+      val (bad, sumW, n, _) = EbwAggregator.validate(rdd, 1, nG)
+      assert(bad == 0 && n == rows.length)
+      sumW.map(java.lang.Double.doubleToRawLongBits).toSeq
+    }
+    assert(runs.distinct.size == 1, runs.toString)
+  }
+
   test("grouped distributed-Gram tier: gramMode=distributed shards groups " +
     "across single-problem solves and matches the shared sparse pass") {
     import spark.implicits._
