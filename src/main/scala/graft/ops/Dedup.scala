@@ -15,6 +15,10 @@ import org.slf4j.LoggerFactory
  * join is guarded by a hot-bucket cap (`maxBucketSize`): a single
  * degenerate key (empty docs, boilerplate bands) would otherwise rejoin
  * quadratically at corpus scale. Dropped buckets are logged, never silent.
+ * All band pair operators — the minhash, ngram, embedding and simhash
+ * self-joins, their incremental variants and `Multimodal`'s media hamming
+ * pairs — share ONE join ([[bandPairs]]) and one cap ([[capBuckets]]);
+ * each keeps only its own band keys and verify step.
  *
  * Caching contract: the pair-generating operators cache their intermediate
  * signature/bucket frames (several downstream subtrees — the cap guard and
@@ -504,8 +508,8 @@ object Dedup {
    * metric on the count frame, logged at action time by the session's
    * QueryExecutionListener — constructing a pipeline never triggers a
    * Spark job. Callers pass Int.MaxValue to disable (no extra pass then).
-   */
-  /** `hugeKeySpace`: set by callers whose (band, key) domain is
+   *
+   * `hugeKeySpace`: set by callers whose (band, key) domain is
    * data-scale (the multi-block simhash path: hashed composite keys —
    * up to bands × distinct-fingerprint keys, vs the ≤ 2^bandBits
    * per-band domain of the classic banding). The static planner
@@ -513,7 +517,8 @@ object Dedup {
    * picks a broadcast build that collects millions of key rows to the
    * driver (measured: OOM at d=2, 640k docs, 8g driver); the hint pins
    * the join-back to a shuffled hash join. Classic callers keep the
-   * tiny-broadcast plan — their count frame is config-bounded. */
+   * tiny-broadcast plan — their count frame is config-bounded.
+   */
   private def capBuckets(
       keyed: DataFrame, maxBucketSize: Int, opName: String,
       hugeKeySpace: Boolean = false): DataFrame = {
@@ -534,6 +539,69 @@ object Dedup {
     keyed.join(
       if (hugeKeySpace) keep.hint("shuffle_hash") else keep,
       Seq("band", "key"))
+  }
+
+  /**
+   * The LSH pair rule of every banded near-dup operator (the minhash,
+   * ngram, embedding and simhash pairs, their incremental variants and
+   * Multimodal's hamming pairs): band the rows (`bandsOf`, identity when
+   * `rows` already carries band and key), cap hot buckets
+   * ([[capBuckets]]), equi-join on (band, key) and keep each pair in
+   * canonical order. `rows` carries `id` plus the `payload` columns p that
+   * the caller's verify step reads; callers verify and `distinct` (a close
+   * pair can collide in several bands) themselves.
+   *
+   * Self-join (`corpus = None`): (id_a, id_b, p_a…, p_b…), id_a < id_b.
+   * Incremental (`corpus = Some(index)`, ids disjoint across the sides):
+   * the new `rows` and the index rows are banded and capped TOGETHER, so
+   * the cap sees the combined bucket the full self-join would, then joined
+   * new-vs-(corpus + new): (id_new, id_match, p_a…, p_b…, from_corpus),
+   * each new-vs-new pair once (id_new < id_match).
+   *
+   * `pinWidth` repartitions the capped rows on (band, key) at the session
+   * shuffle parallelism: an exchange AQE cannot coalesce, which both join
+   * sides reuse ([[simhashCandidatePairs]] has the measurement).
+   */
+  private[ops] def bandPairs(
+      rows: DataFrame, payload: Seq[String], maxBucketSize: Int, opName: String,
+      corpus: Option[DataFrame] = None,
+      bandsOf: DataFrame => DataFrame = identity,
+      hugeKeySpace: Boolean = false, pinWidth: Boolean = false): DataFrame = {
+    val tagged = corpus.fold(rows)(index =>
+      rows.withColumn("_new", lit(true)).unionByName(
+        index.select(rows.columns.map(col): _*).withColumn("_new", lit(false))))
+    val capped = capBuckets(bandsOf(tagged), maxBucketSize, opName, hugeKeySpace)
+    val kept =
+      if (!pinWidth) capped
+      else capped.repartition(
+        capped.sparkSession.sessionState.conf.numShufflePartitions,
+        col("band"), col("key"))
+    def side(from: DataFrame, id: String, sfx: String, extra: Column*) =
+      from.select(Seq(col("band"), col("key"), col("id").as(id)) ++
+        payload.map(p => col(p).as(p + sfx)) ++ extra: _*)
+    val payloadOut = payload.map(p => col(p + "_a")) ++ payload.map(p => col(p + "_b"))
+    corpus match {
+      case None =>
+        side(kept, "id_a", "_a").join(side(kept, "id_b", "_b"), Seq("band", "key"))
+          .filter(col("id_a") < col("id_b"))
+          .select(Seq(col("id_a"), col("id_b")) ++ payloadOut: _*)
+      case Some(_) =>
+        side(kept.filter(col("_new")), "id_new", "_a")
+          .join(side(kept, "id_match", "_b", col("_new").as("_match_is_new")),
+            Seq("band", "key"))
+          .filter(!col("_match_is_new") || col("id_new") < col("id_match"))
+          .select(Seq(col("id_new"), col("id_match")) ++ payloadOut :+
+            (!col("_match_is_new")).as("from_corpus"): _*)
+    }
+  }
+
+  /** `rows` plus one (band, key) row per element of `bands`, an array of
+   * (band, key) structs such as [[pigeonholeBands]]: the `bandsOf` step
+   * of [[bandPairs]] for keys computed from a payload column. */
+  private[ops] def withBands(rows: DataFrame, bands: Column): DataFrame = {
+    val keep = rows.columns.toSeq.map(col)
+    rows.select(keep :+ explode(bands).as("bk"): _*)
+      .select(keep ++ Seq(col("bk.band").as("band"), col("bk.key").as("key")): _*)
   }
 
   /**
@@ -609,14 +677,8 @@ object Dedup {
     val sig = CacheScope.track(
       minhashSignatures(FanOut(docs), textCol, idCol, numHashes)
         .withColumn("parts", split(col("minhash_sig"), "\\|")))
-    val exploded = bandKeysOf(sig, idCol, numHashes, bandSize)
-    val kept = capBuckets(exploded, maxBucketSize, "minhashCandidatePairs")
-    val a = kept.as("a")
-    val b = kept.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
+    bandPairs(bandKeysOf(sig, idCol, numHashes, bandSize), Nil, maxBucketSize,
+      "minhashCandidatePairs").distinct()
   }
 
   /**
@@ -639,19 +701,8 @@ object Dedup {
       maxBucketSize: Int = 100000): DataFrame = {
     val newKeyed = CacheScope.track(
       minhashBandKeys(newDocs, textCol, idCol, numHashes, bandSize))
-    val tagged = newKeyed.withColumn("_new", lit(true))
-      .unionByName(corpusBandKeys
-        .select(col("id"), col("band"), col("key"))
-        .withColumn("_new", lit(false)))
-    val kept = capBuckets(tagged, maxBucketSize, "minhashCandidatePairsIncremental")
-    val a = kept.filter(col("_new"))
-      .select(col("id").as("id_new"), col("band"), col("key"))
-    val b = kept.select(col("id").as("id_match"), col("band"), col("key"),
-      col("_new").as("_match_is_new"))
-    a.join(b, Seq("band", "key"))
-      .filter(!col("_match_is_new") || col("id_new") < col("id_match"))
-      .select(col("id_new"), col("id_match"), (!col("_match_is_new")).as("from_corpus"))
-      .distinct()
+    bandPairs(newKeyed, Nil, maxBucketSize, "minhashCandidatePairsIncremental",
+      corpus = Some(corpusBandKeys)).distinct()
   }
 
   /** Distinct 3-word shingle sets per document: (sid, sh) — the second
@@ -745,11 +796,6 @@ object Dedup {
       .filter(col("jaccard") >= minJaccard)
   }
 
-  /** n-gram Jaccard similarity for LSH candidate pairs: exact similarity
-   * computed ONLY inside buckets (never all-pairs). The shingle frame is
-   * built once and cached (candidate generation and exact Jaccard reuse
-   * it); band hashes are md5-based so the DuckDB oracle replays the whole
-   * pipeline — signatures, banding, candidates, exact Jaccard — verbatim. */
   /** Exploded DISTINCT shingles (sid, s) — the lambda-free internal form
    * of [[ngramShingles]]: one exploded position row per shingle slot +
    * plain concat + distinct, no transform()/array_distinct() lambdas
@@ -768,6 +814,11 @@ object Dedup {
         .filter(size(col("tok")) >= 3),
       "sid")
 
+  /** n-gram Jaccard similarity for LSH candidate pairs: exact similarity
+   * computed ONLY inside buckets (never all-pairs). The shingle frame is
+   * built once and cached (candidate generation and exact Jaccard reuse
+   * it); band hashes are md5-based so the DuckDB oracle replays the whole
+   * pipeline — signatures, banding, candidates, exact Jaccard — verbatim. */
   def ngramJaccardPairs(
       docs: DataFrame, textCol: String, idCol: String,
       minJaccard: Double = 0.5, numHashes: Int = 8, bandSize: Int = 2,
@@ -789,12 +840,7 @@ object Dedup {
     // guard and both pair-join sides
     val keyed = CacheScope.track(
       bandKeysFromExploded(exploded, numHashes, bandSize))
-    val kept = capBuckets(keyed, maxBucketSize, "ngramJaccardPairs")
-    val cand = kept.as("a")
-      .join(kept.as("b"), col("a.band") === col("b.band") &&
-        col("a.key") === col("b.key") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
+    val cand = bandPairs(keyed, Nil, maxBucketSize, "ngramJaccardPairs").distinct()
     jaccardVerifyExploded(cand, dedup, sizes, "id_a", "id_b", minJaccard)
       .select("id_a", "id_b", "jaccard")
   }
@@ -819,20 +865,8 @@ object Dedup {
     val newShingles = CacheScope.track(ngramShingles(newDocs, textCol, idCol))
     val newKeyed = CacheScope.track(
       ngramBandKeysOf(newShingles, numHashes, bandSize))
-    val tagged = newKeyed.withColumn("_new", lit(true))
-      .unionByName(corpusBandKeys
-        .select(col("id"), col("band"), col("key"))
-        .withColumn("_new", lit(false)))
-    val kept = capBuckets(tagged, maxBucketSize, "ngramJaccardPairsIncremental")
-    val a = kept.filter(col("_new"))
-      .select(col("id").as("id_new"), col("band"), col("key"))
-    val b = kept.select(col("id").as("id_match"), col("band"), col("key"),
-      col("_new").as("_match_is_new"))
-    val cand = a.join(b, Seq("band", "key"))
-      .filter(!col("_match_is_new") || col("id_new") < col("id_match"))
-      .select(col("id_new"), col("id_match"),
-        (!col("_match_is_new")).as("from_corpus"))
-      .distinct()
+    val cand = bandPairs(newKeyed, Nil, maxBucketSize, "ngramJaccardPairsIncremental",
+      corpus = Some(corpusBandKeys)).distinct()
     val allShingles = newShingles
       .unionByName(corpusShingles.select(col("sid"), col("sh")))
     jaccardVerify(cand, allShingles, "id_new", "id_match", minJaccard)
@@ -957,11 +991,7 @@ object Dedup {
     // shared with the incremental variant (embeddingBandKeys).
     val keyed = CacheScope.track(
       embeddingBandKeys(emb, vecCol, idCol, dimResolved, bands, bitsPerBand, seed))
-    val kept = capBuckets(keyed, maxBucketSize, "embeddingCosinePairs")
-    val a = kept.select(col("band"), col("key"), col("id").as("id_a"), col("v").as("v_a"))
-    val b = kept.select(col("band"), col("key"), col("id").as("id_b"), col("v").as("v_b"))
-    a.join(b, Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
+    bandPairs(keyed, Seq("v"), maxBucketSize, "embeddingCosinePairs")
       // native codegen kernel; sums in index order like the SQL oracle
       .withColumn("cosine", Similarity.cosineNative(col("v_a"), col("v_b")))
       .filter(col("cosine") >= minCosine)
@@ -1006,21 +1036,11 @@ object Dedup {
       maxBucketSize: Int = 100000, seed: Long = 42L): DataFrame = {
     val newKeyed = CacheScope.track(
       embeddingBandKeys(newEmb, vecCol, idCol, dim, bands, bitsPerBand, seed))
-      .withColumn("_new", lit(true))
-    val tagged = newKeyed.unionByName(corpusBandKeys
-      .select(col("id"), col("v"), col("band"), col("key"))
-      .withColumn("_new", lit(false)))
-    val kept = capBuckets(tagged, maxBucketSize, "embeddingCosinePairsIncremental")
-    val a = kept.filter(col("_new")).select(col("band"), col("key"),
-      col("id").as("id_new"), col("v").as("v_a"))
-    val b = kept.select(col("band"), col("key"), col("id").as("id_match"),
-      col("v").as("v_b"), col("_new").as("_match_is_new"))
-    a.join(b, Seq("band", "key"))
-      .filter(!col("_match_is_new") || col("id_new") < col("id_match"))
+    bandPairs(newKeyed, Seq("v"), maxBucketSize, "embeddingCosinePairsIncremental",
+        corpus = Some(corpusBandKeys))
       .withColumn("cosine", Similarity.cosineNative(col("v_a"), col("v_b")))
       .filter(col("cosine") >= minCosine)
-      .select(col("id_new"), col("id_match"), col("cosine"),
-        (!col("_match_is_new")).as("from_corpus"))
+      .select("id_new", "id_match", "cosine", "from_corpus")
       .distinct()
   }
 
@@ -1107,7 +1127,6 @@ object Dedup {
     require(blocksPerKey >= 0 && maxHamming + math.max(blocksPerKey, 1) <= 64,
       s"blocksPerKey must be >= 0 (0 = auto) with maxHamming + blocksPerKey <= 64: " +
         s"$blocksPerKey (maxHamming $maxHamming)")
-    val nBands = maxHamming + 1
     // fingerprints cached (tracked, doc-count-sized): the bucket guard and
     // both pair-join sides reuse one computation of the 64-bit-sum agg
     val fp = CacheScope.track(simhash(FanOut(docs), textCol, idCol, portable))
@@ -1118,7 +1137,7 @@ object Dedup {
       if (blocksPerKey > 0) blocksPerKey
       else simhashAutoBlocks(fp.count(), maxHamming)
     val keyCols =
-      if (d == 1) simhashBandCols(nBands)
+      if (d == 1) pigeonholeBands(col("simhash"), maxHamming + 1)
       else simhashMultiBlockCols(maxHamming, d, portable)
     val keyed = fp
       .select(col(idCol).as("id"), col("simhash"),
@@ -1135,21 +1154,10 @@ object Dedup {
     // its C(h+d, d)-keys-per-doc frame makes the extra exchange cost
     // more than the tiny per-bucket joins it would parallelize
     // (measured 0.94x on dedup_simhash_pairs_mb).
-    val capped = capBuckets(keyed, maxBucketSize, "simhashCandidatePairs",
-      hugeKeySpace = d > 1)
-    val kept =
-      if (d > 1) capped
-      else capped.repartition(
-        docs.sparkSession.sessionState.conf.numShufflePartitions,
-        col("band"), col("key"))
-    val a = kept.select(col("id").as("id_a"), col("simhash").as("h_a"),
-      col("band"), col("key"))
-    val b = kept.select(col("id").as("id_b"), col("simhash").as("h_b"),
-      col("band"), col("key"))
-    a.join(b, Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
+    bandPairs(keyed, Seq("simhash"), maxBucketSize, "simhashCandidatePairs",
+        hugeKeySpace = d > 1, pinWidth = d == 1)
       .select(col("id_a"), col("id_b"),
-        bit_count(col("h_a").bitwiseXOR(col("h_b"))).cast("long").as("hamming"))
+        bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))).cast("long").as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
   }
@@ -1167,48 +1175,42 @@ object Dedup {
       textCol: String, idCol: String,
       maxHamming: Int = 8, maxBucketSize: Int = 100000,
       portable: Boolean = false): DataFrame = {
-    val nBands = maxHamming + 1
+    def fingerprints(fp: DataFrame) = fp.select(col(idCol).as("id"), col("simhash"))
     val newFp = CacheScope.track(simhash(FanOut(newDocs), textCol, idCol, portable))
-      .select(col(idCol).as("id"), col("simhash")).withColumn("_new", lit(true))
-    val corpusFp = corpusFingerprints
-      .select(col(idCol).as("id"), col("simhash")).withColumn("_new", lit(false))
-    val keyed = newFp.unionByName(corpusFp)
-      .select(col("id"), col("simhash"), col("_new"),
-        explode(simhashBandCols(nBands)).as("bk"))
-      .select(col("id"), col("simhash"), col("_new"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
-    // width pin: see simhashCandidatePairs
-    val kept = capBuckets(keyed, maxBucketSize,
-        "simhashCandidatePairsIncremental")
-      .repartition(newDocs.sparkSession.sessionState.conf
-        .numShufflePartitions, col("band"), col("key"))
-    val a = kept.filter(col("_new")).select(col("id").as("id_new"),
-      col("simhash").as("h_a"), col("band"), col("key"))
-    val b = kept.select(col("id").as("id_match"), col("simhash").as("h_b"),
-      col("_new").as("_match_is_new"), col("band"), col("key"))
-    a.join(b, Seq("band", "key"))
-      .filter(!col("_match_is_new") || col("id_new") < col("id_match"))
+    // banded after the union; width pin: see simhashCandidatePairs
+    bandPairs(fingerprints(newFp), Seq("simhash"), maxBucketSize,
+        "simhashCandidatePairsIncremental", corpus = Some(fingerprints(corpusFingerprints)),
+        bandsOf = withBands(_, pigeonholeBands(col("simhash"), maxHamming + 1)),
+        pinWidth = true)
       .select(col("id_new"), col("id_match"),
-        bit_count(col("h_a").bitwiseXOR(col("h_b"))).cast("long").as("hamming"),
-        (!col("_match_is_new")).as("from_corpus"))
+        bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))).cast("long").as("hamming"),
+        col("from_corpus"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Pigeonhole band columns over a 64-bit `simhash` column — ONE
-   * definition shared by the self-join and incremental pair generators
-   * (editing the banding scheme in one place only would silently break
-   * their documented parity, like the shingleExpr hazard). */
-  private def simhashBandCols(nBands: Int): org.apache.spark.sql.Column = {
-    val bandBits = 64 / nBands
-    array((0 until nBands).map { bi =>
-      val lo = bi * bandBits
-      val width = if (bi == nBands - 1) 64 - lo else bandBits
-      val mask = if (width >= 64) -1L else (1L << width) - 1L
-      struct(lit(bi).as("band"),
-        shiftright(col("simhash"), lo).bitwiseAND(lit(mask)).as("key"))
-    }: _*)
+  /** Block `i` of the `nBlocks` pigeonhole blocks of a 64-bit hash
+   * column: bits [i·w, i·w + w) with w = 64 / nBlocks, the last block
+   * taking the remainder. ONE definition for every pigeonhole key in
+   * graft.ops — the simhash bands ([[pigeonholeBands]]), the multi-block
+   * keys ([[simhashMultiBlockCols]]) and `Multimodal`'s media hamming
+   * bands — so the self-join, incremental and media paths cannot drift
+   * apart (the shingleExpr hazard). A 64-bit block is the whole hash:
+   * its mask is -1, as `(1L << 64) - 1` would be 0. */
+  private[ops] def pigeonholeBlock(h: Column, i: Int, nBlocks: Int): Column = {
+    val bandBits = 64 / nBlocks
+    val lo = i * bandBits
+    val width = if (i == nBlocks - 1) 64 - lo else bandBits
+    val mask = if (width >= 64) -1L else (1L << width) - 1L
+    shiftright(h, lo).bitwiseAND(lit(mask))
   }
+
+  /** The `nBands` pigeonhole bands of hash column `h` as an array of
+   * (band, key) structs ([[withBands]] explodes it): any two hashes within
+   * Hamming distance < nBands agree on at least one whole band. */
+  private[ops] def pigeonholeBands(h: Column, nBands: Int): Column =
+    array((0 until nBands).map(i =>
+      struct(lit(i).as("band"), pigeonholeBlock(h, i, nBands).as("key"))): _*)
 
   /** The measured d=1→d=2 crossover for [[simhashCandidatePairs]]'s
    * auto route (`blocksPerKey = 0`): PairScaling r17 put the d = 1
@@ -1244,13 +1246,7 @@ object Dedup {
   private def simhashMultiBlockCols(maxHamming: Int,
       d: Int, portable: Boolean = false): org.apache.spark.sql.Column = {
     val nBlocks = maxHamming + d
-    val bandBits = 64 / nBlocks
-    def block(i: Int): org.apache.spark.sql.Column = {
-      val lo = i * bandBits
-      val width = if (i == nBlocks - 1) 64 - lo else bandBits
-      val mask = if (width >= 64) -1L else (1L << width) - 1L
-      shiftright(col("simhash"), lo).bitwiseAND(lit(mask))
-    }
+    def block(i: Int): Column = pigeonholeBlock(col("simhash"), i, nBlocks)
     val combos = (0 until nBlocks).combinations(d).toSeq
     array(combos.zipWithIndex.map { case (combo, bi) =>
       val key =

@@ -583,15 +583,18 @@ object Multimodal {
    * one whole band (pigeonhole — the candidate set provably contains
    * every true pair), then the exact `bit_count(xor)` verify keeps
    * pairs at distance <= maxHamming, each once (id_a < id_b). The same
-   * banded shape as Dedup.simhashPairs: candidate generation is an
-   * equi-join shuffle, never an all-pairs product.
+   * banded join as Dedup.simhashCandidatePairs: candidate generation is
+   * an equi-join shuffle, never an all-pairs product. The call pins the
+   * (id, dhash) frame in the pair operators' cache scope; release it with
+   * `Dedup.unpersistAll(spark)` once the pairs are consumed.
    */
   def imageNearDupPairs(df: DataFrame, idCol: String, binaryCol: String,
       maxHamming: Int = 3, bands: Int = 4): DataFrame =
     hammingPairs(imageHashes(df, idCol, binaryCol).toDF(), maxHamming, bands)
 
   /** Audio sibling of [[imageNearDupPairs]]: [[audioHash]] envelope
-   * fingerprints under the same pigeonhole banding + exact verify. */
+   * fingerprints under the same pigeonhole banding + exact verify. Its
+   * (id, dhash) pin is released by `Dedup.unpersistAll(spark)`. */
   def audioNearDupPairs(df: DataFrame, idCol: String, binaryCol: String,
       maxHamming: Int = 3, bands: Int = 4): DataFrame =
     hammingPairs(audioHashes(df, idCol, binaryCol).toDF(), maxHamming, bands)
@@ -626,41 +629,32 @@ object Multimodal {
     MediaHash(id, payload.length.toLong, fmt, real_decode = false, bits)
   }
 
-  /** Shared banded Hamming pair join over a (id, dhash, real_decode)
-   * hash frame — the SimHash pigeonhole: maxHamming < bands guarantees
-   * a matching whole band, so candidates provably contain every true
-   * pair; exact bit_count(xor) verifies. Equi-join shuffle, never an
-   * all-pairs product; stub hashes (identity-only, not perceptual) are
-   * excluded. */
+  /** Banded Hamming pairs over a (id, dhash, real_decode) hash frame —
+   * the SimHash pigeonhole: maxHamming < bands guarantees a matching whole
+   * band ([[Dedup.pigeonholeBands]]), so candidates provably contain every
+   * true pair; exact bit_count(xor) verifies. The candidate join is
+   * [[Dedup.bandPairs]], the one every Dedup band operator uses, without
+   * a hot-bucket cap (`Int.MaxValue`). Stub hashes (identity-only, not
+   * perceptual) are excluded. */
   private def hammingPairs(hashFrame: DataFrame, maxHamming: Int,
       bands: Int): DataFrame = {
     require(bands >= 1 && 64 % bands == 0,
       s"bands must divide 64, got $bands")
     require(maxHamming >= 0 && maxHamming < bands,
       s"pigeonhole needs maxHamming < bands, got $maxHamming vs $bands")
-    val width = 64 / bands
     // Pin the (id, dhash) frame: the banded candidate join is a SELF-join,
     // so without a pin each side re-evaluates the upstream decode
     // mapPartitions — every image/clip/video decoded TWICE. The pinned
     // frame is 16 bytes/row (ids + hashes, payloads projected away), so
     // the cache is negligible while the decode CPU halves. Tracked under
-    // CacheScope.Ops like the Dedup pair operators' signature pins.
+    // CacheScope.Ops like the Dedup pair operators' signature pins, and
+    // released by the same owner, `Dedup.unpersistAll(spark)`.
     val hashes = CacheScope.track(hashFrame.filter(col("real_decode"))
       .select(col("id"), col("dhash")))
-    val banded = hashes.select(col("id"), col("dhash"),
-      explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"),
-          shiftright(col("dhash"), b * width)
-            .bitwiseAND(lit((1L << width) - 1)).as("key"))): _*)).as("bk"))
-      .select(col("id"), col("dhash"), col("bk.band"), col("bk.key"))
-    val a = banded.select(col("band"), col("key"), col("id").as("id_a"),
-      col("dhash").as("ha"))
-    val b = banded.select(col("band"), col("key"), col("id").as("id_b"),
-      col("dhash").as("hb"))
-    a.join(b, Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
+    Dedup.bandPairs(hashes, Seq("dhash"), Int.MaxValue, "hammingPairs",
+        bandsOf = Dedup.withBands(_, Dedup.pigeonholeBands(col("dhash"), bands)))
       .select(col("id_a"), col("id_b"),
-        bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long").as("hamming"))
+        bit_count(col("dhash_a").bitwiseXOR(col("dhash_b"))).cast("long").as("hamming"))
       .distinct() // a close pair can agree on several bands
       .filter(col("hamming") <= maxHamming)
   }
@@ -748,7 +742,8 @@ object Multimodal {
   /** Video sibling of [[imageNearDupPairs]]: majority-vote frame-dHash
    * signatures ([[videoHashes]]) under the same pigeonhole banding +
    * exact bit_count verify — candidates from an equi-join on
-   * (band, band-bits), never an all-pairs product. */
+   * (band, band-bits), never an all-pairs product. Its (id, dhash) pin
+   * is released by `Dedup.unpersistAll(spark)`. */
   def videoNearDupPairs(df: DataFrame, idCol: String, binaryCol: String,
       maxHamming: Int = 3, bands: Int = 4, everyNth: Int = 2): DataFrame =
     hammingPairs(videoHashes(df, idCol, binaryCol, everyNth).toDF()

@@ -319,6 +319,49 @@ class OpsSpec extends GraftSparkSuite {
     val ng = Dedup.ngramJaccardPairs(clones, "text", "doc_id", 0.5,
       maxBucketSize = 100)
     assert(ng.count() == 0)
+    // the incremental variants cap the COMBINED (corpus + new) bucket: 60
+    // identical docs in the persisted index plus 60 identical new docs put
+    // 120 rows in every bucket, so a cap of 100 drops them all although
+    // neither side alone is over it; at 200 every new doc pairs with each
+    // corpus doc and each other new doc, every pair once
+    val corpusIds = 0L until 60L
+    val newIds = 1000000L until 1000060L
+    val corpus = clones.filter(col("doc_id") < 60L)
+    val fresh = newIds.map(i => (i, "the same boilerplate text repeated everywhere"))
+      .toDF("doc_id", "text")
+    val vec = Seq.tabulate(8)(i => 0.1 * (i + 1))
+    val corpusEmb = corpusIds.map(i => (i, vec)).toDF("vec_id", "embedding")
+    val freshEmb = newIds.map(i => (i, vec)).toDF("vec_id", "embedding")
+    val tmp = Scratch.dir("capidx")
+    Dedup.minhashBandKeys(corpus, "text", "doc_id").write.parquet(s"$tmp/mh")
+    Dedup.ngramBandKeys(corpus, "text", "doc_id").write.parquet(s"$tmp/ng")
+    Dedup.ngramShingles(corpus, "text", "doc_id").write.parquet(s"$tmp/sh")
+    Dedup.simhash(corpus, "text", "doc_id").write.parquet(s"$tmp/fp")
+    Dedup.embeddingBandKeys(corpusEmb, "embedding", "vec_id", dim = 8,
+      bitsPerBand = 8).write.parquet(s"$tmp/emb")
+    def index(name: String) = spark.read.parquet(s"$tmp/$name")
+    def incremental(cap: Int) = Seq(
+      "minhash" -> Dedup.minhashCandidatePairsIncremental(fresh, index("mh"),
+        "text", "doc_id", maxBucketSize = cap),
+      "ngram" -> Dedup.ngramJaccardPairsIncremental(fresh, index("ng"), index("sh"),
+        "text", "doc_id", maxBucketSize = cap),
+      "simhash" -> Dedup.simhashCandidatePairsIncremental(fresh, index("fp"),
+        "text", "doc_id", maxBucketSize = cap),
+      "embedding" -> Dedup.embeddingCosinePairsIncremental(freshEmb, index("emb"),
+        "embedding", "vec_id", dim = 8, bitsPerBand = 8, maxBucketSize = cap))
+    incremental(100).foreach { case (op, pairs) =>
+      assert(pairs.count() == 0, s"$op: combined 120-row buckets not capped at 100")
+    }
+    val want = (for (n <- newIds; m <- corpusIds) yield (n, m, true)) ++
+      (for (n <- newIds; m <- newIds if n < m) yield (n, m, false))
+    assert(want.size == 60 * 60 + 60 * 59 / 2)
+    incremental(200).foreach { case (op, pairs) =>
+      val got = pairs.select("id_new", "id_match", "from_corpus").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
+      assert(got.size == want.size && got.toSet == want.toSet,
+        s"$op: ${got.size} pairs (${got.toSet.size} distinct), want ${want.size}")
+    }
+    Dedup.unpersistAll(spark)
   }
 
   test("paragraph dedup keeps first occurrences, reassembles in order") {
@@ -1312,6 +1355,65 @@ class OpsSpec extends GraftSparkSuite {
     // hashes frame reports the stub fallback honestly
     val hf = Multimodal.imageHashes(df, "id", "payload").collect()
     assert(hf.count(_.real_decode) == 4 && hf.count(!_.real_decode) == 1)
+  }
+
+  /** Four distinct 64x48 PNG scenes planted 3, 2, 1 and 2 times (ids
+   * 1..8): the exact copies are the only pairs at Hamming distance 0. */
+  private def plantedCopies(): (org.apache.spark.sql.DataFrame, Set[(Long, Long)]) = {
+    import spark.implicits._
+    val scenes = Seq[(Int, Int) => Int](
+      (x, y) => (((x * 13 + y * 31) ^ (x * y / 7)) & 0xff) << 16,
+      (x, y) => (((x * x + y * y) & 0xff) << 16) | 0x4040,
+      (x, y) => if ((x / 8 + y / 8) % 2 == 0) 0xffffff else 0,
+      (x, y) => ((x * 4) & 0xff) << 8 | ((y * 5) & 0xff))
+    val sceneOf = Seq(0, 0, 0, 1, 1, 2, 3, 3)
+    val payloads = scenes.map(f => encodeImage("png", 64, 48, f))
+    val hashes = payloads.map(p => Multimodal.dHash(p).get)
+    assert(hashes.distinct.size == 4, "fixture scenes must hash apart")
+    val rows = sceneOf.zipWithIndex.map { case (sc, i) => (i + 1L, payloads(sc)) }
+    val copies = for {
+      (a, i) <- sceneOf.zipWithIndex; (b, j) <- sceneOf.zipWithIndex
+      if i < j && a == b
+    } yield (i + 1L, j + 1L)
+    (rows.toDF("id", "payload"), copies.toSet)
+  }
+
+  test("media hamming pairs at bands = 1 key on the whole hash: the " +
+    "planted copies are the only candidates and the only pairs") {
+    import spark.implicits._
+    // the one-band pigeonhole key is the full 64-bit hash (a zero mask
+    // would key every hash to 0 and make the candidate join all-pairs)
+    val hs = Seq(0L, 1L, -1L, Long.MinValue, Long.MaxValue, 0x0123456789abcdefL)
+    val keys = hs.toDF("h").select(Dedup.pigeonholeBlock(col("h"), 0, 1)).as[Long]
+      .collect().toSeq
+    assert(keys == hs)
+    val (df, copies) = plantedCopies()
+    val hashes = Multimodal.imageHashes(df, "id", "payload").toDF()
+      .select(col("id"), col("dhash"))
+    val candidates = Dedup.bandPairs(hashes, Seq("dhash"), Int.MaxValue, "bands1",
+        bandsOf = Dedup.withBands(_, Dedup.pigeonholeBands(col("dhash"), 1)))
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSeq
+    assert(candidates.sorted == copies.toSeq.sorted)
+    val got = Multimodal.imageNearDupPairs(df, "id", "payload",
+        maxHamming = 0, bands = 1)
+      .as[(Long, Long, Long)].collect().toSeq
+    assert(got.sorted == copies.toSeq.sorted.map { case (a, b) => (a, b, 0L) })
+    Dedup.unpersistAll(spark)
+  }
+
+  test("media near-dup pairs' (id, dhash) pin is released by Dedup.unpersistAll") {
+    Dedup.unpersistAll(spark)
+    assert(CacheScope.trackedCount(spark) == 0)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (df, copies) = plantedCopies()
+    assert(Multimodal.imageNearDupPairs(df, "id", "payload").count() >= copies.size)
+    assert(CacheScope.trackedCount(spark) > 0)
+    assert((sc.getPersistentRDDs.keySet -- before).nonEmpty)
+    Dedup.unpersistAll(spark)
+    assert(CacheScope.trackedCount(spark) == 0)
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"RDDs the call persisted are still cached: $left")
   }
 
   test("dHash: narrow-but-long strip (subsampling floors to 1, decode " +
