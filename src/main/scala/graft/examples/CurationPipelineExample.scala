@@ -3,7 +3,7 @@ package graft.examples
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
-import graft.ops.{Curate, Dedup, Sampling, TextMetrics}
+import graft.ops.{Dedup, Sampling, Stage, TextMetrics}
 
 /**
  * End-to-end training-data curation over the documents table — the
@@ -98,10 +98,10 @@ object CurationPipelineExample {
     // corpus — here the corpus models itself
     val ccnet = TextMetrics.ccnetBuckets(ruled, "text", "doc_id", "lang")
       .filter(col("bucket") <= 2).select("doc_id")
-    // stage boundaries are pinned (Curate.pin) where later stages reuse
+    // stage boundaries are cut (Stage.cut) where later stages reuse
     // the frame: left lazy, every later plan re-embeds the whole chain
     // above it, and AQE's plan-update events render that text each time
-    val ruledCc = Curate.pin(ruled.join(ccnet, "doc_id"))
+    val ruledCc = Stage.cut(ruled.join(ccnet, "doc_id"))
     val n1b = ruledCc.count()
 
     // 1.6. model-based audits (report, not filter, on this synthetic
@@ -126,7 +126,7 @@ object CurationPipelineExample {
     val keep = Dedup.exact(ruledCc, "text", "doc_id")
       .select(col("keep_id").as("doc_id"))
     val exactDeduped0 = ruledCc.join(keep, "doc_id")
-    val exactDeduped = Curate.pin(exactDeduped0.join(
+    val exactDeduped = Stage.cut(exactDeduped0.join(
       Dedup.homoglyphDedup(exactDeduped0, "text", "doc_id")
         .filter(col("keep")).select("doc_id"), "doc_id"))
     val n2 = exactDeduped.count()
@@ -145,7 +145,7 @@ object CurationPipelineExample {
       Seq("doc_id"), "left_anti").count()
     // one labeling serves both the election here and the persisted day-2
     // artifact in step 7 (running keepRepresentatives would recompute it)
-    val labels = Curate.pin(Dedup.connectedComponents(pairs))
+    val labels = Stage.cut(Dedup.connectedComponents(pairs))
     val nearDeduped = Dedup.keepRepresentativesByLabels(
       exactDeduped, labels, "doc_id")
     val n3 = nearDeduped.count()

@@ -15,11 +15,13 @@ import org.apache.spark.sql.functions._
  *   →  domain-mixture sample  →  token-budget bin packing
  *
  * Each stage consumes the previous stage's survivors and is
- * materialized at the boundary (checkpoint/localCheckpoint — the
+ * materialized at the boundary by a [[Stage.cut]] (the
  * persist-between-stages pipeline shape), so every stage computes
  * exactly once, AQE sizes each stage's own shuffles, and Catalyst
  * analyzes per-stage plans instead of the multiplicatively nested
- * composition.
+ * composition. A stage's cut is released once the next stage's cut has
+ * materialized; the last one lives as long as the returned frame (the
+ * [[Stage]] lifecycle).
  *
  * Scale shape: the narrow stages (C4, Gopher, scoring lambdas) fuse
  * into the scans; the shuffling stages keep their own documented
@@ -42,27 +44,6 @@ import org.apache.spark.sql.functions._
  * artifact the training loader reads).
  */
 object Curate {
-  /**
-   * Materializes `df` and truncates its lineage at a stage boundary: a
-   * reliable checkpoint when the session has a checkpoint dir (set one on
-   * a real cluster), else localCheckpoint — the connectedComponents
-   * contract. Later plans then start from the pinned rows instead of
-   * re-embedding the upstream plan.
-   *
-   * CHECKPOINT LIFECYCLE: reliable checkpoint FILES are only auto-deleted
-   * when `spark.cleaner.referenceTracking.cleanCheckpoints=true` (Spark
-   * defaults it to false) — set it on a real cluster or the per-stage
-   * snapshots accumulate in the checkpoint dir until app exit;
-   * localCheckpoint blocks release via the ContextCleaner once the
-   * returned frame is unreferenced, at the cost of fault tolerance for
-   * that intermediate (an executor loss re-fails the query instead of
-   * recomputing — acceptable for a per-refresh batch job, set a
-   * checkpoint dir if it is not).
-   */
-  private[graft] def pin(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
-
   def curateCorpus(docs: DataFrame, textCol: String, idCol: String,
       sourceCol: String, coeffs: DataFrame, intercept: Double,
       buckets: Int, minQuality: Double, weights: Map[String, Double],
@@ -70,7 +51,7 @@ object Curate {
       maxBucketSize: Int = 100000): DataFrame = {
     require(nShards >= 1, s"nShards must be >= 1: $nShards")
     // EVERY stage boundary is materialized AND lineage-truncated
-    // ([[pin]]): a stage's survivors are referenced by MULTIPLE
+    // ([[Stage.cut]]): a stage's survivors are referenced by MULTIPLE
     // downstream subtrees (the next stage's verdict frame +
     // the glue join's left side; scoreLinear and mixtureSample each
     // read their input 2-3 times internally), so without the pin the
@@ -104,23 +85,26 @@ object Curate {
     // stage 1: C4 — keep pages passing the page rules, and carry each
     // page's REWRITTEN text (kept lines only) forward: C4 ships the
     // rewrite, not just the verdict
-    val c4k = pin(TextMetrics.c4Rules(docs, textCol, idCol)
+    val c4k = Stage.cut(TextMetrics.c4Rules(docs, textCol, idCol)
       .filter(col("keep") === 1)
       .select(col(idCol), col("clean_text").as(textCol)))
     // stage 2: Gopher quality rules on the cleaned text
     val gIds = TextMetrics.gopherQuality(c4k, textCol, idCol)
       .filter(col("keep") === 1).select(col(idCol))
-    val gk = pin(c4k.join(gIds, Seq(idCol)))
+    val gk = Stage.cut(c4k.join(gIds, Seq(idCol)))
+    Stage.release(c4k)
     // stage 3: exact dedup — keep each content hash's smallest id
-    val ek = pin(gk.join(
+    val ek = Stage.cut(gk.join(
       Dedup.exact(gk, textCol, idCol).select(col("keep_id").as(idCol)),
       Seq(idCol)))
+    Stage.release(gk)
     // stage 4: MinHash near-dup — drop the larger id of each verified
     // banding candidate pair
     val dropIds = Dedup.minhashCandidatePairs(ek, textCol, idCol,
         maxBucketSize = maxBucketSize)
       .select(col("id_b").as(idCol)).distinct()
-    val mk = pin(ek.join(dropIds, Seq(idCol), "left_anti"))
+    val mk = Stage.cut(ek.join(dropIds, Seq(idCol), "left_anti"))
+    Stage.release(ek)
     // stage 5: linear quality scoring under the caller's coefficient
     // table; keep documents at or above the probability threshold
     val qIds = QualityClassifier
@@ -129,8 +113,9 @@ object Curate {
     // source re-attached here: the gated stage outputs are id+text
     // frames, so domain membership rejoins from the input (id-keyed,
     // same partitioning as the glue joins above)
-    val qk = pin(mk.join(qIds, Seq(idCol))
+    val qk = Stage.cut(mk.join(qIds, Seq(idCol))
       .join(docs.select(col(idCol), col(sourceCol)), Seq(idCol)))
+    Stage.release(mk)
     // stage 6: realize the domain mixture at max corpus usage
     val mixed = Sampling.mixtureSample(qk, sourceCol, idCol, weights)
     // stage 7: pack the survivors into token-budget bins per shard

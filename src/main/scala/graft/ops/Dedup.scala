@@ -154,17 +154,18 @@ object Dedup {
    * filter costs ~1.2 bytes/key at fpp=0.01 — 120 MB at 1e8 keys, ~1.2 GB
    * at 1e9. The BUILD is fully distributed (per-partition partial
    * sketches merged inside a regular aggregate — Spark's own
-   * `BloomFilterAggregate`, surfaced as `graft_bloom_agg`); only the one
-   * merged binary transits the driver, embedded in the probe plan as a
-   * foldable literal (one task-binary broadcast per probe stage — the
-   * same wire cost a broadcast variable had, without the session-lifetime
-   * pin or destroy-before-consume hazard). Beyond ~1e9 corpus keys the
-   * literal itself is the bound: range-partition the hash space and run
-   * one filter per range. Building the filter triggers one Spark job
-   * (like fitIvfIndex — an index build, not part of the query plan). The
-   * probe is Spark's native `BloomFilterMightContain` (`graft_might_contain`
-   * over `xxhash64(hash)`), which codegens — the whole post-hash filter
-   * stage stays inside whole-stage codegen (plan-audited: no ScalaUDF).
+   * `BloomFilterAggregate`, surfaced as `graft_bloom_agg`) inside a lazy
+   * scalar subquery — the shape Spark's own runtime-filter rule
+   * (`InjectRuntimeFilter`) builds. Building the operator launches no
+   * job; the first action runs the subquery, and only the one merged
+   * binary transits the driver, into each probe stage's task binary.
+   * Beyond ~1e9 corpus keys that binary is the bound: range-partition the
+   * hash space and run one filter per range. The probe is Spark's native
+   * `BloomFilterMightContain` (`graft_might_contain` over
+   * `xxhash64(hash)`), which codegens — the whole post-hash filter stage
+   * stays inside whole-stage codegen (plan-audited: no ScalaUDF). An
+   * empty corpus aggregates to a null filter, the probe is then null,
+   * and every row is filtered out: no key can be a member.
    *
    * `corpusHashes` is one `content_hash` column (e.g. `exact()` output).
    * Output: every new-batch row with its hash and an exact `in_corpus`
@@ -216,17 +217,13 @@ object Dedup {
     raiseLongConf(spark,
       "spark.sql.optimizer.runtime.bloomFilter.maxNumBits", numBits)
     val hashed = newBatch.select(col(idCol), md5(col(textCol)).as("content_hash"))
-    // the index-build job: distributed partial filters, one merged binary
-    // back (null when the corpus is empty — no key can then be a member)
-    val filterBytes = corpusHashes
+    val filter = corpusHashes
       .select(call_function("graft_bloom_agg",
         xxhash64(col("content_hash")), lit(expectedItems), lit(numBits))
         .as("bf"))
-      .head().getAs[Array[Byte]](0)
-    val prefilter: Column =
-      if (filterBytes == null) lit(false)
-      else call_function("graft_might_contain",
-        lit(filterBytes), xxhash64(col("content_hash")))
+      .scalar()
+    val prefilter = call_function("graft_might_contain",
+      filter, xxhash64(col("content_hash")))
     // distinct on (id, hash): the flag join below then matches each input
     // row at most once, so duplicate ids cannot multiply output rows
     val verified = hashed
@@ -243,7 +240,7 @@ object Dedup {
    * optimal-sizing cost of ~1e9 keys at fpp=0.01 — the envelope the
    * object doc commits to and BASELINE.md's 'bloom envelope' entry
    * measures (build + probe wall at 120 MB / 1e8-key sizing, linear in
-   * bits). Past it the LITERAL is the bottleneck (driver transit + a
+   * bits). Past it the filter binary is the bottleneck (driver transit + a
    * copy in every probe stage's task binary), so the honest path is
    * range-partitioning the hash space, not a bigger filter. */
   val DefaultMaxFilterBytes: Long = 1_200_000_000L
@@ -1339,19 +1336,13 @@ object Dedup {
    *
    * At 100 TB scale: every iteration shuffles the CURRENT edge set only
    * (which the star steps shrink toward one edge per node). Each round is
-   * CHECKPOINTED, not merely persisted: the star steps reference the
-   * previous round's frame several times, so without lineage truncation
-   * the logical plan grows ~4x per round and Catalyst analysis time
-   * explodes exponentially — the classic iterative-DataFrame trap. A
-   * reliable checkpoint is used when `spark.sparkContext.setCheckpointDir`
-   * has been called (survives executor loss — set one on a real cluster);
-   * otherwise `localCheckpoint` (executor-local blocks, released by the
-   * ContextCleaner once unreferenced; fine for local-mode and
-   * fault-tolerant-enough short loops). NOTE: reliable checkpoint FILES
-   * are only auto-deleted when
-   * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (Spark
-   * defaults it to false) — set it on a real cluster, or the per-round
-   * edge-set snapshots accumulate in the checkpoint dir until app exit.
+   * CUT ([[Stage.cut]]), not merely persisted: the star steps reference
+   * the previous round's frame several times, so without lineage
+   * truncation the logical plan grows ~4x per round and Catalyst analysis
+   * time explodes exponentially — the classic iterative-DataFrame trap.
+   * Each round's cut is released once the next round's has materialized;
+   * the final edge set and the id set live as long as the returned labels
+   * (the [[Stage]] lifecycle, which also says when the cut is reliable).
    */
   def connectedComponents(
       pairs: DataFrame,
@@ -1377,39 +1368,24 @@ object Dedup {
 
     // fixed point = (count, order-independent checksum) of the edge set
     // unchanged across a full round; XOR (not SUM) so ANSI mode can never
-    // overflow on the hash aggregate. r19: the signature rides the
-    // round's CHECKPOINT job as observe() metrics instead of a second
-    // collect over the checkpointed blocks — one driver action per round
-    // instead of two, identical fixed-point test values. NAMED observe +
-    // queryExecution.observedMetrics, NOT the Observation helper: merely
-    // constructing an Observation force-initializes the session's lazy
-    // `observationManager` — a non-transient, non-serializable
-    // SparkSession field — after which any closure that (even
-    // incidentally) captures the session, like a Spark ML model summary,
-    // dies Task-not-serializable for the rest of the application.
-    val reliable = pairs.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def truncate(e: DataFrame): DataFrame =
-      if (reliable) e.checkpoint() else e.localCheckpoint()
-    def truncateSigned(e: DataFrame): (DataFrame, (Long, Long)) = {
-      val observed = e.observe("graft_cc_sig", count(lit(1)).as("n"),
-        expr("bit_xor(xxhash64(u, v))").as("x"))
-      val cp = if (reliable) observed.checkpoint()
-        else observed.localCheckpoint()
-      // the eager checkpoint above executed `observed`'s plan; read the
-      // metrics straight off its executed plan's accumulators
-      val row = observed.queryExecution.observedMetrics("graft_cc_sig")
+    // overflow on the hash aggregate. The signature rides each round's
+    // cut job as observed metrics (one driver action per round).
+    def cutSigned(e: DataFrame): (DataFrame, (Long, Long)) = {
+      val (cp, row) = Stage.cutObserved(e, "graft_cc_sig",
+        count(lit(1)).as("n"), expr("bit_xor(xxhash64(u, v))").as("x"))
       (cp, (row.getAs[Long]("n"),
         if (row.isNullAt(row.fieldIndex("x"))) 0L else row.getAs[Long]("x")))
     }
 
-    val init = truncateSigned(canonical)
+    val init = cutSigned(canonical)
     var cur = init._1
     var sig = init._2
     var converged = false
     var iter = 0
     while (!converged && iter < maxIterations) {
-      val (next, nextSig) = truncateSigned(smallStar(largeStar(cur)))
+      val (next, nextSig) = cutSigned(smallStar(largeStar(cur)))
       converged = nextSig == sig
+      Stage.release(cur)
       cur = next
       sig = nextSig
       iter += 1
@@ -1426,10 +1402,10 @@ object Dedup {
       .union(cur.select(col("v").as("id"), col("v").as("component")))
       .groupBy("id").agg(min(col("component")).as("component"))
     // ids appearing only in self-pairs never reach the edge set: they are
-    // their own singleton component. Checkpointed so the returned labels
-    // are self-contained (consuming them must not re-run the upstream
-    // pair pipeline) and the input cache releases on exit, even on failure.
-    val allIds = truncate(raw.select(col("a").as("id"))
+    // their own singleton component. Cut so the returned labels are
+    // self-contained (consuming them must not re-run the upstream pair
+    // pipeline) and the input cache releases on exit, even on failure.
+    val allIds = Stage.cut(raw.select(col("a").as("id"))
       .union(raw.select(col("b").as("id"))).distinct())
     allIds.join(members, Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))

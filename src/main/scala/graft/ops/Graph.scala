@@ -26,9 +26,9 @@ import org.apache.spark.sql.functions._
  * Scale shape: one edges⋈ranks join (shuffle on src) + one dst
  * aggregation per iteration — the canonical distributed PageRank; N and
  * the dangling mass enter as 1-row aggregate subtrees (no count()
- * actions, nothing driver-side); lineage truncates via localCheckpoint
- * every few rounds (the connectedComponents contract) so plan depth
- * stays bounded at any iteration count.
+ * actions, nothing driver-side); lineage is cut ([[Stage.cut]]) every
+ * few rounds so plan depth stays bounded at any iteration count, and
+ * each cut is released once the next one has materialized.
  */
 object Graph {
 
@@ -53,6 +53,7 @@ object Graph {
       .agg(count(lit(1)).cast("double").as("deg"))
     var ranks = nodes.crossJoin(nTot)
       .select(col("node"), round(lit(1.0) / col("n"), 10).as("rank"))
+    var lastCut: Option[DataFrame] = None
     for (t <- 0 until iters) {
       val contrib = e
         .join(ranks.withColumnRenamed("node", "src"), "src")
@@ -70,8 +71,11 @@ object Graph {
             + lit(damping) * (coalesce(col("s"), lit(0.0)) + col("m") / col("n")),
             10).as("rank"))
       // bound plan depth: each round otherwise stacks 3 joins of lineage
-      if ((t + 1) % checkpointEvery == 0 && t + 1 < iters)
-        ranks = ranks.localCheckpoint()
+      if ((t + 1) % checkpointEvery == 0 && t + 1 < iters) {
+        ranks = Stage.cut(ranks)
+        lastCut.foreach(Stage.release)
+        lastCut = Some(ranks)
+      }
     }
     ranks
   }
@@ -149,11 +153,11 @@ object Graph {
    * Multi-edges count multiplicity, matching pageRank.
    *
    * Per round: one edges⋈scores join + one aggregation per direction,
-   * norms as 1-row aggregate subtrees, then ONE localCheckpoint of the
-   * round's (node, h, a) frame. The checkpoint each round is
-   * load-bearing, not hygiene: the norm crossJoins and the h←a
-   * dependency re-reference the round's frames up to ~8×, so an
-   * UN-truncated recursion multiplies its predecessor's lineage every
+   * norms as 1-row aggregate subtrees, then ONE [[Stage.cut]] of the
+   * round's (node, h, a) frame, which releases the round before. The
+   * cut each round is load-bearing, not hygiene: the norm crossJoins
+   * and the h←a dependency re-reference the round's frames up to ~8×,
+   * so an UN-truncated recursion multiplies its predecessor's lineage every
    * round — exponential re-execution by round 8 (measured: 100 s on a
    * 997-node graph from exactly this; 5 s with the per-round cut).
    * Within a round the ≤8× re-evaluation of a shallow nodes-sized join
@@ -163,10 +167,10 @@ object Graph {
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
+    val e = Stage.cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
+    // `nodes` lives as long as the returned frame; `e` only as the loop
+    val nodes = Stage.cut(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
     // r18 optimization: the iteration carries only NONZERO scores.
     // Zero-score nodes contribute exactly 0.0 to both L2 norms and to
     // the next round's sums (and a dropped 0.0 term cannot move a float
@@ -188,7 +192,7 @@ object Graph {
     // has materialized. Values pinned by the same 10dp rounding (the
     // oracle computes the identical plain-aggregate norm).
     var scores = nodes.select(col("node"), lit(1.0).as("h"), lit(1.0).as("a"))
-    for (_ <- 0 until iters) {
+    for (t <- 0 until iters) {
       val aRaw = CacheScope.track(
         e.join(scores.select(col("node").as("src"), col("h")), "src")
           .groupBy(col("dst").as("node")).agg(sum("h").as("ar")))
@@ -205,15 +209,18 @@ object Graph {
         .select(col("node"),
           round(when(col("_hn") > 0, col("hr") / col("_hn"))
             .otherwise(lit(0.0)), 10).as("h"))
-      scores = hDf.join(aDf, Seq("node"), "full")
+      val next = Stage.cut(hDf.join(aDf, Seq("node"), "full")
         .select(col("node"), coalesce(col("h"), lit(0.0)).as("h"),
-          coalesce(col("a"), lit(0.0)).as("a"))
-        .localCheckpoint()
-      // the eager checkpoint above cut every reference to this round's
-      // raw frames — release the pins now, not at session teardown
+          coalesce(col("a"), lit(0.0)).as("a")))
+      // the eager cut above ended every reference to this round's raw
+      // frames and to the previous round's cut — release them now, not at
+      // session teardown
       CacheScope.untrack(aRaw)
       CacheScope.untrack(hRaw)
+      if (t > 0) Stage.release(scores)
+      scores = next
     }
+    Stage.release(e)
     nodes.join(scores, Seq("node"), "left")
       .select(col("node"), round(coalesce(col("h"), lit(0.0)), 6).as("hub"),
         round(coalesce(col("a"), lit(0.0)), 6).as("authority"))
@@ -233,13 +240,14 @@ object Graph {
    * below k — the fixpoint is the classic chip-away): each round is one
    * degree aggregation + one semi-join edge filter, both keyed on node
    * ids, nothing global. Rounds are bounded by `maxRounds` as a safety
-   * rail — the fixpoint is detected with ONE count() action per round
-   * (the loop-control exception to the no-actions rule, same as the
-   * connectedComponents convergence check), and lineage truncates via
-   * localCheckpoint each round so plan depth stays bounded. Worst case
-   * (a path graph peeling one end per round) is O(n) rounds — real link
-   * graphs converge in tens; the peel count monotonically shrinks so
-   * every round is cheaper than the last.
+   * rail — the fixpoint is detected with ONE edge count per round,
+   * observed on the round's cut job (the loop-control exception to the
+   * no-actions rule, same as the connectedComponents convergence
+   * check); the cut ([[Stage.cut]], releasing the round before) keeps
+   * plan depth bounded. Worst case (a path graph peeling one end per
+   * round) is O(n) rounds — real link graphs converge in tens; the
+   * peel count monotonically shrinks so every round is cheaper than the
+   * last.
    */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       maxRounds: Int = 50): DataFrame = {
@@ -252,22 +260,13 @@ object Graph {
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .distinct()
-    // r19: the fixpoint test rides each round's checkpoint job as an
-    // observe() metric — the old shape ran e2.count() AND e.count() per
-    // round (two extra jobs re-counting checkpointed blocks); the edge
-    // count is now measured once per frame, fused into the action that
-    // materializes it. Identical test values, 1 job per round not 3.
-    // named observe + observedMetrics, NOT Observation — see the
-    // connectedComponents note: Observation force-initializes the
-    // session's non-serializable observationManager field and poisons
-    // later session-capturing closures (e.g. Spark ML summaries).
-    def cpCounted(f: org.apache.spark.sql.DataFrame): (org.apache.spark.sql.DataFrame, Long) = {
-      val observed = f.observe("graft_kcore_n", count(lit(1)).as("n"))
-      val cp = observed.localCheckpoint()
-      (cp, observed.queryExecution.observedMetrics("graft_kcore_n")
-        .getAs[Long]("n"))
+    // the fixpoint test rides each round's cut job as an observed edge
+    // count ([[Stage.cutObserved]]): one job per round
+    def cutCounted(f: DataFrame): (DataFrame, Long) = {
+      val (cp, row) = Stage.cutObserved(f, "graft_kcore_n", count(lit(1)).as("n"))
+      (cp, row.getAs[Long]("n"))
     }
-    val init = cpCounted(und)
+    val init = cutCounted(und)
     var e = init._1
     var nCur = init._2
     var round = 0
@@ -277,10 +276,11 @@ object Graph {
         .unionAll(e.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("d"))
       val keep = deg.filter(col("d") >= k).select("node")
-      val (e2, n2) = cpCounted(e
+      val (e2, n2) = cutCounted(e
         .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi"))
       done = n2 == nCur // fixpoint: nothing peeled this round
+      Stage.release(e)
       e = e2
       nCur = n2
       round += 1
@@ -525,8 +525,10 @@ object Graph {
    * then per round ONE neighbor⋈labels join (shuffle on the edge
    * endpoint) + one (node, label) count + one max_by argmax
    * aggregation — node-keyed throughout, no windows, no actions;
-   * lineage truncates via localCheckpoint every `checkpointEvery`
-   * rounds. Isolated nodes never appear (an edge frame has none).
+   * lineage is cut ([[Stage.cut]]) every `checkpointEvery` rounds, each
+   * cut releasing the one before; the cut edge set lives as long as the
+   * returned frame, which reads it. Isolated nodes never appear (an edge
+   * frame has none).
    * Output: (node, label) — label is the community's min founding id
    * under convergence, an arbitrary-but-deterministic id otherwise.
    */
@@ -534,18 +536,18 @@ object Graph {
       iters: Int, checkpointEvery: Int = 4): DataFrame = {
     require(iters >= 0, s"iters must be >= 0: $iters")
     require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    val und = edges
+    val und = Stage.cut(edges
       .select(col(srcCol).cast("long").as("a"),
         col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // both directions: neighbor lists are symmetric
     val nbrs = und.unionAll(und.select(col("b").as("a"), col("a").as("b")))
     var labels = nbrs.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
+    var lastCut: Option[DataFrame] = None
     for (t <- 0 until iters) {
       labels = nbrs
         .join(labels.withColumnRenamed("node", "b"), "b")
@@ -554,8 +556,11 @@ object Graph {
         .groupBy(col("a").as("node"))
         .agg(max_by(col("label"), struct(col("c"), negate(col("label"))))
           .as("label"))
-      if ((t + 1) % checkpointEvery == 0 && t + 1 < iters)
-        labels = labels.localCheckpoint()
+      if ((t + 1) % checkpointEvery == 0 && t + 1 < iters) {
+        labels = Stage.cut(labels)
+        lastCut.foreach(Stage.release)
+        lastCut = Some(labels)
+      }
     }
     labels
   }
@@ -569,8 +574,9 @@ object Graph {
    * EDGE DIRECTION (pass a symmetrized edge list for the undirected
    * reading). Only REACHED nodes appear — unreachable-within-maxHops
    * is absence, not a sentinel distance. Rounds are synchronous keyed
-   * join+min aggregations (the pageRank loop shape, localCheckpoint
-   * to bound lineage); maxHops scales round count, never pair space.
+   * join+min aggregations (the pageRank loop shape, a [[Stage.cut]]
+   * every `checkpointEvery` rounds to bound lineage); maxHops scales
+   * round count, never pair space.
    * Output: node, dist (long).
    */
   def hopDistance(edges: DataFrame, srcCol: String, dstCol: String,
@@ -581,6 +587,7 @@ object Graph {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     var dist = seeds.select(col(seedCol).as("node")).distinct()
       .withColumn("dist", lit(0L))
+    var lastCut: Option[DataFrame] = None
     for (t <- 0 until maxHops) {
       val relaxed = e
         .join(dist.withColumnRenamed("node", "src"), "src")
@@ -590,8 +597,11 @@ object Graph {
         .select(col("node"),
           least(coalesce(col("dist"), col("_d")),
             coalesce(col("_d"), col("dist"))).as("dist"))
-      if ((t + 1) % checkpointEvery == 0 && t + 1 < maxHops)
-        dist = dist.localCheckpoint()
+      if ((t + 1) % checkpointEvery == 0 && t + 1 < maxHops) {
+        dist = Stage.cut(dist)
+        lastCut.foreach(Stage.release)
+        lastCut = Some(dist)
+      }
     }
     dist
   }

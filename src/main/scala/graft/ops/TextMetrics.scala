@@ -286,8 +286,9 @@ object TextMetrics {
    * partitionings and engines. Stops early when no pair reaches
    * `minPairCount` (the published stop rule at 2). Per round: one shuffle
    * (pair-count aggregation) + one narrow map; the dictionary re-persists
-   * each round and truncates lineage every `checkpointEvery` rounds, so
-   * round r never replays rounds 1..r-1.
+   * each round and is cut ([[Stage.cut]]) every `checkpointEvery` rounds,
+   * so round r never replays rounds 1..r-1. Each cut releases the one
+   * before it, and the last is released on return.
    */
   def trainBpe(docs: DataFrame, textCol: String, numMerges: Int,
       minPairCount: Long = 2L, checkpointEvery: Int = 4): Seq[(String, String)] = {
@@ -303,6 +304,7 @@ object TextMetrics {
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var cur = rendered.persist()
     var prev: DataFrame = null
+    var lastCut: Option[DataFrame] = None
     try {
       var done = merges.size >= numMerges
       while (!done) {
@@ -333,9 +335,11 @@ object TextMetrics {
           if (merges.size % checkpointEvery == 0) {
             // truncate the replace-chain lineage so a cache eviction late
             // in training never replays every earlier round
-            val cp = cur.localCheckpoint()
+            val cp = Stage.cut(cur)
             cur.unpersist(false)
             cur = cp
+            lastCut.foreach(Stage.release)
+            lastCut = Some(cp)
           }
           done = merges.size >= numMerges
         }
@@ -344,6 +348,7 @@ object TextMetrics {
     } finally {
       cur.unpersist(false)
       if (prev != null) prev.unpersist(false)
+      lastCut.foreach(Stage.release)
     }
   }
 

@@ -33,13 +33,6 @@ class DriverStateAuditSpec extends GraftSparkSuite {
       "sorted-neighborhood bucket roster (guarded, sized error at " +
         "Linkage.scala:404) and fellegiSunterEm pattern counts (<= 2^k, " +
         "k <= 16 enforced)"),
-    "ops/Dedup.scala" -> (1,
-      "exactIncrementalBloom index build: 1-row aggregate returning ONE " +
-        "binary of ~1.2*expectedItems bytes at fpp=0.01 (documented " +
-        "bits-vs-cardinality envelope: ~1.2 GB at 1e9 keys — beyond that, " +
-        "range-partition the hash space, Dedup.scala docstring). The " +
-        "connectedComponents fixed-point checksum no longer collects: it " +
-        "rides each round's checkpoint job as observe() metrics (r19)"),
     "ops/DistScan.scala" -> (2,
       "cut-point sample: TakeOrdered limit(16*nBuckets) of ONE projected " +
         "column (bounded by 4*numShufflePartitions config, never data); " +

@@ -920,6 +920,7 @@ class OpsSpec extends GraftSparkSuite {
     val idxTmp = graft.ops.Scratch.dir("lazyidx")
     Dedup.minhashBandKeys(docsDf, "text", "doc_id").write.parquet(s"$idxTmp/mh")
     val mhIdx = spark.read.parquet(s"$idxTmp/mh")
+    val corpusHashes = Dedup.exact(docsDf, "text", "doc_id").select("content_hash")
     // Deterministic laziness check, no fixed sleep: jobs are counted only
     // inside the construction window [t0, t1] (an unrelated background job
     // outside it can't flake the assert), and instead of sleeping we run a
@@ -956,7 +957,16 @@ class OpsSpec extends GraftSparkSuite {
       // incremental variants construct lazily against a persisted index
       Dedup.minhashCandidatePairsIncremental(docsDf, mhIdx, "text", "doc_id",
         maxBucketSize = 100)
+      // the Bloom prefilter is a lazy scalar subquery, not a built literal
+      val bloom = Dedup.exactIncrementalBloom(docsDf, "text", "doc_id",
+        corpusHashes, expectedItems = 1000000)
       t1 = System.currentTimeMillis()
+      // a 1e6-item filter is ~1.2 MB of bits: as a plan literal it would
+      // put megabytes into every rendering of the plan
+      val planBytes = bloom.queryExecution
+        .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        .length
+      assert(planBytes < 50000, s"exactIncrementalBloom plan is $planBytes chars")
       spark.sparkContext.setJobDescription("graft-lazy-marker")
       spark.range(1).count()
       spark.sparkContext.setJobDescription(null)

@@ -7,9 +7,11 @@ Usage:
   sbt "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_out"
   python3 tools/compare_oracles.py [sf_dir] [verify_out] [only_csv]
 
-only_csv: optional comma-separated query subset (default: every dumped
-result directory present under verify_out — so a SPARK_GRAFT_VERIFY_ONLY
-subset dump compares only itself, not the full registry).
+only_csv: optional comma-separated query subset (default: the keys Verify
+attempted, from verify_out/attempted.json — so a SPARK_GRAFT_VERIFY_ONLY
+subset dump compares only itself, not the full registry). A key in the
+subset with no result directory (it threw in Verify) is a FAIL, oracle or
+not.
 """
 import duckdb, json, glob, os, sys, hashlib
 import pandas as pd
@@ -17,8 +19,7 @@ import pandas as pd
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 only = (set(sys.argv[3].split(",")) if len(sys.argv) > 3 else
-        {d for d in os.listdir(out)
-         if os.path.isdir(os.path.join(out, d))})
+        set(json.load(open(f"{out}/attempted.json"))))
 
 con = duckdb.connect()
 for p in glob.glob(f"{sf}/*.parquet"):
@@ -27,7 +28,11 @@ for p in glob.glob(f"{sf}/*.parquet"):
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
 fails = []
-for name in sorted(set(oracle) & only):
+for name in sorted(only):
+    if not os.path.isdir(os.path.join(out, name)):
+        print(f"{name:25s} ERROR: no result (the key threw in Verify)")
+        fails.append(name)
+for name in sorted(set(oracle) & only - set(fails)):
     try:
         spark_df = pd.read_parquet(f"{out}/{name}")
         o = con.sql(oracle[name]).df()
