@@ -21,8 +21,8 @@ import org.apache.spark.storage.StorageLevel
  * ([[run]]) is one `treeAggregate` over flat primitive arrays, one
  * block per group. Large k keeps the Gram sparse: [[sparsePattern]]
  * compiles each partition's Gram pattern once per solve and
- * [[runPattern]] fills only its values on every pass. Every pass job is
- * launched from a method of this object.
+ * [[runPattern]] fills only its values on every pass, again one block
+ * per group. Every pass job is launched from a method of this object.
  */
 private[ebw] object EbwAggregator {
 
@@ -143,16 +143,19 @@ private[ebw] object EbwAggregator {
 
   /**
    * One partition compiled against its own Gram pattern: the rows as CSR
-   * arrays (`rowPtr`, `idx`, `vals`, `w0`), the strictly ascending local
-   * Gram keys i*k+j (i <= j), and one slot per row contribution (each
-   * pair p <= q of a row's entries, in row order) giving its key's rank
-   * among `keys`. Dense rows keep their nonzero entries; sparse rows keep
-   * every listed index, zeros included, as [[GramTable.addRow]] does. The
-   * pattern is structural: it does not depend on theta or the link.
+   * arrays (`rowPtr`, `idx`, `vals`, `w0`) with each row's group (`grp`),
+   * the strictly ascending local Gram keys (g*k + i)*k + j (i <= j; every
+   * row of a single problem is group 0, so its keys are i*k+j), and one
+   * slot per row contribution (each pair p <= q of a row's entries, in
+   * row order) giving its key's rank among `keys`. Dense rows keep their
+   * nonzero entries; sparse rows keep every listed index, zeros included,
+   * as [[GramTable.addRow]] does. The pattern is structural: it does not
+   * depend on theta or the link.
    */
   final class GramBlock(
       val rowPtr: Array[Int], val idx: Array[Int], val vals: Array[Double],
-      val w0: Array[Double], val keys: Array[Long], val slots: Array[Int])
+      val w0: Array[Double], val grp: Array[Int], val keys: Array[Long],
+      val slots: Array[Int])
     extends Serializable
 
   /** Compiles one partition's rows into a [[GramBlock]]. Slots come
@@ -163,6 +166,7 @@ private[ebw] object EbwAggregator {
     val idx = Array.newBuilder[Int]
     val vals = Array.newBuilder[Double]
     val w0 = Array.newBuilder[Double]
+    val grp = Array.newBuilder[Int]
     val slots = Array.newBuilder[Int]
     val index = new KeyIndex
     val denseI = new Array[Int](k)
@@ -183,11 +187,12 @@ private[ebw] object EbwAggregator {
         ri = denseI
         rv = denseV
       }
+      val gBase = row.g.toLong * k
       var p = 0
       while (p < len) {
         idx += ri(p)
         vals += rv(p)
-        val base = ri(p).toLong * k
+        val base = (gBase + ri(p)) * k
         var q = p
         while (q < len) { slots += index.idOf(base + ri(q)); q += 1 }
         p += 1
@@ -195,13 +200,15 @@ private[ebw] object EbwAggregator {
       nnz += len
       rowPtr += nnz
       w0 += row.w0
+      grp += row.g
     }
     val keys = index.sortedKeys()
     val rank = index.ranks(keys)
     val sl = slots.result()
     var c = 0
     while (c < sl.length) { sl(c) = rank(sl(c)); c += 1 }
-    new GramBlock(rowPtr.result(), idx.result(), vals.result(), w0.result(), keys, sl)
+    new GramBlock(rowPtr.result(), idx.result(), vals.result(), w0.result(),
+      grp.result(), keys, sl)
   }
 
   /**
@@ -244,42 +251,34 @@ private[ebw] object EbwAggregator {
   }
 
   /**
-   * Large-k pass: the same statistics as [[run]], with the Gram kept
-   * sparse over the realized cross pattern (keyed i*k+j, i <= j,
-   * `gramKeys` strictly ascending). For group-dummy / interaction designs
-   * (the reference's "hundreds of thousands of constraints" regime) the
-   * Gram has O(k) to O(k * nnz_row) entries, not k^2. Paired with the
-   * driver-side CG solve in DriverLinalg.
+   * Large-k pass: the same statistics as [[run]], one [[Pass]] per group
+   * at `thetas(g)` under `links(g)` (rows of the groups `skip` marks add
+   * nothing; null skips none), with each group's Gram kept sparse over
+   * its realized cross pattern (keyed i*k+j, i <= j, `gramKeys` strictly
+   * ascending). For group-dummy / interaction designs (the reference's
+   * "hundreds of thousands of constraints" regime) the Gram has O(k) to
+   * O(k * nnz_row) entries, not k^2. Paired with the driver-side CG solve
+   * in DriverLinalg.
    */
-  def runPattern(pat: SparsePattern, k: Int, theta: Array[Double],
-      link: Link): Pass = {
-    val th = theta
-    val lk = link
+  def runPattern(pat: SparsePattern, k: Int, thetas: Array[Array[Double]],
+      links: Array[Link], skip: Array[Boolean] = null): Array[Pass] = {
+    val nG = thetas.length
     if (!pat.direct) {
       val out = pat.blocks.map { b =>
-        val part = fillBlock(b, k, th, lk, withKeys = false)
-        new SparsePartial(part.s, new GramSum().add(SortedGram(b.keys, part.vals)),
-          part.fval, part.wrsum, part.count)
-      }.treeAggregate(new SparsePartial(new Array[Double](k), new GramSum(), 0.0, 0.0, 0L))(
+        val part = fillBlock(b, k, thetas, links, skip, withKeys = false)
+        new SparsePartial(part.stats, new GramSum().add(SortedGram(b.keys, part.vals)))
+      }.treeAggregate(new SparsePartial(new Array[Double](nG * (k + 3)), new GramSum()))(
         _ merge _, _ merge _, pat.depth)
-      val gram = out.gram.result
-      return Pass(out.s, null, out.fval, out.wrsum, out.count, gram.keys, gram.vals)
+      return groupPasses(out.stats, k, out.gram.result)
     }
     val first = pat.keys == null
     val parts = new Array[BlockPartial](pat.blocks.getNumPartitions)
     pat.blocks.sparkContext.runJob(pat.blocks,
-      (it: Iterator[GramBlock]) => fillBlock(it.next(), k, th, lk, withKeys = first),
+      (it: Iterator[GramBlock]) =>
+        fillBlock(it.next(), k, thetas, links, skip, withKeys = first),
       (i: Int, part: BlockPartial) => parts(i) = part)
-    val s = new Array[Double](k)
-    var fval = 0.0
-    var wrsum = 0.0
-    var count = 0L
-    for (part <- parts) {
-      DriverLinalg.addInto(s, part.s)
-      fval += part.fval
-      wrsum += part.wrsum
-      count += part.count
-    }
+    val stats = new Array[Double](nG * (k + 3))
+    parts.foreach(part => DriverLinalg.addInto(stats, part.stats))
     val gram =
       if (first) {
         val sum = new GramSum()
@@ -300,42 +299,63 @@ private[ebw] object EbwAggregator {
         }
         g
       }
-    Pass(s, null, fval, wrsum, count, pat.keys, gram)
+    groupPasses(stats, k, SortedGram(pat.keys, gram))
   }
 
-  /** One block's statistics at theta: s, fval, wrsum, count, and the
-   * Gram values over the block's local keys (shipped with them when
-   * `withKeys`). Rows whose slope is 0 (clipped under the elastic link)
-   * add nothing to keys that exist. */
-  private def fillBlock(b: GramBlock, k: Int, theta: Array[Double],
-      link: Link, withKeys: Boolean): BlockPartial = {
-    val s = new Array[Double](k)
+  /** One [[Pass]] per group: group g's statistics block [s(k), fval,
+   * wrsum, count] and its run of the Gram's keys [g*k*k, (g+1)*k*k),
+   * re-based to i*k+j (a single problem's is the merged Gram itself). */
+  private def groupPasses(stats: Array[Double], k: Int,
+      gram: SortedGram): Array[Pass] = {
+    val nG = stats.length / (k + 3)
+    val span = k.toLong * k
+    Array.tabulate(nG) { g =>
+      val off = g * (k + 3)
+      val gg = if (nG == 1) gram else gram.slice(g * span, (g + 1) * span)
+      Pass(java.util.Arrays.copyOfRange(stats, off, off + k), null, stats(off + k),
+        stats(off + k + 1), stats(off + k + 2).toLong, gg.keys, gg.vals)
+    }
+  }
+
+  /** One block's statistics at each group's theta: per group a block
+   * [s(k), fval, wrsum, count], and the Gram values over the block's
+   * local keys (shipped with them when `withKeys`). Rows whose slope is 0
+   * (clipped under the elastic link) and rows of skipped groups add
+   * nothing to keys that exist. */
+  private def fillBlock(b: GramBlock, k: Int, thetas: Array[Array[Double]],
+      links: Array[Link], skip: Array[Boolean], withKeys: Boolean): BlockPartial = {
+    val st = new Array[Double](thetas.length * (k + 3))
     val g = new Array[Double](b.keys.length)
     val idx = b.idx
     val vals = b.vals
     val slots = b.slots
     val n = b.w0.length
-    var fval = 0.0
-    var wrsum = 0.0
     var c = 0
     var row = 0
     while (row < n) {
       val lo = b.rowPtr(row)
       val hi = b.rowPtr(row + 1)
-      var t = 0.0
-      var p = lo
-      while (p < hi) { t += vals(p) * theta(idx(p)); p += 1 }
-      val (r, rp) = link.rAndSlope(t)
-      val w0 = b.w0(row)
-      val wr = w0 * r
-      fval += kl(w0, r)
-      wrsum += wr
-      p = lo
-      while (p < hi) { s(idx(p)) += wr * vals(p); p += 1 }
-      val wrp = w0 * rp
+      val grp = b.grp(row)
+      var wrp = 0.0
+      if (skip == null || !skip(grp)) {
+        val theta = thetas(grp)
+        val off = grp * (k + 3)
+        var t = 0.0
+        var p = lo
+        while (p < hi) { t += vals(p) * theta(idx(p)); p += 1 }
+        val (r, rp) = links(grp).rAndSlope(t)
+        val w0 = b.w0(row)
+        val wr = w0 * r
+        st(off + k) += kl(w0, r)
+        st(off + k + 1) += wr
+        st(off + k + 2) += 1.0
+        p = lo
+        while (p < hi) { st(off + idx(p)) += wr * vals(p); p += 1 }
+        wrp = w0 * rp
+      }
       if (wrp == 0.0) c += (hi - lo) * (hi - lo + 1) / 2
       else {
-        p = lo
+        var p = lo
         while (p < hi) {
           val wv = wrp * vals(p)
           var q = p
@@ -345,7 +365,7 @@ private[ebw] object EbwAggregator {
       }
       row += 1
     }
-    new BlockPartial(s, if (withKeys) b.keys else null, g, fval, wrsum, n)
+    new BlockPartial(st, if (withKeys) b.keys else null, g)
   }
 
   /** Each of `local`'s keys' index in `global` (both strictly ascending,
@@ -362,23 +382,20 @@ private[ebw] object EbwAggregator {
     out
   }
 
-  /** One block's statistics: the Gram as values over its local keys
-   * (`keys` set on a solve's first direct-reduction pass only). */
+  /** One block's statistics: the per-group blocks [s(k), fval, wrsum,
+   * count] and the Gram as values over its local keys (`keys` set on a
+   * solve's first direct-reduction pass only). */
   private final class BlockPartial(
-      val s: Array[Double], val keys: Array[Long], val vals: Array[Double],
-      val fval: Double, val wrsum: Double, val count: Long) extends Serializable
+      val stats: Array[Double], val keys: Array[Long], val vals: Array[Double])
+    extends Serializable
 
   /** One partition's (or merged subtree's) keyed large-k statistics;
    * `merge` sums `o` into this one. */
   private final class SparsePartial(
-      val s: Array[Double], val gram: GramSum,
-      var fval: Double, var wrsum: Double, var count: Long) extends Serializable {
+      val stats: Array[Double], val gram: GramSum) extends Serializable {
     def merge(o: SparsePartial): SparsePartial = {
-      DriverLinalg.addInto(s, o.s)
+      DriverLinalg.addInto(stats, o.stats)
       gram.addAll(o.gram)
-      fval += o.fval
-      wrsum += o.wrsum
-      count += o.count
       this
     }
   }

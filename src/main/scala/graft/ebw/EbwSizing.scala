@@ -72,8 +72,9 @@ private[ebw] object EbwSizing {
    * most one CSR entry (12 B: an Int index and a Double value), since
    * every listed entry contributes its own diagonal pair. */
   val PatternBytesPerPair: Long = 24L
-  /** Pattern bytes per row: the Int row pointer and the Double w0. */
-  val PatternBytesPerRow: Long = 12L
+  /** Pattern bytes per row: the Int row pointer, the Double w0 and the
+   * Int group. */
+  val PatternBytesPerRow: Long = 16L
   val MaxPartitions: Int = 4096
 
   /** @param direct whether every partial already reaches the driver
@@ -150,10 +151,13 @@ private[ebw] object EbwSizing {
    *                     partial sizing
    * @param rows         rows of the problem (each costs its partition's
    *                     cached pattern [[PatternBytesPerRow]])
+   * @param groups       problems sharing the pass (a grouped solve's
+   *                     groups): the merged Gram holds a triangle per group
    */
   def plan(k: Int, sumPairs: Long, currentParts: Int,
-      maxResultSize: Long, maxHeap: Long, cores: Int = 1, rows: Long = 0L): Plan = {
-    val tri = k.toLong * (k + 1) / 2
+      maxResultSize: Long, maxHeap: Long, cores: Int = 1, rows: Long = 0L,
+      groups: Int = 1): Plan = {
+    val tri = groups.toLong * k * (k + 1) / 2
     val gramCap = math.max(1L, math.min(tri, sumPairs))
     val pForPartial = ceilDiv(sumPairs * SerBytesPerEntry, TargetPartialBytes)
     // a task holds its partial while building it plus its partition's
@@ -197,21 +201,28 @@ private[ebw] object EbwSizing {
       distributedGram = overResult || overHeap, why = why, direct = direct)
   }
 
-  /** The Gram route every solver entry point takes, single and grouped:
-   * None on the dense path (k <= denseGramMax); otherwise the sizing
-   * plan for `sumPairs` Gram contributions over `parts` partitions and
-   * whether the Gram is distributed. gramMode "distributed" forces it,
-   * "driver" fails fast with the sized error when the merged Gram cannot
-   * fit ([[requireDriverFits]]), "auto" follows the plan. */
-  def route(sc: SparkContext, k: Int, sumPairs: Long, parts: Int,
-      options: EbwOptions, rows: Long = 0L): Option[(Plan, Boolean)] = {
-    if (k <= options.denseGramMax) return None
+  /** The options every solve checks at entry, whatever its route. */
+  def checkOptions(options: EbwOptions): Unit = {
     require(Set("auto", "driver", "distributed")(options.gramMode),
       s"gramMode must be auto|driver|distributed: ${options.gramMode}")
+    require(options.shardParallelism >= 1,
+      s"shardParallelism must be >= 1: ${options.shardParallelism}")
+  }
+
+  /** The Gram route every solver takes, single and grouped: None on the
+   * dense path (k <= denseGramMax); otherwise the sizing plan for
+   * `sumPairs` Gram contributions of `groups` problems over `parts`
+   * partitions and whether the Gram is distributed. gramMode
+   * "distributed" forces it, "driver" fails fast with the sized error
+   * when the merged Gram cannot fit ([[requireDriverFits]]), "auto"
+   * follows the plan. */
+  def route(sc: SparkContext, k: Int, sumPairs: Long, parts: Int,
+      options: EbwOptions, rows: Long, groups: Int): Option[(Plan, Boolean)] = {
+    if (k <= options.denseGramMax) return None
     val maxResult = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
     val maxHeap = Runtime.getRuntime.maxMemory
     val plan = EbwSizing.plan(k, sumPairs, parts, maxResult, maxHeap,
-      cores = sc.defaultParallelism, rows = rows)
+      cores = sc.defaultParallelism, rows = rows, groups = groups)
     val dist = options.gramMode match {
       case "driver" =>
         requireDriverFits(plan, maxResult, maxHeap); false

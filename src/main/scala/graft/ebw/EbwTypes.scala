@@ -58,17 +58,20 @@ final case class EbwOptions(
      *  - "distributed": Gram stays an RDD (reduceByKey across executors)
      *    and Newton directions come from CG with distributed matvecs —
      *    O(k) driver traffic per CG iteration, no driver ceiling at any
-     *    N·nnz². */
+     *    N·nnz².
+     * Every solve checks the value at entry, dense route included. */
     gramMode: String = "auto",
     /** Grouped distributed-Gram tier only: how many per-group
      * single-problem solves run CONCURRENTLY when the groups shard
      * (GroupedEntropyBalance.solveSharded). Each solve is its own
-     * sequence of treeAggregate/CG jobs with driver-side linalg gaps
-     * between them; co-scheduling a bounded number fills those gaps and
+     * sequence of aggregation passes and distributed CG jobs with
+     * driver-side linalg gaps between them; co-scheduling a bounded
+     * number fills those gaps and
      * shares the executors, so G groups cost far less than G sequential
      * walls. Driver memory per concurrent solve is the single-problem
      * O(k) envelope, so the bound multiplies that envelope — keep it
-     * small. 1 restores the round-14 sequential behavior. */
+     * small. 1 restores the round-14 sequential behavior. Every solve
+     * checks it (at least 1) at entry, whatever its route. */
     shardParallelism: Int = 4)
 
 /**

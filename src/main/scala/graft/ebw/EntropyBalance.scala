@@ -59,23 +59,31 @@ object EntropyBalance {
     Prepared(rows, k, sumW(0), n, sumPairs)
   }
 
-  /** Sizing pre-flight: route the problem (EbwSizing.route) and build
-   * its Newton kernel. On the sparse path (k > denseGramMax) partitions
-   * and tree depth are sized from the measured row density and the Gram
-   * placed on the driver when this driver's maxResultSize/heap budget
-   * holds it, distributed otherwise (EbwSizing scaladoc); the cached row
-   * RDD may be replaced by a repartitioned copy so no partition's Gram
-   * partial outgrows the target. */
-  private[ebw] def sizeForSparse(prep: Prepared, options: EbwOptions): NewtonKernel = {
+  /** Sizing pre-flight of every solve, single and grouped: route the
+   * problem (EbwSizing.route) and build its Newton kernel. On the sparse
+   * path (k > denseGramMax) partitions and tree depth are sized from the
+   * measured row density and the Gram placed on the driver when this
+   * driver's maxResultSize/heap budget holds it, distributed otherwise
+   * (EbwSizing scaladoc); the cached row RDD may be replaced by a
+   * repartitioned copy so no partition's Gram partial outgrows the
+   * target. A grouped problem (`groups` = Some(nG)) is sized for all its
+   * groups' Grams; past the driver budget its rows stay as they are, as
+   * each group then shards to a single-problem solve that sizes itself. */
+  private[ebw] def sizeForSparse(prep: Prepared, options: EbwOptions,
+      groups: Option[Int] = None): NewtonKernel = {
     val route = EbwSizing.route(prep.rows.sparkContext, prep.k, prep.sumPairs,
-      prep.rows.getNumPartitions, options, rows = prep.n)
+      prep.rows.getNumPartitions, options, prep.n, groups.getOrElse(1))
     if (route.isEmpty) return new NewtonKernel(prep, None, distributed = false)
     val (plan, dist) = route.get
-    EbwLog.info(s"sparse Gram sizing: sumPairs=${prep.sumPairs} " +
-      s"parts=${prep.rows.getNumPartitions}->${plan.partitions} " +
-      s"depth=${plan.depth} mode=${if (dist) "distributed" else "driver"} " +
-      s"reduce=${if (plan.direct) "direct" else "tree"} " +
-      s"(${plan.why})")
+    val sharded = dist && groups.isDefined
+    val what =
+      if (sharded) s"parts=${prep.rows.getNumPartitions} mode=sharded-distributed"
+      else s"parts=${prep.rows.getNumPartitions}->${plan.partitions} " +
+        s"depth=${plan.depth} mode=${if (dist) "distributed" else "driver"} " +
+        s"reduce=${if (plan.direct) "direct" else "tree"}"
+    EbwLog.info(groups.fold("")(nG => s"grouped nG=$nG ") +
+      s"sparse Gram sizing: sumPairs=${prep.sumPairs} $what (${plan.why})")
+    if (sharded) return new NewtonKernel(prep, Some(plan), distributed = true)
     val prep2 =
       if (plan.partitions > prep.rows.getNumPartitions) {
         val r2 = prep.rows.repartition(plan.partitions)
@@ -262,6 +270,7 @@ object EntropyBalance {
       m: Array[Double], options: EbwOptions, warmStart: Boolean)(
       loop: (NewtonKernel, Array[Double], EbwOptions) => Outcome): EbwResult = {
     val k = m.length
+    EbwSizing.checkOptions(options)
     if (warmStart) options.initialMultipliers.foreach(mu => require(mu.length == k,
       s"initialMultipliers has ${mu.length} entries, expected $k"))
     val prep0 = prepare(df, featuresCol, weightCol, k, m)
@@ -584,7 +593,11 @@ object EntropyBalance {
         }
         steps += 1
         step match {
-          case None => done = true
+          case None =>
+            // noise-floor exit: the full step is below stepTol, never
+            // looser than the accepted step's exit (alpha * d, alpha <= 1)
+            if (norm2(d) < options.stepTol) converged = true
+            done = true
           case Some(t) =>
             z = t.theta
             pass = t.pass

@@ -101,12 +101,11 @@ private[ebw] final class KeyIndex {
 }
 
 /**
- * The large-k sparse-Gram accumulator of the passes that build a Gram
- * from scratch (EbwAggregator.gramRdd, the grouped solver's sparse
- * round): a [[KeyIndex]] over the packed upper-triangular keys
- * `base + i*k + j` (i <= j, keys >= 0) with one primitive value per id,
- * that a partition fills row by row and then finishes as a
- * [[SortedGram]].
+ * The large-k sparse-Gram accumulator of the pass that builds a Gram
+ * from scratch (EbwAggregator.gramRdd): a [[KeyIndex]] over the packed
+ * upper-triangular keys `base + i*k + j` (i <= j, keys >= 0) with one
+ * primitive value per id, that a partition fills row by row and then
+ * streams out or finishes as a [[SortedGram]].
  */
 private[ebw] final class GramTable {
   private val index = new KeyIndex

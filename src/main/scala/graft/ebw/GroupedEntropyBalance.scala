@@ -17,15 +17,17 @@ import DriverLinalg.{axpy, norm2}
  * All groups advance together: each Newton round is ONE aggregation pass
  * over the full dataset computing every group's (Ce, Gram) — G problems
  * cost one scan, not G scans. The rows are the single solver's
- * [[EbwRow]]s tagged with their group, validated by the same pass
- * (EbwAggregator.validate), and below denseGramMax a round IS the single
- * solver's dense pass (EbwAggregator.run, one block per group). Driver
- * state is a k-vector per group; converged groups freeze (their rows stop
- * contributing via a skip mask). The same round loop ([[solveGroups]]:
- * validation, large-k routing, round pass, output) serves the exact
- * solver (dual Newton, optional elastic bounds with per-group auto-eta)
- * and the penalty solver (fixed point z = P(A'Phi(z) - b), link =
- * clip(exp(-t)) i.e. eta = -1); each supplies only its per-group step.
+ * [[EbwRow]]s tagged with their group, validated, sized and solved by
+ * the single solver's code: EbwAggregator.validate,
+ * EntropyBalance.sizeForSparse and a [[NewtonKernel]], whose
+ * NewtonKernel.passes is the round (one block per group, dense or over
+ * the cached sparse Gram pattern) and whose direction is each group's
+ * solve. Driver state is a k-vector per group; converged groups freeze
+ * (their rows stop contributing via a skip mask). The same round loop
+ * ([[solveGroups]]) serves the exact solver (dual Newton, optional
+ * elastic bounds with per-group auto-eta) and the penalty solver (fixed
+ * point z = P(A'Phi(z) - b), link = clip(exp(-t)) i.e. eta = -1); each
+ * supplies only its per-group step.
  * The solver owns no broadcasts: per-round iterates and links, the group
  * index and the output multipliers travel in closures.
  */
@@ -63,71 +65,6 @@ object GroupedEntropyBalance {
       .persist(StorageLevel.MEMORY_AND_DISK)
     rows.setName(s"ebw-grouped-${gIdx.size}g-k$k")
     rows
-  }
-
-  /** One round's aggregates with per-group accessors: the dense pass's
-   * per-group [[EbwAggregator.Pass]]es, or the sparse round's flat s
-   * (nG * k) and one key-sorted sparse triangle keyed by (g*k+i)*k+j,
-   * so each group's Gram is a contiguous run of keys. */
-  private final class RoundData(
-      k: Int, dense: Array[EbwAggregator.Pass],
-      sparseS: Array[Double], sparseGram: SortedGram) {
-    def s(g: Int): Array[Double] =
-      if (dense != null) dense(g).s
-      else java.util.Arrays.copyOfRange(sparseS, g * k, (g + 1) * k)
-    /** Group g's Newton direction: (sign*G_g + diag + ridge*I) d = rhs,
-     * by Cholesky on the dense Gram or Jacobi-CG on the sparse one (its
-     * keys re-based to i*k+j and decoded per group). */
-    def direction(g: Int, diag: Array[Double], rhs: Array[Double],
-        ridge: Double, sign: Double): Array[Double] =
-      if (dense != null)
-        DriverLinalg.solveWithDiag(k, dense(g).gram, diag, rhs, ridge, sign)
-      else {
-        val span = k.toLong * k
-        val gram = sparseGram.slice(g * span, (g + 1) * span)
-        val (rows, cols) = DriverLinalg.decode(k, gram.keys)
-        DriverLinalg.cgSolve(k, rows, cols, gram.vals, diag, rhs, ridge, null, sign)
-      }
-  }
-
-  /**
-   * One round over every unconverged group g (`done` marks the others,
-   * whose rows add nothing) at theta_g under the link
-   * clip(exp(eta_g * t), lb, ub). At or below denseGramMax this is the
-   * single solver's dense pass, EbwAggregator.run, one block per group.
-   * Above it the flat per-task blocks (nG * (k + k(k+1)/2 + 3) doubles:
-   * 500 groups x k=1000 would be ~2 GB/task) give way to a sparse
-   * accumulation — s stays flat (nG*k), the Gram goes into one
-   * [[GramTable]] per partition keyed by (g*k+i)*k+j, proportional to the
-   * realized cross pattern, and a [[GramSum]] adds the key-sorted
-   * partials up with linear merges.
-   */
-  private def roundPass(
-      rows: RDD[EbwRow], k: Int, thetas: Array[Array[Double]],
-      links: Array[Link], done: Array[Boolean], sparseGram: Boolean): RoundData = {
-    if (!sparseGram)
-      return new RoundData(k, EbwAggregator.run(rows, k, thetas, links, done), null, null)
-    val nG = thetas.length
-    val sum = (a: (Array[Double], GramSum), c: (Array[Double], GramSum)) => {
-      DriverLinalg.addInto(a._1, c._1)
-      a._2.addAll(c._2)
-      a
-    }
-    val agg = rows.mapPartitions { it =>
-      val s = new Array[Double](nG * k)
-      val gram = new GramTable()
-      while (it.hasNext) {
-        val r = it.next()
-        val g = r.g
-        if (!done(g)) {
-          val (rr, rp) = links(g).rAndSlope(EbwAggregator.margin(r, thetas(g), k))
-          EbwAggregator.addScaled(s, g * k, k, r.idx, r.vals, r.w0 * rr)
-          gram.addRow(g.toLong * k * k, k, r.idx, r.vals, r.w0 * rp)
-        }
-      }
-      Iterator((s, new GramSum().add(gram.sorted())))
-    }.treeAggregate((new Array[Double](nG * k), new GramSum()))(sum, sum, depth = 2)
-    new RoundData(k, null, agg._1, agg._2.result)
   }
 
   /** Output stage shared by both solvers: one narrow pass computing
@@ -213,8 +150,6 @@ object GroupedEntropyBalance {
       outputCol: String, options: EbwOptions, names: Array[String],
       sumW: Array[Double], lb: Double, ub: Double,
       single: (DataFrame, Array[Double]) => EbwResult): GroupedResult = {
-    require(options.shardParallelism >= 1,
-      s"shardParallelism must be >= 1: ${options.shardParallelism}")
     val k = targets(names(0)).length
     def solveOne(name: String, g: Int): (String, GroupResult) =
       name -> (if (sumW(g) == 0.0)
@@ -277,42 +212,47 @@ object GroupedEntropyBalance {
     k
   }
 
-  /** The grouped solve behind both public entry points: prepare and
-   * validate the rows once, route by the same EbwSizing envelope as the
-   * single solver (past it, [[solveSharded]] runs `single` per group),
-   * then advance every unconverged group by one `step` per shared round
-   * pass (the link clip(exp(eta_g * t), lb, ub), eta_g starting at
-   * `eta0`) and write one output with effective multipliers
-   * eta_g * theta_g. */
+  /** Group g's Newton direction at this round's pass:
+   * (sign*G_g + diag + ridge*I) d = rhs, given (diag, rhs, ridge, sign). */
+  private type Direction = (Array[Double], Array[Double], Double, Double) => Array[Double]
+
+  /** The grouped solve behind both public entry points: prepare,
+   * validate and size the rows once as the single solver does (past the
+   * driver envelope [[solveSharded]] runs `single` per group), then
+   * advance every unconverged group by one `step` per shared kernel pass
+   * (the link clip(exp(eta_g * t), lb, ub), eta_g starting at `eta0`)
+   * and write one output with effective multipliers eta_g * theta_g. The
+   * `finally` releases the kernel's Gram pattern and the row cache. */
   private def solveGroups(
       df: DataFrame, groupCol: String, featuresCol: String, weightCol: String,
       targets: Map[String, Array[Double]], outputCol: String,
       options: EbwOptions, k: Int, eta0: Double,
       single: (DataFrame, Array[Double]) => EbwResult)(
-      step: (Groups, RoundData, Int) => Unit): GroupedResult = {
+      step: (Groups, Int, Direction) => Unit): GroupedResult = {
+    EbwSizing.checkOptions(options)
     val names = targets.keys.toArray.sorted
     val nG = names.length
     val rows = prepRows(df, groupCol, featuresCol, weightCol,
       names.zipWithIndex.toMap, k)
+    var live = rows
+    var kernel: NewtonKernel = null
     try {
       // the single solver's validation: one partition-ordered pass
       // (fail fast, never AIOOBE in the solve loop) yielding the
       // per-group w0 sums and the EbwSizing input Σ nnz(nnz+1)/2
-      val (bad, sumW, _, sumPairs) = EbwAggregator.validate(rows, k, nG)
+      val (bad, sumW, n, sumPairs) = EbwAggregator.validate(rows, k, nG)
       if (bad > 0)
         throw new IllegalArgumentException(
           "Inputs include invalid values (NaNs, non-positive weights, etc)")
       val (lb, ub) = EntropyBalance.ratioBounds(options)
+      kernel = EntropyBalance.sizeForSparse(
+        EntropyBalance.Prepared(rows, k, sumW.sum, n, sumPairs), options,
+        groups = Some(nG))
+      live = kernel.prep.rows
       // distributed-Gram tier: the shared sparse pass merges the SUM of
       // all groups' Gram patterns on the driver — shard into per-group
       // distributed solves when that exceeds the envelope
-      val route = EbwSizing.route(rows.sparkContext, k, sumPairs,
-        rows.getNumPartitions, options)
-      for ((plan, dist) <- route)
-        EbwLog.info(s"grouped sparse Gram sizing: nG=$nG " +
-          s"sumPairs=$sumPairs mode=${if (dist) "sharded-distributed"
-            else "shared-driver"} (${plan.why})")
-      if (route.exists(_._2))
+      if (kernel.distributed)
         return solveSharded(df, groupCol, featuresCol, weightCol, targets,
           outputCol, options, names, sumW, lb, ub, single)
       val st = new Groups(k,
@@ -321,13 +261,14 @@ object GroupedEntropyBalance {
         if (options.bounds.isDefined) options.maxStepsBounded else options.maxSteps
       var round = 0
       while (round < maxRounds && !st.converged.forall(identity)) {
-        val rd = roundPass(rows, k, st.theta,
-          st.etas.map(Link(_, lb, ub)), st.converged, route.isDefined)
+        val links = st.etas.map(Link(_, lb, ub))
+        val passes = kernel.passes(st.theta, links, st.converged)
         var g = 0
         while (g < nG) {
           if (!st.converged(g)) {
-            st.ce(g) = axpy(-1.0, st.b(g), rd.s(g))
-            step(st, rd, g)
+            st.ce(g) = axpy(-1.0, st.b(g), passes(g).s)
+            step(st, g, (diag, rhs, ridge, sign) => kernel.direction(
+              passes(g), st.theta(g), links(g), rhs, diag, ridge, null, sign))
           }
           g += 1
         }
@@ -340,7 +281,10 @@ object GroupedEntropyBalance {
         names(g) -> GroupResult(st.converged(g), st.iters(g), mult(g), st.ce(g))
       }.toMap
       GroupedResult(weighted, results)
-    } finally rows.unpersist(false)
+    } finally {
+      if (kernel != null) kernel.release()
+      live.unpersist(false)
+    }
   }
 
   /**
@@ -350,14 +294,15 @@ object GroupedEntropyBalance {
    * `outputCol` (all groups' weights in one column) plus per-group
    * diagnostics.
    *
-   * Large-k routing: below `options.denseGramMax` every round is one
-   * shared dense pass; above it the shared pass accumulates the G Grams
-   * sparsely, and when even that would exceed this driver's
-   * maxResultSize/heap envelope (EbwSizing, measured from the validation
-   * scan's total Σ nnz(nnz+1)/2 — or forced with gramMode =
-   * "distributed"), the groups auto-shard across single-problem
-   * DISTRIBUTED-Gram solves co-scheduled `options.shardParallelism` at a
-   * time ([[solveSharded]]).
+   * Large-k routing, sized like a single solve (EbwSizing, measured from
+   * the validation scan's total Σ nnz(nnz+1)/2 over all groups): below
+   * `options.denseGramMax` every round is one shared dense pass; above
+   * it the shared pass fills the G Grams sparsely over the cached Gram
+   * pattern, on the partitions and the direct or keyed-tree reduction
+   * of the sizing plan, and when even that would exceed this driver's
+   * maxResultSize/heap envelope (or with gramMode = "distributed") the
+   * groups auto-shard across single-problem DISTRIBUTED-Gram solves
+   * co-scheduled `options.shardParallelism` at a time ([[solveSharded]]).
    * gramMode = "driver" keeps the shared pass and fails fast with the
    * sized envelope error instead of OOMing mid-solve.
    */
@@ -379,7 +324,7 @@ object GroupedEntropyBalance {
     solveGroups(df, groupCol, featuresCol, weightCol, targets, outputCol,
       options, k, eta0 = if (bounded) options.eta.getOrElse(1.0) else 1.0,
       (sub, m) => EntropyBalance.entropyBalance(sub, featuresCol, weightCol,
-        m, outputCol, options)) { (st, rd, g) =>
+        m, outputCol, options)) { (st, g, direction) =>
       val lambda = st.theta(g)
       val ce = st.ce(g)
       // projected gradient: pin box-saturated coordinates pushing out
@@ -409,7 +354,7 @@ object GroupedEntropyBalance {
         } else st.converged(g) = true
       } else {
         val ridge = math.max(1e-8, 1e-5 * math.pow(viol / st.bscale(g), 0.55))
-        val d = rd.direction(g, new Array[Double](k), pg, ridge, 1.0)
+        val d = direction(new Array[Double](k), pg, ridge, 1.0)
         // damped full step: groups share the pass, so no individual
         // line search — cap the step to keep exp() sane instead
         val dn = d.map(math.abs).max
@@ -458,7 +403,7 @@ object GroupedEntropyBalance {
     solveGroups(df, groupCol, featuresCol, weightCol, targets, outputCol,
       options, k, eta0 = -1.0,
       (sub, m) => EntropyBalance.entropyBalancePenalty(sub, featuresCol,
-        weightCol, m, pen, outputCol, options)) { (st, rd, g) =>
+        weightCol, m, pen, outputCol, options)) { (st, g, direction) =>
       val z = st.theta(g)
       val ce = st.ce(g)
       val f = new Array[Double](k)
@@ -472,7 +417,7 @@ object GroupedEntropyBalance {
         i = 0
         while (i < k) { rhs(i) = -invP(i) * f(i); i += 1 }
         val ridge = math.max(1e-10, 1e-7 * fNorm / st.bscale(g))
-        val d = rd.direction(g, invP, rhs, ridge, -1.0)
+        val d = direction(invP, rhs, ridge, -1.0)
         val dn = d.map(math.abs).max
         val scale = if (dn > 30.0) 30.0 / dn else 1.0
         i = 0

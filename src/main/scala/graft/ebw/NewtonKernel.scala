@@ -5,12 +5,15 @@ import org.apache.spark.storage.StorageLevel
 import EbwAggregator.Pass
 
 /**
- * The dual Newton kernel every single-problem EBW mode runs on (SURVEY.md
- * §3): one prepared problem (cached rows, k) and its Gram route — dense
- * (no `plan`), sparse merged on the driver, or `distributed`. Each mode
- * keeps only its own math (objective and acceptance test, box projection
- * with eta growth, fixed point) and reaches the data through three calls:
- *  - [[pass]]: one aggregation pass at theta;
+ * The dual Newton kernel every EBW mode runs on, single and grouped
+ * (SURVEY.md §3): one prepared problem (cached rows, k) and its Gram
+ * route — dense (no `plan`), sparse merged on the driver, or
+ * `distributed`. Each mode keeps only its own math (objective and
+ * acceptance test, box projection with eta growth, fixed point, the
+ * grouped solvers' damped per-group steps) and reaches the data through
+ * three calls:
+ *  - [[pass]]: one aggregation pass at theta ([[passes]]: at every
+ *    group's theta, one pass for all groups);
  *  - [[direction]]: one Newton system solve;
  *  - [[backtrack]]: the halving line search, one pass per trial.
  * On the sparse-driver route the kernel owns the solve's cached Gram
@@ -24,32 +27,40 @@ import EbwAggregator.Pass
 private[ebw] final class NewtonKernel(
     val prep: EntropyBalance.Prepared,
     plan: Option[EbwSizing.Plan],
-    distributed: Boolean) {
+    val distributed: Boolean) {
   import NewtonKernel.Step
 
   val k: Int = prep.k
   private def rows = prep.rows
   private var pattern: EbwAggregator.SparsePattern = null
   /** The last sparse Gram keys [[direction]] decoded, and their row and
-   * column indices: the direct reduction hands every pass the same keys
-   * array, so it decodes once per solve. */
+   * column indices: the direct reduction hands every pass of a single
+   * problem the same keys array, so it decodes once per solve. */
   private var decodedKeys: Array[Long] = null
   private var keyRows: Array[Int] = null
   private var keyCols: Array[Int] = null
 
-  /** s, fval, wrsum and the Gram at theta: the packed dense triangle, the
-   * key-sorted sparse Gram over the cached pattern (reduced directly or at
-   * the plan's tree depth), or — on the distributed route — no Gram
-   * (line-search trials only need the dual objective; [[direction]]
-   * builds the Gram once per accepted iterate). */
-  def pass(theta: Array[Double], link: Link): Pass = plan match {
-    case None => EbwAggregator.run(rows, k, Array(theta), Array(link))(0)
-    case Some(_) if distributed => EbwAggregator.runStats(rows, k, theta, link)
+  /** s, fval, wrsum and the Gram of each group g at `thetas(g)` under
+   * `links(g)`, skipping the rows of the groups `skip` marks (null: none):
+   * the packed dense triangle, the key-sorted sparse Gram over the cached
+   * pattern (reduced directly or at the plan's tree depth), or — on the
+   * distributed route, one problem only — no Gram (line-search trials
+   * only need the dual objective; [[direction]] builds the Gram once per
+   * accepted iterate). */
+  def passes(thetas: Array[Array[Double]], links: Array[Link],
+      skip: Array[Boolean]): Array[Pass] = plan match {
+    case None => EbwAggregator.run(rows, k, thetas, links, skip)
+    case Some(_) if distributed =>
+      Array(EbwAggregator.runStats(rows, k, thetas.head, links.head))
     case Some(p) =>
       if (pattern == null)
         pattern = EbwAggregator.sparsePattern(rows, k, p.depth, p.direct)
-      EbwAggregator.runPattern(pattern, k, theta, link)
+      EbwAggregator.runPattern(pattern, k, thetas, links, skip)
   }
+
+  /** [[passes]] of a single problem at theta. */
+  def pass(theta: Array[Double], link: Link): Pass =
+    passes(Array(theta), Array(link), null)(0)
 
   /** Drops the cached Gram pattern, if a pass built one, and the decoded
    * keys. */

@@ -120,8 +120,9 @@ private[graft] object QueriesEbw {
     }),
     "ebw_grouped_scale" -> ((s, dir) => {
       // grouped-solver SCALE probe (bench-visible): 500 simultaneous
-      // poststratification problems advanced in shared treeAggregate
-      // passes — the regression canary for the G-group production shape.
+      // poststratification problems advanced together, one shared Newton
+      // kernel pass per round — the regression canary for the G-group
+      // production shape.
       // Sparse orderkeys leave thin groups at tiny SF, so groups missing
       // a cell are filtered out (equal-share targets would be infeasible
       // there); the filter is part of the shared semantics and at bench

@@ -57,7 +57,8 @@ class EbwSolverSpec extends GraftSparkSuite {
       // the sparse-Gram aggregation (big-k CG path) must produce the same
       // moment map and the same Gram entries as the dense triangle
       val pat = EbwAggregator.sparsePattern(rddS, k, depth = 2, direct = true)
-      val pSp = try EbwAggregator.runPattern(pat, k, theta, link) finally pat.release()
+      val pSp = try EbwAggregator.runPattern(pat, k, Array(theta), Array(link))(0)
+        finally pat.release()
       for (i <- 0 until k)
         assert(math.abs(p0.s(i) - pSp.s(i)) < 1e-12, s"sparse-gram s $i")
       pSp.gramKeys.zip(pSp.gramVals).foreach { case (key, v) =>

@@ -135,7 +135,7 @@ class GramTableSpec extends GraftSparkSuite {
           Link(-1.0, 0.0, Double.PositiveInfinity))) {
         val what = s"link $link depth $depth direct $direct theta ${theta.toSeq}"
         val dense = EbwAggregator.run(rdd, k, Array(theta), Array(link))(0)
-        val sp = EbwAggregator.runPattern(pat, k, theta, link)
+        val sp = EbwAggregator.runPattern(pat, k, Array(theta), Array(link))(0)
         assert(sp.count == 3)
         assert(math.abs(sp.fval - dense.fval) < 1e-12, what)
         assert(math.abs(sp.wrsum - dense.wrsum) < 1e-12, what)

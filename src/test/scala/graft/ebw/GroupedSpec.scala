@@ -92,6 +92,61 @@ class GroupedSpec extends GraftSparkSuite {
     assert(pathDiff < 1e-8, s"sparse vs dense grouped paths differ by $pathDiff")
   }
 
+  test("grouped sparse round on the direct and the keyed-tree reduction: " +
+    "both match the closed form and each other, the direct one repeats bit " +
+    "for bit, and no ebw-* RDD outlives the call") {
+    import spark.implicits._
+    // the 20-group k=550 poststratification problem of the test above, on
+    // 4 partitions (every depth-2 partial reaches the driver unmerged: the
+    // direct reduction) and on 8 (the keyed treeAggregate)
+    val nGroups = 20
+    val k = 550
+    val rows = for {
+      g <- 0 until nGroups
+      level <- 0 until k
+      rep <- 0 until (1 + (g + level) % 3)
+    } yield (s"g$g", level)
+    assert(EbwSizing.finalParts(4, 2) == 4 && EbwSizing.finalParts(8, 2) < 8)
+    val targets = (0 until nGroups).map(g => s"g$g" -> Array.fill(k)(1.0 / k)).toMap
+    val opts = EbwOptions(optimalityTol = 1e-10, maxSteps = 60)
+    val counts = rows.groupBy(identity).view.mapValues(_.length).toMap
+    val sumWg = (0 until nGroups).map(g =>
+      s"g$g" -> (0 until k).map(l => counts((s"g$g", l))).sum.toDouble).toMap
+    val sc = spark.sparkContext
+    def ebwRdds = sc.getPersistentRDDs.values.filter(r =>
+      r.name != null && r.name.startsWith("ebw-")).map(_.name).toSeq
+    def solve(parts: Int) = {
+      val (dfv, _) = DesignMatrix.oneHot(
+        rows.toDF("grp", "level").withColumn("w0", lit(1.0)).repartition(parts),
+        "level", "feat")
+      val res = GroupedEntropyBalance.entropyBalanceGrouped(
+        dfv, "grp", "feat", "w0", targets, options = opts)
+      assert(ebwRdds.isEmpty, s"$parts partitions left ${ebwRdds}")
+      assert(res.allConverged, s"$parts partitions")
+      val w = res.weighted
+        .groupBy("grp", "level").agg(first("weight_new").as("w"))
+        .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getDouble(2)).toMap
+      var maxErr = 0.0
+      for (g <- 0 until nGroups; l <- 0 until k) {
+        val key = (s"g$g", l)
+        maxErr = math.max(maxErr,
+          math.abs(w(key) - (sumWg(s"g$g") / k) / counts(key)))
+      }
+      assert(maxErr < 1e-6, s"$parts partitions: max weight error $maxErr")
+      (res, w)
+    }
+    val direct = Seq.fill(3)(solve(4))
+    val (_, tree) = solve(8)
+    val diff = direct.head._2.map { case (key, w) => math.abs(w - tree(key)) }.max
+    assert(diff < 1e-9, s"direct vs keyed-tree weights differ by $diff")
+    val bits = direct.map { case (res, _) =>
+      res.groups.toSeq.sortBy(_._1).map { case (g, r) =>
+        g -> r.multipliers.map(java.lang.Double.doubleToRawLongBits).toSeq
+      }
+    }
+    assert(bits.distinct.size == 1, "direct-reduction multipliers differ between solves")
+  }
+
   test("grouped sparse-Gram path over an empty input (no partitions) converges trivially") {
     import spark.implicits._
     val k = 600
@@ -295,11 +350,22 @@ class GroupedSpec extends GraftSparkSuite {
           s"status $s penalty weights differ by $maxDiff (${gOpts.gramMode})")
       }
     }
-    // the large-k route checks gramMode like the exact grouped solver
-    intercept[IllegalArgumentException] {
-      GroupedEntropyBalance.entropyBalancePenaltyGrouped(
-        dfv, "o_orderstatus", "feat", "w0", targets, Array(2.0),
-        options = opts.copy(denseGramMax = 1, gramMode = "bogus"))
+    // both grouped solvers check gramMode and shardParallelism at entry,
+    // on the large-k route and on the dense one, which uses neither
+    for (bad <- Seq(opts.copy(gramMode = "bogus"), opts.copy(shardParallelism = 0));
+        denseGramMax <- Seq(1, opts.denseGramMax)) {
+      val o = bad.copy(denseGramMax = denseGramMax)
+      val solvers = Seq[(String, () => Any)](
+        "exact" -> (() => GroupedEntropyBalance.entropyBalanceGrouped(
+          dfv, "o_orderstatus", "feat", "w0", targets, options = o)),
+        "penalty" -> (() => GroupedEntropyBalance.entropyBalancePenaltyGrouped(
+          dfv, "o_orderstatus", "feat", "w0", targets, Array(2.0), options = o)))
+      for ((solver, solve) <- solvers) {
+        val e = intercept[IllegalArgumentException](solve())
+        assert(e.getMessage.contains("gramMode must be") ||
+          e.getMessage.contains("shardParallelism must be"),
+          s"$solver, denseGramMax=$denseGramMax: ${e.getMessage}")
+      }
     }
     // bounded grouped penalty stays within bounds
     val boundedRes = GroupedEntropyBalance.entropyBalancePenaltyGrouped(
